@@ -139,25 +139,6 @@ object Bench {
       }
     require(selected.nonEmpty,
       "SPARK_GRAFT_ONLY/SPARK_GRAFT_SKIP left zero queries to run")
-    // SPARK_GRAFT_PARTS="d51=256,d02=256" (prefix match): per-query
-    // shuffle-partition override, applied only while that query plans and
-    // runs and restored afterwards. This is the lever the d51/d02 1000×
-    // solos proved (BENCH_SF1 round 12: pair-term spill responds to the
-    // partition count) made usable IN-battery, without re-sizing the
-    // other 120 queries' shuffles. On a real cluster this is per-job
-    // `spark.sql.shuffle.partitions` sizing — workload-proportional
-    // partitioning, not a global constant.
-    val partsOverride: Seq[(String, Int)] = sys.env.get("SPARK_GRAFT_PARTS")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq.map { tok =>
-        val i = tok.indexOf('=')
-        require(i > 0, s"SPARK_GRAFT_PARTS token not name=N: $tok")
-        (tok.substring(0, i), tok.substring(i + 1).toInt)
-      }).getOrElse(Seq.empty)
-    partsOverride.foreach { case (pfx, n) =>
-      if (!selected.keys.exists(_.startsWith(pfx)))
-        System.err.println(s"[bench] SPARK_GRAFT_PARTS token matched no query: $pfx")
-      else System.err.println(s"[bench] SPARK_GRAFT_PARTS: $pfx* at $n partitions")
-    }
     // Steady-state warmup: run the whole battery once at the smallest
     // fixture so each query's generated code is JIT-compiled before the
     // timed loop (measured: first call of the dedup pipelines costs ~2x
@@ -326,13 +307,6 @@ object Bench {
         val t0 = System.nanoTime()
         var failed: Option[String] = None
         var rdd: Option[org.apache.spark.rdd.RDD[_]] = None
-        // Per-query partition override: set BEFORE planning (the conf is
-        // read at plan time) and always restored, so one query's sizing
-        // can never leak into the next.
-        val partsKey = "spark.sql.shuffle.partitions"
-        val priorParts = spark.conf.get(partsKey)
-        partsOverride.collectFirst { case (pfx, n) if name.startsWith(pfx) => n }
-          .foreach(n => spark.conf.set(partsKey, n))
         // label the query's jobs (guide §1.5) so event-log/UI stages
         // attribute to their query — no effect on the timed work itself
         spark.sparkContext.setJobDescription(name)
@@ -342,10 +316,7 @@ object Bench {
           r.foreachPartition(it => while (it.hasNext) { it.next(); () })
         } catch { case e: Throwable =>
           failed = Some(e.toString.takeWhile(_ != '\n'))
-        } finally {
-          spark.conf.set(partsKey, priorParts)
-          spark.sparkContext.setJobDescription(null)
-        }
+        } finally spark.sparkContext.setJobDescription(null)
         val sec = (System.nanoTime() - t0) / 1e9
         // a failed query must be LOUD (round 6: analysis-broken queries
         // "ran" in 3-100ms and the regression hid in a green-looking total)

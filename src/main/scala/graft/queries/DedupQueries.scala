@@ -342,15 +342,12 @@ object DedupQueries {
   private def nearDupPairs(s: SparkSession, dir: String): DataFrame =
     Q.memo(s, dir, "nearDupPairs") {
       // routed like [[containmentPairs]]: count-join on uniform-df
-      // corpora on one JVM (these fixtures — all arms equality-pinned in
-      // Round8RouterSpec/Round8KernelSpec), the bucket kernel on a
-      // cluster fabric, rarest-first df-ordered prefix on Zipf-tailed
-      // text where the hot-gram quadratic dominates
-      (routePairArm(gramDfStats(s, dir), clusterFabric(s)) match {
-        case PrefixArm => nearDupPairsPrefixDfOrdered(s, dir)
-        case BucketArm => nearDupPairsBucketed(s, dir)
-        case CountJoinArm => nearDupPairsJoin(s, dir)
-      }).persist()
+      // corpora (these fixtures), rarest-first df-ordered prefix on
+      // Zipf-tailed text where the hot-gram quadratic dominates — both
+      // arms equality-pinned in Round8RouterSpec
+      (if (routeDfOrderedPrefix(gramDfStats(s, dir)))
+        nearDupPairsPrefixDfOrdered(s, dir)
+      else nearDupPairsJoin(s, dir)).persist()
     }
 
   private[graft] def nearDupPairsJoin(
@@ -381,9 +378,9 @@ object DedupQueries {
 
   /** d51's containment pairs (shared / min(|A|,|B|) ≥ 0.9), plain
     * inverted-index count-join form — every co-occurring pair flows
-    * through the (da, db) aggregation. Kept as the readable statement of
-    * WHAT d51 computes and as the spec's ground truth for
-    * [[containmentPairsPrefix]].
+    * through the (da, db) aggregation. The routed plan on uniform-df
+    * corpora (every fixture), and the specs' ground truth for
+    * [[containmentPairsPrefixDfOrdered]].
     */
   private[graft] def containmentPairsJoin(s: SparkSession, dir: String): DataFrame = {
     // n_sh rides the index row (d02's shape — round 14): gramTable rows
@@ -414,169 +411,14 @@ object DedupQueries {
       .select("da", "db", "shared", "na", "nb", "containment")
   }
 
-  /** Bucket-kernel execution of [[containmentPairsJoin]]'s candidate
-    * count: ONE shuffle of the inverted index into (h) buckets, then each
-    * bucket's co-occurring pairs stream out of a tight sorted i<j loop
-    * into the (da, db) count aggregation. The self-join formulation
-    * shuffles the index twice and pushes every candidate row through join
-    * machinery; the pair stream and the aggregation exchange are
-    * identical, so the saving is the second index shuffle plus the join's
-    * row materialization (the d58 bucket-kernel observation applied to a
-    * counting join). Per-bucket state is df-sized (fixture max df 25); on
-    * a Zipf-tailed corpus the router never takes this arm. The iterator
-    * is lazy — a hot bucket's quadratic pair stream flows through the
-    * partial agg without ever materializing a pair buffer.
-    *
-    * MEASURED NEUTRAL at sf10 (warm min-of-2, `Prof d51`): d51 16.98 vs
-    * 16.96 s, d02 12.05 vs 12.16 s — and still mildly behind at sf30's
-    * spill regime (round 9, solo min-of-2: d51 63.3 vs 60.6 s, d02 42.9
-    * vs 39.2 s), so the router keeps the count-join on any local master
-    * at every measured scale. On one JVM the sort-merge self-join
-    * re-reads the co-partitioned index from local shuffle files, so the
-    * "saved" shuffle costs ~nothing and the pair stream + count exchange
-    * dominate both arms equally. Kept as an equality-pinned alternate:
-    * on a multi-rack cluster the saved index exchange is network IO, and
-    * this arm halves bytes-over-fabric for the candidate stage.
-    */
-  private[graft] def containmentPairsBucketed(
-      s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    // n_sh rides the bucket member (nearDupPairsBucketed's shape — round
-    // 14): deletes the same two post-agg candidate-stream joins as the
-    // count-join arm; the member struct grows 4 bytes/row while the
-    // avoided joins re-shuffled the whole pair stream twice.
-    val sh = docShingles(s, dir)
-      .select(col("doc_id"), size(col("h_arr")).as("n_sh"),
-        explode(col("h_arr")).as("h"))
-    sh.groupBy("h")
-      .agg(collect_list(struct(col("doc_id"), col("n_sh"))).as("m"))
-      .select(col("m")).as[Seq[(Long, Int)]]
-      .flatMap { m =>
-        val n = m.size
-        if (n < 2) Iterator.empty
-        else {
-          val a = m.sortBy(_._1).toArray
-          new Iterator[(Long, Long, Int, Int)] {
-            private var i = 0
-            private var j = 1
-            def hasNext: Boolean = i < n - 1
-            def next(): (Long, Long, Int, Int) = {
-              val (da, na) = a(i)
-              val (db, nb) = a(j)
-              j += 1
-              if (j == n) { i += 1; j = i + 1 }
-              (da, db, na, nb)
-            }
-          }
-        }
-      }
-      .toDF("da", "db", "na_r", "nb_r")
-      .transform(sizePairAgg(s, dir, _))
-      .groupBy("da", "db").agg(count(lit(1)).as("shared"),
-        first(col("na_r").cast("long")).as("na"),
-        first(col("nb_r").cast("long")).as("nb"))
-      .withColumn("containment",
-        col("shared").cast("double") / least(col("na"), col("nb")))
-      .filter(col("containment") >= 0.9)
-      .select("da", "db", "shared", "na", "nb", "containment")
-  }
-
-  /** Bucket-kernel execution of [[nearDupPairsJoin]] — same trade as
-    * [[containmentPairsBucketed]], with the per-doc set size riding the
-    * bucket member and the size-ratio prune (J ≤ min/max < 0.5 outside
-    * 2×) applied inside the pair loop, before the aggregation exchange
-    * ever sees a candidate.
-    */
-  private[graft] def nearDupPairsBucketed(
-      s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    val sh = docShingles(s, dir)
-      .select(col("doc_id"), size(col("h_arr")).as("n_sh"),
-        explode(col("h_arr")).as("sh_h"))
-    sh.groupBy("sh_h")
-      .agg(collect_list(struct(col("doc_id"), col("n_sh"))).as("m"))
-      .select(col("m")).as[Seq[(Long, Int)]]
-      .flatMap { m =>
-        val n = m.size
-        if (n < 2) Iterator.empty
-        else {
-          val a = m.sortBy(_._1).toArray
-          new Iterator[(Long, Long, Int, Int)] {
-            private var i = 0
-            private var j = 1
-            private var nx: (Long, Long, Int, Int) = _
-            advance()
-            private def advance(): Unit = {
-              nx = null
-              while (nx == null && i < n - 1) {
-                val (da, na) = a(i)
-                val (db, nb) = a(j)
-                if (na <= nb * 2 && nb <= na * 2) nx = (da, db, na, nb)
-                j += 1
-                if (j == n) { i += 1; j = i + 1 }
-              }
-            }
-            def hasNext: Boolean = nx != null
-            def next(): (Long, Long, Int, Int) = {
-              val r = nx; advance(); r
-            }
-          }
-        }
-      }
-      .toDF("da", "db", "na_r", "nb_r")
-      .transform(sizePairAgg(s, dir, _))
-      .groupBy("da", "db").agg(count(lit(1)).as("shared"),
-        first(col("na_r").cast("long")).as("na"),
-        first(col("nb_r").cast("long")).as("nb"))
-      .withColumn("jaccard",
-        col("shared").cast("double") / (col("na") + col("nb") - col("shared")))
-      .filter(col("jaccard") >= 0.5)
-  }
-
-  /** d51's containment pairs, prefix-filtered — EXACT, not approximate:
-    * containment ≥ 0.9 means the smaller set misses at most 10% of its
-    * grams, so by pigeonhole at least one of its first ⌊0.1·n⌋+1 grams
-    * (any fixed subset works; we take the head of the sorted h_arr) is
-    * shared with the other set. Candidates are therefore
-    * prefix ⋈ full-index — ~10× fewer join rows than the full self-join —
-    * and survivors are verified with a two-pointer merge over the two
-    * docs' SORTED hash arrays (exact |A∩B|, one JVM pass, no second
-    * shuffle). MEASURED SLOWER than [[containmentPairsJoin]] on this
-    * corpus (sf10: 148 s vs 86 s): the fixture vocabulary is near-uniform,
-    * so a hash-ordered 10% prefix still contains hot grams — candidates
-    * barely shrink and the survivors' array-payload verify join costs more
-    * than the count aggregation it avoids (the same corpus-shape verdict
-    * d02 recorded for PPJoin at J ≥ 0.5). Kept, equality-pinned, as the
-    * 100 TB Zipfian-corpus path — there the prefix should be ordered by
-    * ascending document frequency, which makes it genuinely selective.
-    *
-    * Measured df histogram (sf0.1, round 7): 27,213 distinct shingles,
-    * df is BINOMIAL around 9–10 (mode 3,328 grams at df=9) with only 207
-    * df=1 grams and a max df of 25 — no Zipf tail at all. So even a
-    * rarest-first (df-ordered) prefix can only cut candidates ~2× vs the
-    * hash-ordered one (min-of-~44 draws from that distribution lands at
-    * df≈4–6, not df=1), while the survivors' array-payload verify shuffle
-    * — the measured bottleneck — is unchanged. On THIS corpus the
-    * count-join stays the right plan for any prefix ordering; the
-    * df-ordered variant only pays off when the df distribution has a
-    * genuine rare tail (real text), which is when the comment above
-    * routes to it.
-    */
-  private[graft] def containmentPairsPrefix(s: SparkSession, dir: String): DataFrame = {
-    val sh = docShingles(s, dir).select(col("doc_id"), col("h_arr"))
-    val pre = sh.select(col("doc_id"),
-        explode(slice(col("h_arr"), lit(1),
-          (floor(size(col("h_arr")) * lit(0.1)) + 1).cast("int"))).as("h"))
-    verifyPrefixCandidates(s, dir, pre)
-  }
-
   /** Shared tail of the prefix-filtered containment family: candidate
     * (da, db) pairs are the prefix row-set joined against the FULL gram
-    * index (exact for ANY fixed prefix-selection rule, by the pigeonhole
-    * argument above — the smaller doc of a ≥0.9-containment pair shares
-    * at least one gram of any ⌊0.1·n⌋+1-subset of its grams), survivors
-    * verified with the two-pointer merge over the docs' sorted hash
-    * arrays — exact |A∩B|, one JVM pass, no second aggregation shuffle.
+    * index — exact for ANY fixed prefix-selection rule, by pigeonhole:
+    * containment ≥ 0.9 means the smaller set misses at most 10% of its
+    * grams, so it shares at least one gram of any ⌊0.1·n⌋+1-subset of its
+    * grams with the other set. Survivors are verified with the two-pointer
+    * merge over the docs' sorted hash arrays — exact |A∩B|, one JVM pass,
+    * no second aggregation shuffle.
     */
   private def verifyPrefixCandidates(
       s: SparkSession, dir: String, pre: DataFrame,
@@ -711,39 +553,6 @@ object DedupQueries {
   private[graft] def routeDfOrderedPrefix(st: GramDfStats): Boolean =
     st.rareVocabFrac >= 0.3 && st.coPairs > 8.0 * st.gramRows
 
-  /** The three candidate-generation arms of the containment-pair family. */
-  private[graft] sealed trait PairArm
-  private[graft] case object PrefixArm extends PairArm
-  private[graft] case object CountJoinArm extends PairArm
-  private[graft] case object BucketArm extends PairArm
-
-  /** True when this session runs against a multi-executor fabric (any
-    * non-local master), or when forced with SPARK_GRAFT_CLUSTER=1 — the
-    * knob for single-JVM validation of the cluster arm. On one JVM the
-    * bucket kernel is measured-neutral (the sort-merge self-join re-reads
-    * co-partitioned local shuffle files, so the saved exchange costs
-    * ~nothing — `Prof d51`, round 8); on a real cluster that exchange is
-    * fabric bytes, and the bucket arm halves the candidate stage's
-    * network traffic.
-    */
-  private[graft] def clusterFabric(s: SparkSession): Boolean =
-    sys.env.get("SPARK_GRAFT_CLUSTER")
-      .exists(v => v == "1" || v.equalsIgnoreCase("true")) ||
-      !s.sparkContext.isLocal
-
-  /** Routing for the containment/jaccard pair family, from measured corpus
-    * shape AND deployment fabric: Zipf-tailed corpora take the rarest-first
-    * prefix regardless of fabric (it changes the asymptotics); uniform-df
-    * corpora take the bucket kernel on a cluster (same pair stream, half
-    * the candidate-stage fabric bytes) and the plain count-join on one JVM
-    * (measured-neutral, simpler plan). All three arms are equality-pinned
-    * (Round8KernelSpec / Round8RouterSpec / Round9RouterSpec).
-    */
-  private[graft] def routePairArm(st: GramDfStats, cluster: Boolean): PairArm =
-    if (routeDfOrderedPrefix(st)) PrefixArm
-    else if (cluster) BucketArm
-    else CountJoinArm
-
   /** Width of the count-join arms' inverted-index self-join exchange,
     * derived from the MEASURED candidate stream instead of the global
     * default (guide §2.2: size the shuffle from the bytes it will carry).
@@ -812,7 +621,7 @@ object DedupQueries {
     * [[verifyPrefixCandidates]]); only candidate generation differs: each
     * doc indexes the ⌊0.1·n⌋+1 grams with LOWEST document frequency
     * (global df, ties by hash), so on a corpus with a rare tail the
-    * prefix⋈index join fans out at df≈1 instead of at the hot-gram df the
+    * prefix⋈index join fans out at df≈1 instead of at the hot-gram df a
     * hash-ordered prefix keeps hitting. Costs: one h-shuffle to attach df,
     * one doc_id-shuffle to pick per-doc minima (JVM sort of one doc's
     * gram list — bounded by doc length, no window over the corpus), then
@@ -837,23 +646,18 @@ object DedupQueries {
     verifyPrefixCandidates(s, dir, dfOrderedPrefixRows(s, dir, 3),
       jaccard = true)
 
-  /** d51's public containment-pair operator: routes between the count-join,
-    * the bucket kernel and the df-ordered prefix plan by [[routePairArm]]
-    * over the measured [[gramDfStats]] + deployment fabric. On the
-    * fixtures (local[n]) this always picks the count-join (both prefix
-    * conditions fail, by a margin), so oracle results and bench plans are
-    * unchanged; on a Zipf-tailed real-text corpus it switches to the
-    * prefix plan the round-7 analysis prescribed in prose, and on a
-    * multi-executor cluster (or SPARK_GRAFT_CLUSTER=1) uniform-df corpora
-    * take the fabric-efficient bucket kernel — the decision is engine
-    * logic, not a code comment.
+  /** d51's public containment-pair operator: routes between the count-join
+    * and the df-ordered prefix plan by [[routeDfOrderedPrefix]] over the
+    * measured [[gramDfStats]]. On the fixtures this always picks the
+    * count-join (both prefix conditions fail, by a margin); on a
+    * Zipf-tailed real-text corpus it switches to the prefix plan. No
+    * bucket-kernel arm: on one JVM it measured neutral-to-slower than the
+    * count-join (sf10 d51 16.98 vs 16.96 s; sf30 63.3 vs 60.6 s).
     */
   private[graft] def containmentPairs(s: SparkSession, dir: String): DataFrame =
-    routePairArm(gramDfStats(s, dir), clusterFabric(s)) match {
-      case PrefixArm => containmentPairsPrefixDfOrdered(s, dir)
-      case BucketArm => containmentPairsBucketed(s, dir)
-      case CountJoinArm => containmentPairsJoin(s, dir)
-    }
+    if (routeDfOrderedPrefix(gramDfStats(s, dir)))
+      containmentPairsPrefixDfOrdered(s, dir)
+    else containmentPairsJoin(s, dir)
 
   /** MinHash signatures (k=16), computed MAP-SIDE from the cached per-doc
     * shingle hash sets — zero shuffles. Memoized: shared by d03 (LSH
@@ -3049,13 +2853,12 @@ object DedupQueries {
     // prune discards exactly these pairs BY DESIGN), but containment 1.0.
     // Same inverted-index equi-join shape as d02, minus the Jaccard prune
     // (which would be wrong here). The containment-VALID prune — prefix
-    // filtering ([[containmentPairsPrefix]], exact by pigeonhole at 0.9)
-    // — was implemented and MEASURED SLOWER at sf10 too (148 s vs 86 s):
-    // hash-ordered prefixes carry no rare-gram selectivity on this
-    // near-uniform vocabulary (same corpus-shape verdict as d02's PPJoin
-    // note above), so candidates barely shrink while survivors pay an
-    // array-payload verify join. Both forms are equality-pinned
-    // (Round6OpsSpec). Since round 8 the choice is ADAPTIVE:
+    // filtering, exact by pigeonhole at 0.9 — was MEASURED SLOWER at sf10
+    // with hash-ordered prefixes (148 s vs 86 s): they carry no rare-gram
+    // selectivity on this near-uniform vocabulary (same corpus-shape
+    // verdict as d02's PPJoin note above), so candidates barely shrink
+    // while survivors pay an array-payload verify join. The choice is
+    // ADAPTIVE:
     // [[containmentPairs]] measures the gram-df shape (gramDfStats) and
     // routes Zipf-tailed corpora through the rarest-first df-ordered
     // prefix plan, uniform-df corpora (these fixtures) through the

@@ -290,27 +290,26 @@ object Q {
     * bench fixtures are single-row-group parquet files, so a plain scan
     * plans ONE task and every map-side kernel downstream (sha2, tokenize,
     * contains-probe, file encode) runs on one core of local[32]. Shuffle
-    * the rows across `defaultParallelism` partitions ONLY when the input
-    * is narrower than that — on a real deployment (or the ScaleUp multi-
-    * file fixtures) the scan already carries ≥ cores splits and this is a
-    * NO-OP, so no 100 TB run ever pays an extra full-payload exchange
-    * (guide §2.4: don't add shuffles the data doesn't need). Keyed by a
-    * caller-chosen (usually unique) column: keyless round-robin
-    * repartition would pay its sortBeforeRepartition local sort
-    * (SPARK-23207) on every row.
+    * the rows across [[exchangeWidth]] partitions ONLY when the input is
+    * narrower than that same width — a scan that already carries that
+    * many splits (a real deployment, the ScaleUp multi-file fixtures)
+    * passes through untouched, so no 100 TB run pays an extra
+    * full-payload exchange (guide §2.4: don't add shuffles the data
+    * doesn't need). Keyed by a caller-chosen (usually unique) column:
+    * keyless round-robin repartition would pay its sortBeforeRepartition
+    * local sort (SPARK-23207) on every row.
     *
     * `df.rdd.getNumPartitions` only PLANS the frame (no job): for the
     * parquet scans this is a footer-cached bin-packing count.
     */
   private[queries] def spread(df: DataFrame, key: Column): DataFrame = {
-    val p = df.sparkSession.sparkContext.defaultParallelism
-    if (df.rdd.getNumPartitions < p) df.repartition(exchangeWidth(df.sparkSession), key) else df
+    val w = exchangeWidth(df.sparkSession)
+    if (df.rdd.getNumPartitions < w) df.repartition(w, key) else df
   }
 
   /** Width for the engine's explicit keyed exchanges (spread floors, the
     * text-first doc_id repartitions): the session's shuffle-partition
-    * sizing — the documented cluster lever, which the bench's per-query
-    * `SPARK_GRAFT_PARTS` override also sets — floored at
+    * sizing — the documented cluster lever — floored at
     * `defaultParallelism` so the single-row-group bench fixtures still
     * spread kernels across every core. A width pinned to core count alone
     * makes per-task payload = corpus/cores, which grows without bound at
@@ -319,6 +318,12 @@ object Q {
     * deriving it from the conf keeps the exchange operator-sizable. Local
     * default is unchanged: Bench/Verify set shuffle.partitions = cpus, so
     * max(cores, conf) = cores there.
+    *
+    * Embedders must set `spark.sql.shuffle.partitions`: a session that
+    * never sets it reads Spark's default of 200, so every explicit
+    * exchange here (and every [[spread]] floor) runs 200 partitions wide
+    * regardless of core count — set it to the executor core count, or to
+    * the cluster's sizing.
     */
   private[queries] def exchangeWidth(s: SparkSession): Int = {
     val p = s.sparkContext.defaultParallelism

@@ -87,19 +87,6 @@ class Round6OpsSpec extends SparkSpec {
     assert(s2.sameElements(b2))
   }
 
-  test("d51 prefix-filtered containment == plain count-join containment (fixtures)") {
-    def rows(df: org.apache.spark.sql.DataFrame) =
-      df.orderBy("da", "db").collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3),
-          r.getLong(4), r.getDouble(5)))
-    for (dir <- Seq("/root/testdata/sf0.001", "/root/testdata/sf0.01")) {
-      val j = rows(DedupQueries.containmentPairsJoin(spark, dir))
-      val p = rows(DedupQueries.containmentPairsPrefix(spark, dir))
-      assert(j.nonEmpty, s"$dir must produce pairs or the pin is vacuous")
-      assert(p.sameElements(j), s"prefix path diverged on $dir")
-    }
-  }
-
   test("topKPerQuery == row_number window (ties, NaN, long scores, multi-partition)") {
     import spark.implicits._
     import org.apache.spark.sql.expressions.Window

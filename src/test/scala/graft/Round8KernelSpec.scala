@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -220,18 +220,6 @@ class Round8KernelSpec extends SparkSpec {
     // the hot bucket's full clique survived
     assert(k.count { case (a, b, h) => a < 30 && b < 30 && h == 0 } ==
       30 * 29 / 2)
-  }
-
-  test("d51/d02 bucket-kernel count-join == self-join formulation (sf0.01)") {
-    import graft.queries.DedupQueries
-    val dir = "/root/testdata/sf0.01"
-    def norm(df: DataFrame): Seq[Row] = df.orderBy("da", "db").collect().toSeq
-    val c1 = norm(DedupQueries.containmentPairsBucketed(spark, dir))
-    val c2 = norm(DedupQueries.containmentPairsJoin(spark, dir))
-    assert(c1.nonEmpty && c1 == c2)
-    val j1 = norm(DedupQueries.nearDupPairsBucketed(spark, dir))
-    val j2 = norm(DedupQueries.nearDupPairsJoin(spark, dir))
-    assert(j1.nonEmpty && j1 == j2)
   }
 
   test("int8_quantize == composed HOF quantizer (edges: NaN, zero, null, empty)") {

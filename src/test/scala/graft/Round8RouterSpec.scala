@@ -37,6 +37,17 @@ class Round8RouterSpec extends SparkSpec {
     assert(DedupQueries.routeDfOrderedPrefix(zipf))
   }
 
+  test("gramDfStats is memoized per (app, dir)") {
+    val d = "/root/testdata/sf0.001"
+    val a = DedupQueries.gramDfStats(spark, d)
+    val b = DedupQueries.gramDfStats(spark, d)
+    assert(a == b)
+    // distinct dirs memoize independently; the original entry survives
+    val other = DedupQueries.gramDfStats(spark, "/root/testdata/sf0.01")
+    assert(other.vocab != a.vocab, "different SF dirs have different vocab")
+    assert(DedupQueries.gramDfStats(spark, d) == a)
+  }
+
   test("fixtures route to count-join; df-ordered prefix is equality-pinned") {
     for (dir <- Seq("/root/testdata/sf0.001", "/root/testdata/sf0.01")) {
       val st = DedupQueries.gramDfStats(spark, dir)
