@@ -42,7 +42,7 @@ class Stream(table: Table, val orderByField: String, state: State,
   private def loadPersisted(): Option[Any] =
     state.get(stateKey).filter(_ != null)
 
-  private def plan() = {
+  private[graft] def plan() = {
     val base = table.read
     // an unconnected/never-written table has no columns — yield the empty
     // stream (dummy-object semantics, node.py:232-238) instead of failing

@@ -6,6 +6,8 @@ import org.apache.spark.sql.{DataFrame, Row, SaveMode}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{StringType, StructType}
 
+import org.apache.spark.sql.graft.SchemaInternals
+
 import graft.catalog.TableCatalog
 
 /** Named, versioned table port (reference node.py:117-414).
@@ -61,7 +63,12 @@ class Table(engine: GraftEngine, val name: String, val mode: String = "r",
 
   def exists: Boolean = hasActiveVersion && activeFiles.nonEmpty
 
-  def schema: Option[StructType] = activeDf.map(_.schema)
+  /** Schema of the active version — the commit-time stamp, read from the
+    * manifest without building a DataFrame; unstamped versions infer it.
+    */
+  def schema: Option[StructType] =
+    manifest.activeVersion.filter(_ => connected)
+      .flatMap(vid => catalog.versionSchema(spark, name, vid))
 
   /** Row count of the active version — O(1) from the manifest when the
     * version was committed by this engine (reference `TableVersion.
@@ -86,12 +93,14 @@ class Table(engine: GraftEngine, val name: String, val mode: String = "r",
   private def filesIn(vid: String): Array[java.io.File] =
     catalog.dataFiles(name, vid) // single owner of the version-dir layout
 
-  /** Row count AND per-column max of a version dir from parquet FOOTERS —
-    * metadata-only, O(#files) driver-side reads, no Spark job. Stamped
-    * into the manifest at commit so [[recordCount]] is O(1) (reference
-    * TableVersion.record_count, node.py:106-109) and so the streaming
-    * source's `getOffset` poll is a manifest lookup instead of a
-    * table-sized `max()` scan per trigger.
+  /** Row count, per-column max AND merged Spark schema of a version dir
+    * from parquet FOOTERS — metadata-only, O(#files) driver-side reads, no
+    * Spark job. Stamped into the manifest at commit so [[recordCount]] is
+    * O(1) (reference TableVersion.record_count, node.py:106-109), so the
+    * streaming source's `getOffset` poll is a manifest lookup instead of a
+    * table-sized `max()` scan per trigger, and so every read of the
+    * version takes the stamp as its schema instead of a `mergeSchema`
+    * footer-merge job.
     *
     * The max map only carries columns whose footer statistics are present
     * and trustworthy in EVERY row group of every file: plain INT32/INT64/
@@ -101,14 +110,19 @@ class Table(engine: GraftEngine, val name: String, val mode: String = "r",
     * BOUND, not a value — unsafe as a cursor). Missing columns make the
     * streaming source fall back to a scan, never return a wrong offset.
     */
-  /** Footer stats over an explicit file set: (rows, per-column max).
-    * Map value semantics: `Some(v)` = qualified running max, `None` =
-    * column SEEN but disqualified (unusable stats, unsupported type,
-    * truncated binary, or mixed physical types across files); a column
-    * absent from the map never appeared in any footer.
+  /** Footer stats over an explicit file set: (rows, per-column max,
+    * schema). Map value semantics: `Some(v)` = qualified running max,
+    * `None` = column SEEN but disqualified (unusable stats, unsupported
+    * type, truncated binary, or mixed physical types across files); a
+    * column absent from the map never appeared in any footer. The schema
+    * folds each file's Spark footer schema in path order with
+    * `StructType.merge` — the order and merge a `mergeSchema` read uses,
+    * so the stamp equals what inference would return (an empty struct for
+    * no files). None when a file has no Spark footer schema or two files
+    * have incompatible types.
     */
-  private def footerStatsCore(
-      files: Seq[java.io.File]): (Long, Map[String, Option[Any]]) = {
+  private def footerStatsCore(files: Seq[java.io.File])
+      : (Long, Map[String, Option[Any]], Option[StructType]) = {
     import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName._
     import org.apache.parquet.schema.LogicalTypeAnnotation
     import org.apache.parquet.schema.LogicalTypeAnnotation.TimestampLogicalTypeAnnotation
@@ -117,12 +131,20 @@ class Table(engine: GraftEngine, val name: String, val mode: String = "r",
     // per-column running max over all row groups; a column drops to None
     // (untracked forever) the first time a row group lacks usable stats
     val maxes = scala.collection.mutable.Map.empty[String, Option[Any]]
-    files.foreach { f =>
+    var schema: Option[StructType] = Some(new StructType())
+    files.sortBy(_.getAbsolutePath).foreach { f =>
       val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
         new org.apache.hadoop.fs.Path(f.getAbsolutePath), conf)
       val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
       try {
         rows += r.getRecordCount
+        schema = for {
+          acc <- schema
+          json <- Option(r.getFooter.getFileMetaData.getKeyValueMetaData
+            .get(SchemaInternals.FooterKey))
+          fileSchema <- SchemaInternals.parse(json)
+          merged <- mergeSchemas(acc, fileSchema)
+        } yield merged
         r.getFooter.getBlocks.forEach { block =>
           block.getColumns.forEach { c =>
             if (c.getPath.size() == 1) { // top-level scalars only
@@ -193,8 +215,15 @@ class Table(engine: GraftEngine, val name: String, val mode: String = "r",
         }
       } finally r.close()
     }
-    (rows, maxes.toMap)
+    (rows, maxes.toMap, schema)
   }
+
+  /** `a` merged with `b` under the session's case sensitivity (as a
+    * `mergeSchema` read merges), or None for incompatible types.
+    */
+  private def mergeSchemas(a: StructType, b: StructType): Option[StructType] =
+    scala.util.Try(SchemaInternals.merge(a, b,
+      spark.sessionState.conf.caseSensitiveAnalysis)).toOption
 
   /** The streaming source's offset encoding (GraftTableSource.encode):
     * timestamps as ISO instants, everything else via its SQL string form.
@@ -216,14 +245,11 @@ class Table(engine: GraftEngine, val name: String, val mode: String = "r",
     case _ => enc
   }
 
-  private def footerStats(vid: String): (Long, Map[String, String]) = {
-    val (rows, maxes) = footerStatsCore(filesIn(vid).toSeq)
-    (rows, maxes.collect { case (k, Some(v)) => k -> encodeStat(v) })
-  }
-
   private def stampVersionStats(vid: String): Unit = {
-    val (rows, cursorMax) = footerStats(vid)
-    catalog.setVersionStats(name, vid, rows, cursorMax)
+    val (rows, maxes, schema) = footerStatsCore(filesIn(vid).toSeq)
+    catalog.setVersionStats(name, vid, rows,
+      maxes.collect { case (k, Some(v)) => k -> encodeStat(v) },
+      schema.filter(_.nonEmpty)) // no files: no stamp, reads see no data
   }
 
   /** Post-append stamp that reads ONLY the files the append created,
@@ -241,16 +267,19 @@ class Table(engine: GraftEngine, val name: String, val mode: String = "r",
     *     (data-dependent, e.g. a truncated >256-byte binary bound), and
     *     stamping from new files alone could UNDERSTATE the true max.
     *     The next upsert/replace (fresh version, full stamp) recovers it.
-    * Falls back to the full recompute when the version has no previous
-    * stamp (legacy manifests).
+    * The schema is `prevSchema` (the stamp before the append, passed in
+    * because a widening append clears it first) merged with the new
+    * files' schema. Falls back to the full recompute when the version has
+    * no previous stamp (legacy manifests, a file without a Spark footer
+    * schema).
     */
-  private def stampVersionStatsAfterAppend(
-      vid: String, preExisting: Set[String]): Unit = {
+  private def stampVersionStatsAfterAppend(vid: String,
+      preExisting: Set[String], prevSchema: Option[StructType]): Unit = {
     val prev = manifest.versions.find(_.id == vid)
-    (prev.flatMap(_.rowCount), prev.flatMap(_.cursorMax)) match {
-      case (Some(prevRows), Some(prevMax)) =>
+    (prev.flatMap(_.rowCount), prev.flatMap(_.cursorMax), prevSchema) match {
+      case (Some(prevRows), Some(prevMax), Some(prevSch)) =>
         val newFiles = filesIn(vid).filterNot(f => preExisting(f.getAbsolutePath))
-        val (newRows, newMaxes) = footerStatsCore(newFiles.toSeq)
+        val (newRows, newMaxes, newSchema) = footerStatsCore(newFiles.toSeq)
         val merged = prevMax.flatMap { case (k, prevEnc) =>
           newMaxes.get(k) match {
             case None => Some(k -> prevEnc) // absent in new files: keep
@@ -265,7 +294,8 @@ class Table(engine: GraftEngine, val name: String, val mode: String = "r",
               } catch { case _: Exception => None } // type drift
           }
         }
-        catalog.setVersionStats(name, vid, prevRows + newRows, merged)
+        catalog.setVersionStats(name, vid, prevRows + newRows, merged,
+          newSchema.flatMap(mergeSchemas(prevSch, _)))
       case _ => stampVersionStats(vid)
     }
   }
@@ -303,7 +333,8 @@ class Table(engine: GraftEngine, val name: String, val mode: String = "r",
     // a legitimately EMPTY version (reset / crashed-before-write) reads as
     // an empty frame — the same answer read() gives for the active one —
     // rather than Spark's misleading "Unable to infer schema" error.
-    // Same canonical recipe as every other read path (versionScan).
+    // Same canonical recipe as every other read path (versionScan: the
+    // version's schema stamp, inference only for unstamped versions).
     catalog.versionScan(spark, name, vid).getOrElse(
       spark.createDataFrame(spark.sparkContext.emptyRDD[Row], new StructType()))
   }
@@ -412,8 +443,24 @@ class Table(engine: GraftEngine, val name: String, val mode: String = "r",
     // cumulative I/O for exactly the streaming workload the manifest
     // stamps exist to serve)
     val preExisting = filesIn(vid).map(_.getAbsolutePath).toSet
-    writeInto(clustered(decorate(conform(batch))),
-      catalog.versionDir(name, vid).toString, SaveMode.Append, buckets, attest)
+    val prevSchema = manifest.versions.find(_.id == vid)
+      .flatMap(_.schema).flatMap(SchemaInternals.parse)
+    val decorated = decorate(conform(batch))
+    // the version's columns first, in stamp order, new ones after: a
+    // `mergeSchema` read orders columns by whichever file sorts first
+    // (random part-file names), so only files that agree on the order let
+    // inference and the incremental stamp below agree
+    val out = clustered(prevSchema.fold(decorated) { s =>
+      val (known, added) = decorated.columns.partition(s.fieldNames.contains)
+      decorated.select((s.fieldNames.filter(known.contains) ++ added).map(col).toSeq: _*)
+    })
+    // a reader must never pair the version's files with a stamp narrower
+    // than they are: an append that widens the schema (new columns) drops
+    // the stamp BEFORE writing — readers infer until the restamp below
+    if (prevSchema.exists(s => !mergeSchemas(s, out.schema).contains(s)))
+      catalog.clearVersionSchema(name, vid)
+    writeInto(out, catalog.versionDir(name, vid).toString,
+      SaveMode.Append, buckets, attest)
     // cleared at the DURABILITY point — after the parquet append commits,
     // before stats stamping / event recording. A write failure keeps the
     // buffer (the retry writes the rows instead of silently no-opping);
@@ -422,7 +469,7 @@ class Table(engine: GraftEngine, val name: String, val mode: String = "r",
     buffer.clear()
     try {
       Table.postAppendHook()
-      stampVersionStatsAfterAppend(vid, preExisting)
+      stampVersionStatsAfterAppend(vid, preExisting, prevSchema)
     } catch {
       case scala.util.control.NonFatal(e) =>
         // non-fatal, but never leave a STALE stamp: it understates
@@ -565,13 +612,8 @@ class Table(engine: GraftEngine, val name: String, val mode: String = "r",
         src.listFiles().filter(_.isFile).foreach(f =>
           java.nio.file.Files.copy(f.toPath, dst.resolve(f.getName)))
       }
-    val oldPaths = affected.toSeq.sorted
-      .map(k => oldDir.resolve(s"__bucket=$k"))
-      .filter(p => p.toFile.exists).map(_.toString)
-    val kept =
-      if (oldPaths.isEmpty) incoming.limit(0)
-      else spark.read.option("mergeSchema", "true").parquet(oldPaths: _*)
-        .join(incoming, keys, "left_anti")
+    val kept = catalog.bucketScan(spark, name, oldVid, affected.toSeq)
+      .map(_.join(incoming, keys, "left_anti")).getOrElse(incoming.limit(0))
     val merged = incoming.unionByName(kept, allowMissingColumns = true)
     writeInto(clustered(merged), newDir.toString, SaveMode.Append, Some(n))
     stampVersionStats(vid)
@@ -621,10 +663,8 @@ class Table(engine: GraftEngine, val name: String, val mode: String = "r",
               keys.zip(keyValues).map { case (k, v) => typedLit(k, v) }: _*),
               lit(n)).as("b")).head.getInt(0)
         }
-        val p = catalog.versionDir(name, vid).resolve(s"__bucket=$b")
-        if (p.toFile.exists)
-          spark.read.option("mergeSchema", "true").parquet(p.toString).filter(eqFilter)
-        else read.limit(0)
+        catalog.bucketScan(spark, name, vid, Seq(b))
+          .map(_.filter(eqFilter)).getOrElse(read.limit(0))
       case _ => read.filter(eqFilter)
     }
   }

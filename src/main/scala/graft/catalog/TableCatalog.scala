@@ -3,6 +3,9 @@ package graft.catalog
 import java.nio.file.{Files, Path, Paths}
 import java.nio.charset.StandardCharsets
 
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.graft.SchemaInternals
+import org.apache.spark.sql.types.StructType
 import org.json4s._
 import org.json4s.jackson.Serialization
 
@@ -27,7 +30,17 @@ case class VersionInfo(id: String, createdAt: Long,
     // job. Columns whose footer stats are absent or untrustworthy
     // (truncated binary, INT96) are simply missing — readers fall back to
     // a scan. None for versions written by older manifests.
-    cursorMax: Option[Map[String, String]] = None)
+    cursorMax: Option[Map[String, String]] = None,
+    // the version's merged Spark schema (StructType JSON, `__bucket`
+    // excluded), folded at commit from the schema Spark's writer records in
+    // each parquet footer — what makes every read of the version
+    // metadata-only: [[TableCatalog.versionScan]] passes it as an explicit
+    // read schema instead of running a `mergeSchema` footer-merge Spark
+    // job. None for versions written by older manifests, fileless
+    // versions, versions holding a file without the Spark footer key, and
+    // a version mid-way through a column-adding append (cleared before the
+    // write, restamped after) — those reads fall back to `mergeSchema`.
+    schema: Option[String] = None)
 
 /** Catalog event log entry (reference node.py:387-397 signal_create/update/
   * reset) — drives downstream node triggering in the graph runner.
@@ -77,11 +90,14 @@ case class TableManifest(
   *
   * Layout: `<root>/<table>/manifest.json` + `<root>/<table>/<versionId>/`
   * (parquet dir per version). Mutations are metadata-only and O(1) in
-  * data size: at 100 TB the manifest stays a few KB — data never moves
-  * through the driver; only Spark jobs touch the version directories.
-  * The one exception is [[versionScan]], the canonical (lazy, plan-only)
-  * read recipe shared by every batch/streaming/time-travel reader so the
-  * paths cannot drift on a layout change.
+  * data size: at 100 TB the manifest stays a few KB per version — data
+  * never moves through the driver; only Spark jobs touch the version
+  * directories. The one exception is [[versionScan]], the canonical (lazy,
+  * plan-only) read recipe shared by every batch/streaming/time-travel
+  * reader so the paths cannot drift on a layout change. Reads of a
+  * committed version are metadata-only: the schema stamped at commit
+  * ([[VersionInfo.schema]]) is the read schema, so building a read starts
+  * no Spark job; unstamped versions fall back to `mergeSchema` inference.
   *
   * Old versions stay on disk after reset/replace "until garbage collected
   * according to the table's retention policy" (reference node.py:403-404);
@@ -197,18 +213,63 @@ class TableCatalog(val root: Path) {
         f.getName.endsWith(".parquet"))).exists(_.nonEmpty))
   }
 
-  /** The canonical scan of one version: user-facing schema (mergeSchema
-    * for schema-on-write evolution, the `__bucket` layout column dropped),
-    * or None for a fileless version (reset(), crash-before-write) — which
-    * must read as "no data yet", not throw schema-inference errors.
+  /** The canonical scan of one version: user-facing schema (the commit
+    * stamp, or `mergeSchema` inference for unstamped versions; the
+    * `__bucket` layout column dropped), or None for a fileless version
+    * (reset(), crash-before-write) — which must read as "no data yet", not
+    * throw schema-inference errors.
     */
-  def versionScan(spark: org.apache.spark.sql.SparkSession, name: String,
-      vid: String): Option[org.apache.spark.sql.DataFrame] =
+  def versionScan(spark: SparkSession, name: String,
+      vid: String): Option[DataFrame] =
     if (!hasDataFiles(name, vid)) None
-    else try Some(spark.read.option("mergeSchema", "true")
-      .parquet(versionDir(name, vid).toString)
-      .drop("__bucket"))
-    catch {
+    else scan(spark, name, vid, Seq(versionDir(name, vid)))
+
+  /** The same recipe over a subset of a bucketed version's `__bucket=K`
+    * dirs (upsert's affected-bucket rewrite, lookup's single-bucket scan):
+    * the version's stamp is the read schema, so every subset reads with
+    * the version's full columns. None when none of the dirs exists.
+    */
+  def bucketScan(spark: SparkSession, name: String, vid: String,
+      buckets: Seq[Int]): Option[DataFrame] = {
+    val dirs = buckets.sorted.map(k => versionDir(name, vid).resolve(s"__bucket=$k"))
+      .filter(p => Files.isDirectory(p))
+    if (dirs.isEmpty) None else scan(spark, name, vid, dirs)
+  }
+
+  /** A version's schema without building a read: the stamp, else the
+    * inferred schema of [[versionScan]]. None for a fileless version.
+    */
+  def versionSchema(spark: SparkSession, name: String,
+      vid: String): Option[StructType] =
+    schemaStamp(name, vid).flatMap(SchemaInternals.parse)
+      .orElse(versionScan(spark, name, vid).map(_.schema))
+
+  /** The version's schema stamp, from the ON-DISK manifest: another writer
+    * (another catalog instance or JVM) may have appended wider files to
+    * the version since this instance cached it, and a stale stamp would
+    * hide their columns.
+    */
+  private def schemaStamp(name: String, vid: String): Option[String] =
+    refresh(name).flatMap(_.versions.find(_.id == vid)).flatMap(_.schema)
+
+  private def scan(spark: SparkSession, name: String, vid: String,
+      dirs: Seq[Path]): Option[DataFrame] = {
+    val paths = dirs.map(_.toString)
+    def inferred = spark.read.option("mergeSchema", "true").parquet(paths: _*)
+    try {
+      val stamp = schemaStamp(name, vid)
+      val df = stamp.flatMap(SchemaInternals.parse) match {
+        case Some(readSchema) =>
+          val stamped = spark.read.schema(readSchema).parquet(paths: _*)
+          // parquet() listed the files eagerly; a column-adding append
+          // clears the stamp BEFORE it writes, so a stamp unchanged after
+          // the listing proves no wider file was listed (seqlock-style).
+          // A changed stamp means a writer raced us: infer instead.
+          if (schemaStamp(name, vid) == stamp) stamped else inferred
+        case None => inferred
+      }
+      Some(df.drop("__bucket"))
+    } catch {
       // check-then-read window: a concurrent retention sweep can delete
       // the dir between hasDataFiles and the (eager) parquet listing —
       // that documented race must read as "no data", not crash. Swallowed
@@ -217,6 +278,7 @@ class TableCatalog(val root: Path) {
       case e: org.apache.spark.sql.AnalysisException
           if !Files.exists(versionDir(name, vid)) => None
     }
+  }
 
   def exists(name: String): Boolean = Files.exists(manifestPath(name))
 
@@ -341,28 +403,42 @@ class TableCatalog(val root: Path) {
       eventCounter = m.eventCounter + 1)
   }
 
-  /** Stamp a version's committed row count and per-column footer maxes
-    * (Table.recordCount's O(1) path + GraftTableSource's O(1) poll path).
+  /** Stamp a version's committed row count, per-column footer maxes and
+    * merged schema (Table.recordCount's O(1) path, GraftTableSource's O(1)
+    * poll path, and [[versionScan]]'s metadata-only read).
     */
   def setVersionStats(name: String, vid: String, rows: Long,
-      cursorMax: Map[String, String] = Map.empty): TableManifest =
+      cursorMax: Map[String, String] = Map.empty,
+      schema: Option[StructType] = None): TableManifest =
     mutate(name) { m =>
       m.copy(versions = m.versions.map(v =>
         if (v.id == vid) v.copy(rowCount = Some(rows),
-          cursorMax = Some(cursorMax)) else v))
+          cursorMax = Some(cursorMax), schema = schema.map(_.json)) else v))
+    }
+
+  /** Drop only a version's schema stamp — taken under the table lock
+    * BEFORE an append that widens the version's schema writes its files,
+    * so no reader can pair the new files with the old, narrower stamp
+    * (readers fall back to inference until the append restamps).
+    */
+  def clearVersionSchema(name: String, vid: String): TableManifest =
+    mutate(name) { m =>
+      m.copy(versions = m.versions.map(v =>
+        if (v.id == vid) v.copy(schema = None) else v))
     }
 
   /** Drop a version's stats stamp entirely. Used when an incremental
     * restamp FAILED after its append committed: a stale stamp silently
     * understates rowCount/cursorMax (a streaming source polling the stale
-    * max would skip the appended rows forever), while NO stamp makes every
-    * consumer fall back to a scan and the next successful flush recompute
-    * a full fresh stamp.
+    * max would skip the appended rows forever) or narrows the schema,
+    * while NO stamp makes every consumer fall back to a scan and the next
+    * successful flush recompute a full fresh stamp.
     */
   def clearVersionStats(name: String, vid: String): TableManifest =
     mutate(name) { m =>
       m.copy(versions = m.versions.map(v =>
-        if (v.id == vid) v.copy(rowCount = None, cursorMax = None) else v))
+        if (v.id == vid) v.copy(rowCount = None, cursorMax = None,
+          schema = None) else v))
     }
 
   def updateMeta(name: String)(f: TableMeta => TableMeta): TableManifest =

@@ -135,7 +135,9 @@ class GraftTableSource(sqlContext: SQLContext, cat: TableCatalog,
 
   // single owner of the version-dir layout: TableCatalog.versionScan —
   // fileless versions (reset(), crash-before-write) read as None, and the
-  // scan recipe (mergeSchema, __bucket dropped) is Table.read's
+  // scan recipe (the version's commit-time schema stamp, mergeSchema only
+  // for unstamped versions, __bucket dropped) is Table.read's, so building
+  // a batch starts no schema-inference job
   private def versionDf(vid: String): Option[DataFrame] =
     cat.versionScan(spark, table, vid)
 
@@ -324,8 +326,8 @@ class GraftTableSource(sqlContext: SQLContext, cat: TableCatalog,
       case None => upTo
     }
     // pin to the DECLARED schema: schema-on-write evolution (conform
-    // passes new columns through; activeDf reads with mergeSchema) must
-    // not widen a running stream's batch arity mid-query
+    // passes new columns through; the version's schema stamp widens with
+    // them) must not widen a running stream's batch arity mid-query
     batch.select(schema.fieldNames.map(col).toSeq: _*)
   }
 

@@ -353,6 +353,50 @@ class TableSpec extends SparkSpec {
     assert(t.recordCount == Some(0L))
   }
 
+  test("reads of a stamped version are metadata-only - read, schema, readSql and asStream start no Spark job") {
+    val e = engine()
+    val plain = e.table("zj1", "w").init(addMonotonicId = "mid")
+    plain.append(Seq((1L, "a"), (2L, "b")).toDF("id", "v")); plain.flush()
+    plain.append(Seq((3L, "c", 1.5)).toDF("id", "v", "x")); plain.flush()
+    val bucketed = e.table("zj2", "w").init(uniqueOn = Seq("id"), bucketBy = 4)
+    bucketed.append((1L to 20L).map(i => (i, s"v$i")).toDF("id", "v")); bucketed.flush()
+    bucketed.upsert(Seq((3L, "NEW")).toDF("id", "v"))
+    val groups = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        groups.add(String.valueOf(j.properties.getProperty("spark.jobGroup.id")))
+    }
+    spark.sparkContext.addSparkListener(listener)
+    def jobsIn(group: String)(body: => Unit): Int = {
+      spark.sparkContext.setJobGroup(group, group)
+      try body finally spark.sparkContext.clearJobGroup()
+      // fence: the listener bus delivers in order, so once a job started
+      // after `body` is seen, every job `body` started has been seen too
+      spark.sparkContext.setJobGroup(s"$group-fence", "fence")
+      try spark.range(1).count() finally spark.sparkContext.clearJobGroup()
+      val deadline = System.currentTimeMillis() + 30000
+      while (!groups.contains(s"$group-fence") && System.currentTimeMillis() < deadline)
+        Thread.sleep(20)
+      assert(groups.contains(s"$group-fence"), "listener never saw the fence job")
+      groups.toArray.count(_ == group)
+    }
+    try {
+      Seq(plain -> "id", bucketed -> "id").foreach { case (t, ob) =>
+        val probe = s"zj-probe-${t.name}"
+        assert(jobsIn(probe) {
+          t.read
+          assert(t.schema.exists(_.nonEmpty))
+          t.readSql(s"SELECT v, COUNT(*) AS n FROM ${t.sqlName} GROUP BY v")
+          t.asStream(orderBy = ob).plan()
+        } == 0, s"${t.name}: reading a stamped version must start no Spark job")
+      }
+      // positive control: the same read of an UNSTAMPED version infers
+      // its schema with a Spark job, which the probe above would have seen
+      e.catalog.clearVersionSchema("zj1", plain.getActiveVersion.get)
+      assert(jobsIn("zj-control")(plain.read) > 0)
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
   test("read lease shields a time-travel scan from a concurrent retention sweep") {
     val e = engine()
     val t = e.table("lease1", "w")
