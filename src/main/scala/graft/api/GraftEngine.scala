@@ -113,15 +113,13 @@ class GraftEngine(
       opened.get(store).orElse(
         if (isNameConnected(name)) Some(table(name)) else None)
     } else opened.values.toSeq
-    val views = tabs.filter(_.isConnected)
-    views.foreach(t => t.read.createOrReplaceTempView(t.sqlName))
     // analysis is EAGER (the returned frame holds resolved scans, not view
     // references), so the views can be dropped immediately — leaving them
     // registered would let a LATER caller on the same SparkSession resolve
     // another node's stale table snapshot instead of failing the declared-
     // dataflow check (and read a version dir retention may since have gc'd)
-    try spark.sql(query)
-    finally views.foreach(t => spark.catalog.dropTempView(t.sqlName))
+    GraftEngine.withViews(spark,
+      tabs.filter(_.isConnected).map(t => t.sqlName -> t.read))(spark.sql(query))
   }
 
   /** Streams register here so normal execution end persists their progress
@@ -143,5 +141,37 @@ class GraftEngine(
   def endExecution(): Unit = {
     opened.values.foreach(_.flush())
     openedStreams.values.foreach(_.checkpoint())
+  }
+}
+
+object GraftEngine {
+  /** One lock per (session, view name): temp views are session-global, so
+    * two engines (or two cascade nodes sharing a batch) registering the
+    * same store name would otherwise drop each other's view mid-analysis.
+    */
+  private val viewLocks =
+    java.util.Collections.synchronizedMap(
+      new java.util.WeakHashMap[SparkSession,
+        java.util.concurrent.ConcurrentHashMap[String, Object]]())
+
+  private def viewLock(spark: SparkSession, view: String): Object =
+    viewLocks.computeIfAbsent(spark, _ => new java.util.concurrent.ConcurrentHashMap())
+      .computeIfAbsent(view, _ => new Object)
+
+  /** Register each (name, frame) as a temp view, run `body` (which must
+    * analyze eagerly), then drop the views — atomically per (session, view
+    * name): callers holding overlapping names run one at a time, locks
+    * taken in name order so two callers never deadlock.
+    */
+  private[api] def withViews[A](spark: SparkSession,
+      views: Seq[(String, DataFrame)])(body: => A): A = {
+    val names = views.map(_._1).distinct.sorted
+    def locked(rest: List[String]): A = rest match {
+      case n :: tail => viewLock(spark, n).synchronized(locked(tail))
+      case Nil =>
+        views.foreach { case (n, df) => df.createOrReplaceTempView(n) }
+        try body finally names.foreach(spark.catalog.dropTempView)
+    }
+    locked(names.toList)
   }
 }

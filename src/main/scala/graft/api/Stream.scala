@@ -1,7 +1,13 @@
 package graft.api
 
-import org.apache.spark.sql.Row
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, IntegerType, LongType, StringType, TimestampType}
+import org.apache.spark.unsafe.types.UTF8String
+
+import org.apache.spark.sql.graft.{LocalInternals, SchemaInternals}
+
+import graft.catalog.VersionInfo
 
 /** Stateful exactly-once cursor over a Table (reference node.py:18-81):
   * consume each record at most once, in the total order of `orderBy`, with
@@ -20,8 +26,15 @@ import org.apache.spark.sql.functions._
   *
   * Scale: the plan is filter(orderBy > cursor) + orderBy — the filter
   * reaches the parquet scan (min/max pruning skips fully-consumed files
-  * when versions are written sorted on the cursor column), and only one
-  * partition at a time is resident driver-side via toLocalIterator.
+  * when versions are written sorted on the cursor column). A consume
+  * first reads the active version's commit stamp: when its stamped max of
+  * the order column is at or below the cursor, nothing is new and no
+  * Spark job runs. A version under the driver-residency bound
+  * ([[Table.driverResident]]: bytes and stamped rows within
+  * `spark.sql.autoBroadcastJoinThreshold`) is read in one pass, one task,
+  * sorted within that partition, and held whole on the driver; above the
+  * bound only one partition at a time is resident, via toLocalIterator
+  * over the globally sorted plan.
   */
 class Stream(table: Table, val orderByField: String, state: State,
     startingValue: Option[Any] = None) {
@@ -42,7 +55,11 @@ class Stream(table: Table, val orderByField: String, state: State,
   private def loadPersisted(): Option[Any] =
     state.get(stateKey).filter(_ != null)
 
-  private[graft] def plan() = {
+  private[graft] def plan(): DataFrame =
+    unconsumed().orderBy(col(orderByField).asc)
+
+  /** The unconsumed rows, unordered. */
+  private def unconsumed(): DataFrame = {
     val base = table.read
     // an unconnected/never-written table has no columns — yield the empty
     // stream (dummy-object semantics, node.py:232-238) instead of failing
@@ -61,20 +78,41 @@ class Stream(table: Table, val orderByField: String, state: State,
       // JNull is discarded on reload (the next run replays everything) —
       // breaking exactly-once in both directions
       val nonNull = base.filter(col(orderByField).isNotNull)
-      val filtered = cursor match {
+      cursor match {
         case Some(v) => nonNull.filter(col(orderByField) > lit(v))
         case None => nonNull
       }
-      filtered.orderBy(col(orderByField).asc)
     }
   }
+
+  /** The active version's stamp proves there is nothing to consume: it is
+    * committed empty, or its stamped max of the order column is at or
+    * below the cursor (the check `GraftTableSource.getOffset` makes).
+    * Only exact type matches compare; anything else scans.
+    */
+  private def nothingNew(v: VersionInfo): Boolean =
+    v.rowCount.contains(0L) || (for {
+      c <- cursor
+      enc <- v.cursorMax.flatMap(_.get(orderByField))
+      s <- v.schema.flatMap(SchemaInternals.parse)
+      f <- s.find(_.name == orderByField)
+    } yield Stream.atOrBelow(enc, f.dataType, c)).contains(true)
 
   /** Iterate unconsumed records in order, advancing the in-memory cursor as
     * each row is yielded (node.py:40-52).
     */
   def consumeRecords(): Iterator[Row] = {
     import scala.jdk.CollectionConverters._
-    val it = plan().toLocalIterator().asScala
+    val stamp = table.activeStamp
+    val it =
+      if (stamp.exists(nothingNew)) Iterator.empty
+      // one pass, one task: Spark's own sort order within the single
+      // partition instead of a range-partitioned global sort, which
+      // samples the unconsumed rows in a job of its own first
+      else if (stamp.exists(table.driverResident))
+        unconsumed().coalesce(1).sortWithinPartitions(col(orderByField).asc)
+          .collect().iterator
+      else plan().toLocalIterator().asScala
     new Iterator[Row] {
       def hasNext: Boolean = it.hasNext
       def next(): Row = {
@@ -129,4 +167,24 @@ class Stream(table: Table, val orderByField: String, state: State,
     case d: java.sql.Date => d.toString
     case other => other
   }
+}
+
+object Stream {
+  /** Whether the stamped max `enc` (the streaming offset encoding) is at
+    * or below `cursor` in Spark's ordering of `dt`. False when the
+    * cursor's runtime class does not compare exactly with the column's (a
+    * timestamp cursor reloaded as a string, a seek()ed value of another
+    * type): the caller then scans.
+    */
+  private[api] def atOrBelow(enc: String, dt: DataType, cursor: Any): Boolean =
+    scala.util.Try((dt, cursor) match {
+      // a persisted cursor reloads as a Long whatever its column's width
+      case (LongType | IntegerType, c @ (_: java.lang.Long | _: java.lang.Integer)) =>
+        enc.toLong <= c.asInstanceOf[Number].longValue
+      case (s: StringType, c: String) if LocalInternals.binaryString(s) =>
+        UTF8String.fromString(enc).compareTo(UTF8String.fromString(c)) <= 0
+      case (TimestampType, c: java.sql.Timestamp) =>
+        !java.sql.Timestamp.from(java.time.Instant.parse(enc)).after(c)
+      case _ => false
+    }).getOrElse(false)
 }

@@ -1,14 +1,18 @@
 package graft.api
 
 import scala.collection.mutable.ArrayBuffer
+import scala.util.control.NonFatal
 
-import org.apache.spark.sql.{DataFrame, Row, SaveMode}
+import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{BoundReference, Murmur3Hash}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{StringType, StructType}
+import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.types.UTF8String
 
-import org.apache.spark.sql.graft.SchemaInternals
+import org.apache.spark.sql.graft.{LocalInternals, SchemaInternals}
 
-import graft.catalog.TableCatalog
+import graft.catalog.{TableCatalog, VersionInfo}
 
 /** Named, versioned table port (reference node.py:117-414).
   *
@@ -20,10 +24,19 @@ import graft.catalog.TableCatalog
   * version + pointer swap, so readers of the old version are never torn.
   *
   * 100 TB note: every data operation is a Spark job over the version dir —
-  * nothing row-sized crosses the driver except explicit `readRecords`.
-  * Upsert rewrites the table (O(table) per call, SURVEY.md §7.4); the
-  * mitigation path at scale is partition-level rewrite on a bucketed
-  * layout, which the anti-join+union plan here already parallelizes.
+  * nothing row-sized crosses the driver except explicit `readRecords`,
+  * a stream consume under the driver-residency bound, and rows that are
+  * already on the driver. Upsert rewrites the table (O(table) per call,
+  * SURVEY.md §7.4); the mitigation path at scale is partition-level
+  * rewrite on a bucketed layout, which the anti-join+union plan here
+  * already parallelizes.
+  *
+  * Local path: a write whose input's optimized plan is a `LocalRelation`
+  * or a union of them (webhook batches, rows built by node code, the rows
+  * `Stream.consumeRecords` returns) does its row-level bookkeeping on the
+  * driver — monotonic ids, last-per-key dedup, the affected-bucket set —
+  * each pinned bit-identical to its Spark form (LocalPathSpec). Any other
+  * input keeps the Spark path.
   */
 class Table(engine: GraftEngine, val name: String, val mode: String = "r",
     val required: Boolean = true, val connected: Boolean = true) {
@@ -80,11 +93,7 @@ class Table(engine: GraftEngine, val name: String, val mode: String = "r",
     // fresh manifest read (O(KB) disk, still no Spark job): on a SHARED
     // store another engine's flush re-stamps the count, and serving this
     // instance's cached manifest would return it stale forever
-    val m = if (connected) catalog.refresh(name).getOrElse(manifest) else manifest
-    val stored = m.activeVersion.flatMap(vid =>
-      m.versions.find(_.id == vid).flatMap(_.rowCount))
-      .filter(_ => connected)
-    stored.orElse(activeDf.map(_.count()))
+    activeStamp.flatMap(_.rowCount).orElse(activeDf.map(_.count()))
   }
 
   private def activeFiles: Array[java.io.File] =
@@ -126,16 +135,24 @@ class Table(engine: GraftEngine, val name: String, val mode: String = "r",
     import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName._
     import org.apache.parquet.schema.LogicalTypeAnnotation
     import org.apache.parquet.schema.LogicalTypeAnnotation.TimestampLogicalTypeAnnotation
+    import org.apache.parquet.HadoopReadOptions
     val conf = spark.sessionState.newHadoopConf()
+    // read options are built ONCE per stamp: building them copies the
+    // whole Hadoop conf (10-20 ms per footer on a 4-core box, most of an
+    // upsert's commit tail when built per file). Only a session with a
+    // parquet crypto factory needs per-file (decryption) options
+    val decrypting = conf.get("parquet.crypto.factory.class") != null
+    lazy val readOptions = HadoopReadOptions.builder(conf).build()
     var rows = 0L
     // per-column running max over all row groups; a column drops to None
     // (untracked forever) the first time a row group lacks usable stats
     val maxes = scala.collection.mutable.Map.empty[String, Option[Any]]
     var schema: Option[StructType] = Some(new StructType())
     files.sortBy(_.getAbsolutePath).foreach { f =>
-      val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-        new org.apache.hadoop.fs.Path(f.getAbsolutePath), conf)
-      val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
+      val path = new org.apache.hadoop.fs.Path(f.getAbsolutePath)
+      val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(path, conf),
+        if (decrypting) HadoopReadOptions.builder(conf, path).build() else readOptions)
       try {
         rows += r.getRecordCount
         schema = for {
@@ -300,6 +317,29 @@ class Table(engine: GraftEngine, val name: String, val mode: String = "r",
     }
   }
 
+  /** The active version's manifest entry, read fresh from disk: another
+    * engine may have committed since this instance cached the manifest.
+    */
+  private[graft] def activeStamp: Option[VersionInfo] =
+    if (!connected) None
+    else catalog.refresh(name).flatMap(m =>
+      m.activeVersion.flatMap(vid => m.versions.find(_.id == vid)))
+
+  /** Whether a stamped version is small enough to read whole onto the
+    * driver: its bytes on disk and its stamped rows × the schema's
+    * per-row size estimate (Spark's own `defaultSize` statistic) both fit
+    * under `spark.sql.autoBroadcastJoinThreshold` — the size below which
+    * Spark itself collects a relation to the driver to broadcast it.
+    */
+  private[graft] def driverResident(v: VersionInfo): Boolean = {
+    val bound = spark.sessionState.conf.autoBroadcastJoinThreshold
+    (v.rowCount, v.schema.flatMap(SchemaInternals.parse)) match {
+      case (Some(rows), Some(s)) if bound > 0 && rows <= bound / math.max(1, s.defaultSize) =>
+        filesIn(v.id).iterator.map(_.length).sum <= bound
+      case _ => false
+    }
+  }
+
   private def activeDf: Option[DataFrame] =
     manifest.activeVersion.filter(_ => connected)
       .flatMap(vid => catalog.versionScan(spark, name, vid))
@@ -361,13 +401,11 @@ class Table(engine: GraftEngine, val name: String, val mode: String = "r",
   /** Arbitrary SQL over this table, referenced by its sqlName
     * (node.py:168-189); opens the whole Spark SQL surface.
     */
-  def readSql(sql: String): DataFrame = {
-    read.createOrReplaceTempView(sqlName)
-    // analysis is eager; drop the view so a later session-sharing caller
-    // can't resolve this table's stale snapshot without declaring it
-    try spark.sql(sql)
-    finally spark.catalog.dropTempView(sqlName)
-  }
+  def readSql(sql: String): DataFrame =
+    // analysis is eager; the view is dropped after it so a later
+    // session-sharing caller can't resolve this table's stale snapshot
+    // without declaring it
+    GraftEngine.withViews(spark, Seq(sqlName -> read))(spark.sql(sql))
 
   // --- write surface (node.py:269-414) ---
 
@@ -420,6 +458,9 @@ class Table(engine: GraftEngine, val name: String, val mode: String = "r",
     * layout — including its ORIGINAL bucket count when `init(bucketBy)`
     * has since changed it (mixed layouts/counts in one dir would corrupt
     * bucket-pruned reads); the next upsert/replace migrates the layout.
+    * A local batch (see the class doc) gets its monotonic ids on the
+    * driver, so the write is the flush's only Spark job; within
+    * [[inOneTaskIfSmall]]'s bound that job is one task, one file per bucket.
     */
   def flush(): Unit = if (connected && buffer.nonEmpty) catalog.withTableLock(name) {
     val batch = buffer.reduce(_.unionByName(_, allowMissingColumns = true))
@@ -450,10 +491,11 @@ class Table(engine: GraftEngine, val name: String, val mode: String = "r",
     // `mergeSchema` read orders columns by whichever file sorts first
     // (random part-file names), so only files that agree on the order let
     // inference and the incremental stamp below agree
-    val out = clustered(prevSchema.fold(decorated) { s =>
+    val ordered = pinLocal(prevSchema.fold(decorated) { s =>
       val (known, added) = decorated.columns.partition(s.fieldNames.contains)
       decorated.select((s.fieldNames.filter(known.contains) ++ added).map(col).toSeq: _*)
     })
+    val out = clustered(inOneTaskIfSmall(ordered, ordered, 0L))
     // a reader must never pair the version's files with a stamp narrower
     // than they are: an append that widens the schema (new columns) drops
     // the stamp BEFORE writing — readers infer until the restamp below
@@ -549,9 +591,38 @@ class Table(engine: GraftEngine, val name: String, val mode: String = "r",
       case None => df.write.mode(mode).parquet(dir)
     }
 
+  /** `df` over its driver-held rows when its plan is local — evaluated
+    * once, here, so a later write or merge neither re-evaluates nor
+    * re-plans it — else `df` itself.
+    */
+  private def pinLocal(df: DataFrame): DataFrame =
+    LocalInternals.localRows(df)
+      .map { case (s, rows) => LocalInternals.localFrame(spark, s, rows) }
+      .getOrElse(df)
+
+  /** `out` in ONE task when it writes driver-resident rows `local` merged
+    * with `oldBytes` of existing files, and together they fit in
+    * `spark.sql.files.maxPartitionBytes` (the input Spark itself packs
+    * into one scan task), the rows sized as rows × the schema's
+    * `defaultSize`. One task writes one file per bucket instead of one
+    * per task per bucket, so versions, their footer stamps and later
+    * scans stay at O(buckets) files.
+    */
+  private def inOneTaskIfSmall(out: DataFrame, local: DataFrame, oldBytes: Long): DataFrame =
+    if (LocalInternals.localRows(local).exists { case (s, rows) =>
+        rows.size.toLong * s.defaultSize + oldBytes <=
+          spark.sessionState.conf.filesMaxPartitionBytes
+      }) out.coalesce(1)
+    else out
+
   /** Insert-or-update on the unique key (node.py:318-334): anti-join the
     * active version against incoming keys, union, write a new version
-    * (copy-on-write MERGE; last-writer-wins per key).
+    * (copy-on-write MERGE; last-writer-wins per key). Local input (see
+    * the class doc) whose key columns are all [[Table.driverGroupable]]
+    * is deduped on the driver and re-enters the merge as a
+    * `LocalRelation`: the anti-join broadcasts it instead of shuffling,
+    * and nothing recomputes the input. Float, binary and nested keys take
+    * the Spark window path.
     */
   def upsert(df: DataFrame): Unit = if (connected) catalog.withTableLock(name) {
     // the WHOLE read-merge-write holds the table lock (reentrantly shared
@@ -562,14 +633,14 @@ class Table(engine: GraftEngine, val name: String, val mode: String = "r",
     val keys = manifest.meta.uniqueOn
     require(keys.nonEmpty, s"upsert on '$name' requires unique_on (node.py:323)")
     // within-batch duplicates: LAST record per key wins, mirroring the
-    // reference's sequential row-at-a-time apply; position comes from the
-    // input's partition-ordered row sequence
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(keys.map(col): _*).orderBy(col("__pos").desc)
-    val lastPerKey = df.withColumn("__pos", monotonically_increasing_id())
-      .withColumn("__rn", row_number().over(w))
-      .filter(col("__rn") === 1).drop("__pos", "__rn")
-    val incoming = decorate(conform(lastPerKey))
+    // reference's sequential row-at-a-time apply. A driver-resident batch
+    // dedups on the driver and stays a local relation through conform and
+    // decorate, so the merge below re-reads no input and shuffles nothing
+    val local = LocalInternals.localRows(df).flatMap { case (s, rows) =>
+      Table.localKeys(s, keys).map(k =>
+        LocalInternals.localFrame(spark, s, Table.lastPerKeyLocal(rows, k)))
+    }
+    val incoming = pinLocal(decorate(conform(local.getOrElse(Table.lastPerKeySpark(df, keys)))))
     val oldVid = manifest.activeVersion.filter(_ => activeFiles.nonEmpty)
     (oldVid, bucketCount) match {
       // partition-level rewrite is only sound when the version's physical
@@ -584,7 +655,9 @@ class Table(engine: GraftEngine, val name: String, val mode: String = "r",
             incoming.unionByName(kept, allowMissingColumns = true)
           case None => incoming
         }
-        writeNewVersion(merged, if (hasActiveVersion) "update" else "create")
+        val oldBytes = activeFiles.iterator.map(_.length).sum
+        writeNewVersion(inOneTaskIfSmall(merged, incoming, oldBytes),
+          if (hasActiveVersion) "update" else "create")
     }
   }
 
@@ -594,13 +667,20 @@ class Table(engine: GraftEngine, val name: String, val mode: String = "r",
     * carry every untouched bucket into the new version as a file-level copy
     * — O(affected buckets) compute instead of O(table). On an object-store
     * manifest layout the copy step degenerates to a pointer; here it is a
-    * local file copy, still zero shuffle/decode.
+    * local file copy, still zero shuffle/decode. Local incoming rows are
+    * hashed to their buckets on the driver ([[Table.bucketFn]]), so the
+    * merge is two jobs (the broadcast and the write); when the rows plus
+    * the affected buckets' bytes fit [[inOneTaskIfSmall]]'s bound, one task
+    * writes them and every rewritten bucket holds one file.
     */
   private def bucketedUpsert(incoming: DataFrame, oldVid: String, n: Int): Unit = {
     val keys = manifest.meta.uniqueOn
     val oldDir = catalog.versionDir(name, oldVid)
-    val affected = withBucket(incoming, n).select("__bucket")
-      .distinct().collect().map(_.getInt(0)).toSet // ≤ n values, never O(data)
+    // ≤ n values, never O(data): hashed on the driver for local rows
+    val affected = LocalInternals.localRows(incoming).flatMap { case (s, rows) =>
+      Table.localKeys(s, keys).map(k => rows.map(Table.bucketFn(k, n)).toSet)
+    }.getOrElse(withBucket(incoming, n).select("__bucket")
+      .distinct().collect().map(_.getInt(0)).toSet)
     val (_, vid) = catalog.createVersion(name)
     val newDir = catalog.versionDir(name, vid)
     oldDir.toFile.listFiles()
@@ -615,7 +695,10 @@ class Table(engine: GraftEngine, val name: String, val mode: String = "r",
     val kept = catalog.bucketScan(spark, name, oldVid, affected.toSeq)
       .map(_.join(incoming, keys, "left_anti")).getOrElse(incoming.limit(0))
     val merged = incoming.unionByName(kept, allowMissingColumns = true)
-    writeInto(clustered(merged), newDir.toString, SaveMode.Append, Some(n))
+    val keptBytes = affected.toSeq.flatMap(k => Option(oldDir.resolve(s"__bucket=$k").toFile
+      .listFiles()).getOrElse(Array.empty[java.io.File])).map(_.length).sum
+    writeInto(clustered(inOneTaskIfSmall(merged, incoming, keptBytes)),
+      newDir.toString, SaveMode.Append, Some(n))
     stampVersionStats(vid)
     catalog.setActive(name, Some(vid), "update")
   }
@@ -645,20 +728,20 @@ class Table(engine: GraftEngine, val name: String, val mode: String = "r",
         // evaluate pmod(hash(key...), n) driver-side — a constant
         // expression shouldn't cost a Spark job per point lookup
         val b = try {
-          import org.apache.spark.sql.catalyst.expressions.{Cast, Literal, Murmur3Hash}
+          import org.apache.spark.sql.catalyst.expressions.{Cast, Literal}
           // cast in the SESSION timezone — write-time bucketing hashed
           // values the session interpreted, so a hardcoded UTC here would
           // hash string-typed timestamp keys into the wrong bucket
           val tz = Some(spark.sessionState.conf.sessionLocalTimeZone)
-          val lits = keys.zip(keyValues).map { case (k, v) =>
+          val typed = keys.zip(keyValues).map { case (k, v) =>
             val dt = sch.flatMap(_.fields.find(_.name == k)).map(_.dataType)
               .getOrElse(Literal(v).dataType)
-            Literal.create(Cast(Literal(v), dt, tz).eval(null), dt)
+            (Cast(Literal(v), dt, tz).eval(null), dt)
           }
-          val h = Murmur3Hash(lits, 42).eval(null).asInstanceOf[Int]
-          ((h % n) + n) % n
+          Table.bucketFn(typed.map(_._2).zipWithIndex.map(_.swap), n)(
+            InternalRow.fromSeq(typed.map(_._1)))
         } catch {
-          case _: Throwable => // fall back to cluster-side evaluation
+          case NonFatal(_) => // fall back to cluster-side evaluation
             spark.range(1).select(pmod(hash(
               keys.zip(keyValues).map { case (k, v) => typedLit(k, v) }: _*),
               lit(n)).as("b")).head.getInt(0)
@@ -761,13 +844,10 @@ class Table(engine: GraftEngine, val name: String, val mode: String = "r",
     * (node.py:360-362).
     */
   def executeSql(sql: String): DataFrame = if (!connected) spark.emptyDataFrame else {
-    val registered = hasActiveVersion
-    if (registered) read.createOrReplaceTempView(sqlName)
     val planClass = spark.sessionState.sqlParser.parsePlan(sql)
       .getClass.getSimpleName.toLowerCase
-    val result =
-      try spark.sql(sql)
-      finally if (registered) spark.catalog.dropTempView(sqlName)
+    val result = GraftEngine.withViews(spark,
+      if (hasActiveVersion) Seq(sqlName -> read) else Nil)(spark.sql(sql))
     // classify create-vs-modify from the parsed plan root (node.py:360-362);
     // a side-effect-free query emits NO event — phantom updates would
     // spuriously cascade every downstream consumer
@@ -836,53 +916,14 @@ class Table(engine: GraftEngine, val name: String, val mode: String = "r",
     }
     meta.addMonotonicId match {
       case Some(mc) if !withCreated.columns.contains(mc) =>
-        // One cheap counting pass (spark_partition_id groupBy — partial agg
-        // collapses each partition to a single row before the shuffle), then
-        // ids are assigned by a codegen'd Stateful expression seeded with
-        // the per-partition prefix sums. Unlike the localCheckpoint +
-        // zipWithIndex formulation this pins nothing in executor storage
-        // and the write stays inside whole-stage codegen. The two passes
-        // see the same partitioning ONLY for a deterministic plan — a
-        // nondeterministic batch (sample(), rand() filters) could mint a
-        // different row set than the one ids were reserved for, so those
-        // are pinned once up front, exactly like the old path.
-        val deterministic = withCreated.queryExecution.analyzed.collectFirst {
-          // plan-LEVEL nondeterminism too: Sample re-executed over a
-          // different upstream partitioning (task retry, AQE re-plan)
-          // yields a different row set even with a fixed seed
-          case p: org.apache.spark.sql.catalyst.plans.logical.Sample => p
-          case p if p.expressions.exists(e => !e.deterministic) => p
-        }.isEmpty
-        // partitioning-STABILITY guard: the counting pass and the write
-        // pass are separate executions, and a plan containing a shuffle
-        // can be AQE-coalesced differently across them (same stats ⇒ same
-        // decision usually, but it is unspecified) — which would assign
-        // ids against the wrong per-partition prefix sums. Only plans
-        // whose partitioning is file-split-deterministic (scans, unions
-        // of materialized frames — the normal append shape) skip the pin.
-        def hasShuffle(p: org.apache.spark.sql.execution.SparkPlan): Boolean =
-          p match {
-            case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
-              hasShuffle(a.inputPlan)
-            case e: org.apache.spark.sql.execution.exchange.ShuffleExchangeLike => true
-            case other => other.children.exists(hasShuffle)
-          }
-        val stablePartitioning =
-          deterministic && !hasShuffle(withCreated.queryExecution.executedPlan)
-        val base =
-          if (stablePartitioning) withCreated else withCreated.localCheckpoint(true)
-        val numParts = base.rdd.getNumPartitions
-        val counts = new Array[Long](numParts)
-        if (numParts > 0)
-          base.groupBy(spark_partition_id().as("__p")).count()
-            .collect().foreach(r => counts(r.getInt(0)) = r.getLong(1))
-        val offsets = counts.scanLeft(0L)(_ + _).init
-        val start = catalog.reserveIds(name, counts.sum)
-        // base32 formatting via builtins (conv emits uppercase 0-9A-V;
-        // lower() matches Table.base32's 0-9a-v), still codegen'd
-        base.withColumn(mc,
-          lpad(lower(conv(graft.functions.DenseRowId.column(spark, start, offsets)
-            .cast(StringType), 10, 32)), 13, "0"))
+        // a driver-resident batch (webhook rows, node-built rows, stream
+        // output) gets its ids on the driver; anything else counts rows
+        // per partition in Spark first
+        val reserve = (n: Long) => catalog.reserveIds(name, n)
+        LocalInternals.localRows(withCreated) match {
+          case Some((s, rows)) => Table.localIds(spark, s, rows, mc, reserve)
+          case None => Table.denseIds(withCreated, mc, reserve)
+        }
       case _ => withCreated
     }
   }
@@ -930,5 +971,132 @@ object Table {
   def base32(v: Long): String = {
     val s = java.lang.Long.toString(v, 32)
     "0" * (13 - s.length) + s
+  }
+
+  /** The bucket `pmod(hash(keys...), n)` assigns, evaluated on the driver:
+    * `keys` are (ordinal, type) of the key columns in the rows passed to
+    * the returned function. The same `Murmur3Hash(…, 42)` expression the
+    * `hash` function builds, so it agrees with the write-time `__bucket`
+    * column bit for bit — the one driver-side hashing recipe (upsert's
+    * affected-bucket set, lookup's bucket).
+    */
+  private[graft] def bucketFn(keys: Seq[(Int, DataType)], n: Int): InternalRow => Int = {
+    val h = Murmur3Hash(keys.map { case (i, dt) => BoundReference(i, dt, nullable = true) }, 42)
+    row => {
+      val v = h.eval(row).asInstanceOf[Int]
+      ((v % n) + n) % n
+    }
+  }
+
+  /** Key types whose driver-side equality (`equals` on Catalyst's internal
+    * values) is exactly Spark's grouping equality. Floating point is out
+    * (Spark groups NaNs and ±0.0 together), as are binary (array identity),
+    * non-binary collations and nested types: those keys take the Spark path.
+    */
+  private[graft] def driverGroupable(dt: DataType): Boolean = dt match {
+    case BooleanType | ByteType | ShortType | IntegerType | LongType |
+        DateType | TimestampType | TimestampNTZType | _: DecimalType => true
+    case s: StringType => LocalInternals.binaryString(s)
+    case _ => false
+  }
+
+  /** (ordinal, type) of each key column in `schema`, when every key is a
+    * top-level column of a [[driverGroupable]] type; else None.
+    */
+  private[graft] def localKeys(schema: StructType,
+      keys: Seq[String]): Option[Seq[(Int, DataType)]] = {
+    val found = keys.map(k => schema.fieldNames.indexOf(k))
+    if (found.exists(_ < 0)) None
+    else Some(found.map(i => i -> schema(i).dataType))
+      .filter(_.forall(k => driverGroupable(k._2)))
+  }
+
+  /** Within-batch duplicates, Spark form: the LAST row per key wins,
+    * position being the input's partition-ordered row sequence (the
+    * reference applies rows one at a time).
+    */
+  private[graft] def lastPerKeySpark(df: DataFrame, keys: Seq[String]): DataFrame = {
+    val w = org.apache.spark.sql.expressions.Window
+      .partitionBy(keys.map(col): _*).orderBy(col("__pos").desc)
+    df.withColumn("__pos", monotonically_increasing_id())
+      .withColumn("__rn", row_number().over(w))
+      .filter(col("__rn") === 1).drop("__pos", "__rn")
+  }
+
+  /** [[lastPerKeySpark]] over driver-held rows (`keys` from [[localKeys]]):
+    * plan order is the partition-ordered sequence of a local scan.
+    */
+  private[graft] def lastPerKeyLocal(rows: Seq[InternalRow],
+      keys: Seq[(Int, DataType)]): Seq[InternalRow] = {
+    def key(r: InternalRow): Seq[Any] = keys.map { case (i, dt) => r.get(i, dt) }
+    val last = scala.collection.mutable.HashMap.empty[Seq[Any], Int]
+    rows.iterator.zipWithIndex.foreach { case (r, i) => last(key(r)) = i }
+    rows.iterator.zipWithIndex.collect { case (r, i) if last(key(r)) == i => r }.toSeq
+  }
+
+  /** Monotonic ids, Spark form. One cheap counting pass (spark_partition_id
+    * groupBy — partial agg collapses each partition to a single row before
+    * the shuffle), then ids are assigned by a codegen'd Stateful expression
+    * seeded with the per-partition prefix sums. Unlike the localCheckpoint
+    * + zipWithIndex formulation this pins nothing in executor storage and
+    * the write stays inside whole-stage codegen. The two passes see the
+    * same partitioning ONLY for a deterministic plan — a nondeterministic
+    * batch (sample(), rand() filters) could mint a different row set than
+    * the one ids were reserved for, so those are pinned once up front.
+    * `reserve(n)` reserves n ids and returns the first (exclusive).
+    */
+  private[graft] def denseIds(df: DataFrame, mc: String,
+      reserve: Long => Long): DataFrame = {
+    val deterministic = df.queryExecution.analyzed.collectFirst {
+      // plan-LEVEL nondeterminism too: Sample re-executed over a
+      // different upstream partitioning (task retry, AQE re-plan) yields
+      // a different row set even with a fixed seed
+      case p: org.apache.spark.sql.catalyst.plans.logical.Sample => p
+      case p if p.expressions.exists(e => !e.deterministic) => p
+    }.isEmpty
+    // partitioning-STABILITY guard: the counting pass and the write pass
+    // are separate executions, and a plan containing a shuffle can be
+    // AQE-coalesced differently across them (same stats ⇒ same decision
+    // usually, but it is unspecified) — which would assign ids against
+    // the wrong per-partition prefix sums. Only plans whose partitioning
+    // is file-split-deterministic (scans, unions of materialized frames —
+    // the normal append shape) skip the pin.
+    def hasShuffle(p: org.apache.spark.sql.execution.SparkPlan): Boolean =
+      p match {
+        case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
+          hasShuffle(a.inputPlan)
+        case _: org.apache.spark.sql.execution.exchange.ShuffleExchangeLike => true
+        case other => other.children.exists(hasShuffle)
+      }
+    val stablePartitioning =
+      deterministic && !hasShuffle(df.queryExecution.executedPlan)
+    val base = if (stablePartitioning) df else df.localCheckpoint(true)
+    val numParts = base.rdd.getNumPartitions
+    val counts = new Array[Long](numParts)
+    if (numParts > 0)
+      base.groupBy(spark_partition_id().as("__p")).count()
+        .collect().foreach(r => counts(r.getInt(0)) = r.getLong(1))
+    val offsets = counts.scanLeft(0L)(_ + _).init
+    val start = reserve(counts.sum)
+    // base32 formatting via builtins (conv emits uppercase 0-9A-V;
+    // lower() matches Table.base32's 0-9a-v), still codegen'd
+    base.withColumn(mc,
+      lpad(lower(conv(graft.functions.DenseRowId.column(base.sparkSession, start, offsets)
+        .cast(StringType), 10, 32)), 13, "0"))
+  }
+
+  /** Monotonic ids, driver form, for rows a local plan holds: row `i` of
+    * the plan order gets `start + i + 1` — exactly the id [[denseIds]]
+    * assigns, because a local scan hands each task a contiguous slice and
+    * a union hands out its children in order, so partition `p`'s offset is
+    * the count of rows before its slice. No counting job.
+    */
+  private[graft] def localIds(spark: SparkSession, schema: StructType,
+      rows: Seq[InternalRow], mc: String, reserve: Long => Long): DataFrame = {
+    val start = reserve(rows.size.toLong)
+    LocalInternals.localFrame(spark, schema.add(mc, StringType, nullable = true),
+      rows.zipWithIndex.map { case (r, i) =>
+        InternalRow.fromSeq(r.toSeq(schema) :+ UTF8String.fromString(base32(start + i + 1)))
+      })
   }
 }
