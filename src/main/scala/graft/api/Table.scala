@@ -12,7 +12,7 @@ import org.apache.spark.unsafe.types.UTF8String
 
 import org.apache.spark.sql.graft.{LocalInternals, SchemaInternals}
 
-import graft.catalog.{TableCatalog, VersionInfo}
+import graft.catalog.{CatalogFileSystem, TableCatalog, VersionInfo}
 
 /** Named, versioned table port (reference node.py:117-414).
   *
@@ -37,6 +37,12 @@ import graft.catalog.{TableCatalog, VersionInfo}
   * driver — monotonic ids, last-per-key dedup, the affected-bucket set —
   * each pinned bit-identical to its Spark form (LocalPathSpec). Any other
   * input keeps the Spark path.
+  *
+  * Filesystem: every Spark write here runs on [[CatalogFileSystem]]
+  * (see `writeInto`), which sets each new file's, `.crc` file's and
+  * directory's mode in-process; the stock local filesystem forks a
+  * `chmod` per path when `libhadoop` is absent. Modes `java.nio` cannot
+  * set fall back to Hadoop's own `setPermission`.
   */
 class Table(engine: GraftEngine, val name: String, val mode: String = "r",
     val required: Boolean = true, val connected: Boolean = true) {
@@ -578,17 +584,28 @@ class Table(engine: GraftEngine, val name: String, val mode: String = "r",
     * `attestLayout = false` skips the `_BUCKETS` marker — for appends
     * whose count came from the markerless heuristic, which must never
     * gain marker (pruning-authorizing) status.
+    *
+    * Every Spark write of the engine (flush, upsert, replace, truncate,
+    * compact) comes through here, and each carries its own filesystem:
+    * [[CatalogFileSystem]], the stock local one except that it sets each
+    * new path's POSIX mode in-process instead of forking a `chmod` per
+    * file, `.crc` file and directory (the forks held 27% of the task
+    * samples of a 200-row-batch app). Modes it cannot set through `java.nio`
+    * fall back to Hadoop's `setPermission`. The filesystem is scoped to
+    * this write's options: the session's Hadoop conf and the `FileSystem`
+    * cache stay as they are.
     */
   private def writeInto(df: DataFrame, dir: String, mode: SaveMode,
       buckets: Option[Int], attestLayout: Boolean = true): Unit =
     buckets match {
       case Some(n) =>
-        withBucket(df, n).write.mode(mode).partitionBy("__bucket").parquet(dir)
+        withBucket(df, n).write.options(CatalogFileSystem.writeOptions).mode(mode)
+          .partitionBy("__bucket").parquet(dir)
         if (attestLayout)
           java.nio.file.Files.write(
             java.nio.file.Paths.get(dir).resolve(Table.BucketMarker),
             n.toString.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      case None => df.write.mode(mode).parquet(dir)
+      case None => df.write.options(CatalogFileSystem.writeOptions).mode(mode).parquet(dir)
     }
 
   /** `df` over its driver-held rows when its plan is local — evaluated
@@ -620,9 +637,9 @@ class Table(engine: GraftEngine, val name: String, val mode: String = "r",
     * (copy-on-write MERGE; last-writer-wins per key). Local input (see
     * the class doc) whose key columns are all [[Table.driverGroupable]]
     * is deduped on the driver and re-enters the merge as a
-    * `LocalRelation`: the anti-join broadcasts it instead of shuffling,
-    * and nothing recomputes the input. Float, binary and nested keys take
-    * the Spark window path.
+    * `LocalRelation`: old rows are dropped through a filter on its key set
+    * ([[Table.withoutKeysOf]]), and nothing recomputes the input. Float,
+    * binary and nested keys take the Spark window path and the join.
     */
   def upsert(df: DataFrame): Unit = if (connected) catalog.withTableLock(name) {
     // the WHOLE read-merge-write holds the table lock (reentrantly shared
@@ -651,8 +668,8 @@ class Table(engine: GraftEngine, val name: String, val mode: String = "r",
       case _ =>
         val merged = activeDf match {
           case Some(active) =>
-            val kept = active.join(incoming, keys, "left_anti")
-            incoming.unionByName(kept, allowMissingColumns = true)
+            incoming.unionByName(Table.withoutKeysOf(active, incoming, keys),
+              allowMissingColumns = true)
           case None => incoming
         }
         val oldBytes = activeFiles.iterator.map(_.length).sum
@@ -668,8 +685,9 @@ class Table(engine: GraftEngine, val name: String, val mode: String = "r",
     * — O(affected buckets) compute instead of O(table). On an object-store
     * manifest layout the copy step degenerates to a pointer; here it is a
     * local file copy, still zero shuffle/decode. Local incoming rows are
-    * hashed to their buckets on the driver ([[Table.bucketFn]]), so the
-    * merge is two jobs (the broadcast and the write); when the rows plus
+    * hashed to their buckets on the driver ([[Table.bucketFn]]) and drop
+    * old rows by key on the driver ([[Table.withoutKeysOf]]), so the merge
+    * is one job, the write; when the rows plus
     * the affected buckets' bytes fit [[inOneTaskIfSmall]]'s bound, one task
     * writes them and every rewritten bucket holds one file.
     */
@@ -693,7 +711,7 @@ class Table(engine: GraftEngine, val name: String, val mode: String = "r",
           java.nio.file.Files.copy(f.toPath, dst.resolve(f.getName)))
       }
     val kept = catalog.bucketScan(spark, name, oldVid, affected.toSeq)
-      .map(_.join(incoming, keys, "left_anti")).getOrElse(incoming.limit(0))
+      .map(Table.withoutKeysOf(_, incoming, keys)).getOrElse(incoming.limit(0))
     val merged = incoming.unionByName(kept, allowMissingColumns = true)
     val keptBytes = affected.toSeq.flatMap(k => Option(oldDir.resolve(s"__bucket=$k").toFile
       .listFiles()).getOrElse(Array.empty[java.io.File])).map(_.length).sum
@@ -887,20 +905,10 @@ class Table(engine: GraftEngine, val name: String, val mode: String = "r",
     * (safe-widen policy), apply declared schema_hints, pass new columns
     * through (read side merges schemas).
     */
-  private def conform(df: DataFrame): DataFrame = {
-    val hinted = manifest.meta.schemaHints.foldLeft(df) { case (d, (c, ty)) =>
-      if (d.columns.contains(c)) d.withColumn(c, col(c).cast(ty)) else d
-    }
-    schema match {
-      case Some(existing) =>
-        existing.fields.foldLeft(hinted) { (d, f) =>
-          if (d.columns.contains(f.name) && !monotonicCol.contains(f.name))
-            d.withColumn(f.name, col(f.name).cast(f.dataType))
-          else d
-        }
-      case None => hinted
-    }
-  }
+  private def conform(df: DataFrame): DataFrame =
+    Table.conformed(df, manifest.meta.schemaHints, schema.toSeq
+      .flatMap(_.fields).filterNot(f => monotonicCol.contains(f.name))
+      .map(f => f.name -> f.dataType).toMap)
 
   /** Auto-column decoration (node.py:286-294): created timestamp and the
     * strictly-monotonic base32 id backed by the catalog high-water mark
@@ -1009,6 +1017,42 @@ object Table {
     if (found.exists(_ < 0)) None
     else Some(found.map(i => i -> schema(i).dataType))
       .filter(_.forall(k => driverGroupable(k._2)))
+  }
+
+  /** `df` conformed in one projection, columns in place: a hinted
+    * column cast to its hint (a type string), then a column of
+    * `existing` cast to that type. Columns match by exact name.
+    */
+  private[graft] def conformed(df: DataFrame, hints: Map[String, String],
+      existing: Map[String, DataType]): DataFrame = {
+    val cols = df.columns
+    if (!cols.exists(c => hints.contains(c) || existing.contains(c))) df
+    else df.select(cols.toSeq.map { c =>
+      val in = col("`" + c.replace("`", "``") + "`")
+      if (!hints.contains(c) && !existing.contains(c)) in
+      else existing.get(c).foldLeft(hints.get(c).fold(in)(t => in.cast(t)))(_.cast(_)).as(c)
+    }: _*)
+  }
+
+  /** `old` without the rows an upsert's `incoming` rows replace: the
+    * `left_anti` join on `keys`. When `incoming` is local, its keys are
+    * [[localKeys]] and its key set fits `spark.sql.autoBroadcastJoinThreshold`
+    * (the size at which Spark would broadcast it for the join), a filter
+    * on the driver-held key set instead: the broadcast runs a Spark job
+    * only to collect rows the driver already holds. Same null semantics as
+    * the join: an old row with a null key is kept, and an incoming row
+    * with a null key removes nothing.
+    */
+  private[graft] def withoutKeysOf(old: DataFrame, incoming: DataFrame,
+      keys: Seq[String]): DataFrame = {
+    val bound = old.sparkSession.sessionState.conf.autoBroadcastJoinThreshold
+    LocalInternals.localRows(incoming).flatMap { case (s, rows) =>
+      localKeys(s, keys)
+        .filter(k => bound > 0 && rows.size <= bound / math.max(1, k.map(_._2.defaultSize).sum))
+        .flatMap(k => LocalInternals.withoutKeys(old, keys, k.map(_._2),
+          rows.iterator.map(r => k.map { case (i, dt) => r.get(i, dt) })
+            .filterNot(_.contains(null))))
+    }.getOrElse(old.join(incoming, keys, "left_anti"))
   }
 
   /** Within-batch duplicates, Spark form: the LAST row per key wins,

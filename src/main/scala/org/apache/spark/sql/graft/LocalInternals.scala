@@ -2,7 +2,8 @@ package org.apache.spark.sql.graft
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.plans.logical.{LocalRelation, LogicalPlan, Union}
+import org.apache.spark.sql.catalyst.expressions.{CreateStruct, Expression, InSet, IsNull, Not, Or}
+import org.apache.spark.sql.catalyst.plans.logical.{Filter, LocalRelation, LogicalPlan, Union}
 import org.apache.spark.sql.catalyst.types.DataTypeUtils
 import org.apache.spark.sql.classic.{Dataset => ClassicDataset, SparkSession => ClassicSession}
 import org.apache.spark.sql.types.{DataType, StringType, StructType}
@@ -46,6 +47,33 @@ object LocalInternals {
       rows: Seq[InternalRow]): DataFrame =
     ClassicDataset.ofRows(spark.asInstanceOf[ClassicSession],
       LocalRelation(DataTypeUtils.toAttributes(schema), rows))
+
+  /** `df` without the rows whose key columns `keys` (of types `types`)
+    * equal one of the driver-held tuples `present` (each non-null, values
+    * in Catalyst's internal form), as one filter: a row with a null key
+    * is kept — the null semantics of a `left_anti` join on `keys`. None
+    * when a key's type in `df` differs from `types` (the join would
+    * coerce them first).
+    */
+  def withoutKeys(df: DataFrame, keys: Seq[String], types: Seq[DataType],
+      present: Iterator[Seq[Any]]): Option[DataFrame] = {
+    val ds = df.asInstanceOf[ClassicDataset[Row]]
+    val plan = ds.queryExecution.analyzed
+    val resolver = ds.sparkSession.sessionState.analyzer.resolver
+    // resolved as a join's using-columns are: by name against the output
+    val attrs = keys.flatMap(k => plan.output.find(a => resolver(a.name, k)))
+    if (attrs.size != keys.size || attrs.map(_.dataType) != types) None
+    else {
+      val key: Expression = if (attrs.size == 1) attrs.head else CreateStruct(attrs)
+      val set: Set[Any] = present.map { k =>
+        val v = k.map(InternalRow.copyValue)
+        if (attrs.size == 1) v.head else InternalRow.fromSeq(v)
+      }.toSet
+      val anyNull = attrs.map(a => IsNull(a): Expression).reduce(Or(_, _))
+      Some(ClassicDataset.ofRows(ds.sparkSession,
+        Filter(Or(anyNull, Not(InSet(key, set))), plan)))
+    }
+  }
 
   /** A string type whose equality and ordering are plain byte equality
     * and order (the default UTF8_BINARY collation), so driver-side

@@ -128,7 +128,49 @@ class LocalPathSpec extends SparkSpec {
     assert(t.read.count() == 2)
   }
 
-  test("job counts of the local path: flush 1, bucketed upsert 2, consume 1, nothing new 0; parquet input agrees") {
+  test("driver key filter == left_anti join over every key type, nulls and multi-column keys; above the bound the join stays") {
+    val s = spark.newSession()
+    s.conf.set("spark.sql.session.timeZone", "America/Los_Angeles")
+    val schema = StructType(Seq(StructField("id", IntegerType), StructField("l", LongType),
+      StructField("s", StringType), StructField("t", StringType),
+      StructField("dec", DecimalType(12, 3)), StructField("v", StringType)))
+    // local rows: key values repeat across ranges, every 7th row has null keys
+    def frame(ids: Range, tag: String): DataFrame =
+      s.createDataFrame(java.util.Arrays.asList(ids.map { i =>
+        def orNull[A](v: A): Any = if (i % 7 == 3) null else v
+        Row(i, orNull(i * 1000003L - 7L), orNull(s"k-${i % 40}-é"),
+          orNull(s"2024-03-${10 + i % 3} 0${i % 4}:30:00"), orNull(BigDecimal(i % 25) / 7), s"$tag$i")
+      }: _*), schema)
+        // string → timestamp/date in the session time zone (DST gap included)
+        .withColumn("ts", to_timestamp(col("t"))).withColumn("d", to_date(col("t"))).drop("t")
+    val oldPath = freshRoot() + "/old"
+    frame(0 until 80, "old").coalesce(1).write.parquet(oldPath)
+    val old = s.read.parquet(oldPath)
+    val incoming = frame(50 until 120, "new")
+    assert(LocalInternals.localRows(incoming).isDefined)
+    def joins(df: DataFrame) = df.queryExecution.optimizedPlan.collect {
+      case j: org.apache.spark.sql.catalyst.plans.logical.Join => j
+    }.size
+    // a using-join puts the key columns first; upsert unions by name
+    def sorted(df: DataFrame) =
+      df.select(old.columns.map(col).toSeq: _*).collect().map(_.toString).sorted.toSeq
+    val keySets = Seq(Seq("l"), Seq("s"), Seq("d"), Seq("ts"), Seq("dec"),
+      Seq("l", "s"), Seq("s", "d", "ts", "dec"))
+    for (keys <- keySets) {
+      val viaJoin = old.join(incoming, keys, "left_anti")
+      val viaFilter = Table.withoutKeysOf(old, incoming, keys)
+      assert(joins(viaFilter) == 0, s"keys $keys kept the join")
+      val want = sorted(viaJoin)
+      assert(sorted(viaFilter) == want, s"keys $keys")
+      assert(want.nonEmpty && want.size < 80, s"keys $keys: a trivial case")
+    }
+    s.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    val above = Table.withoutKeysOf(old, incoming, Seq("l", "s"))
+    assert(joins(above) == 1)
+    assert(sorted(above) == sorted(old.join(incoming, Seq("l", "s"), "left_anti")))
+  }
+
+  test("job counts of the local path: flush 1, bucketed upsert 1, consume 1, nothing new 0; parquet input agrees") {
     val batches = Seq(
       (1 to 200).map(i => (i.toLong, i % 13L, s"k$i", i * 3L)),
       (150 to 350).map(i => (i.toLong, i % 11L, s"u$i", i * 5L)) ++ Seq((151L, 1L, "dup", 7L)))
@@ -154,8 +196,9 @@ class LocalPathSpec extends SparkSpec {
     val localJobs = feed(fast, "local", identity)
     val sparkJobs = feed(slow, "spark", viaParquet)
     // batch 0 creates the events table (full write), batch 1 upserts into
-    // its 8 buckets: broadcast of the incoming rows + the write
-    assert(localJobs == Seq(1, 1, 0, 1, 1, 1, 0, 2), s"local path jobs $localJobs")
+    // its 8 buckets: old rows drop by the driver-held key set, so the
+    // write is the only job
+    assert(localJobs == Seq(1, 1, 0, 1, 1, 1, 0, 1), s"local path jobs $localJobs")
     assert(sparkJobs.zip(localJobs).forall { case (s, l) => s >= l } &&
       sparkJobs(0) > 1 && sparkJobs(7) > 2, s"Spark path jobs $sparkJobs")
     for (t <- Seq("events_in", "events"))

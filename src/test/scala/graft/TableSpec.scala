@@ -149,6 +149,32 @@ class TableSpec extends SparkSpec {
     assert(t.read.select("id").as[String].collect().toSeq == Seq("7"))
   }
 
+  test("conform in one projection == the withColumn-per-column form: same plan, schema, column order and rows") {
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.types._
+    val df = Seq((1, 2L, "3", 4.5, "x", "2024-01-02"), (7, 8L, "9", 1.25, null, null))
+      .toDF("a", "b", "c", "d", "e", "g")
+    val hints = Map("a" -> "bigint", "c" -> "int", "g" -> "date", "zz" -> "string")
+    val existing = Map[String, DataType]("a" -> DecimalType(20, 2), "b" -> IntegerType,
+      "c" -> LongType, "d" -> FloatType, "e" -> StringType, "yy" -> LongType)
+    // the previous form: one withColumn per hinted, then per existing column
+    def folded(d0: DataFrame): DataFrame = {
+      val hinted = hints.foldLeft(d0) { case (d, (c, ty)) =>
+        if (d.columns.contains(c)) d.withColumn(c, col(c).cast(ty)) else d
+      }
+      existing.foldLeft(hinted) { case (d, (c, ty)) =>
+        if (d.columns.contains(c)) d.withColumn(c, col(c).cast(ty)) else d
+      }
+    }
+    val one = graft.api.Table.conformed(df, hints, existing)
+    val old = folded(df)
+    assert(one.columns.toSeq == df.columns.toSeq)
+    assert(one.schema == old.schema)
+    assert(one.queryExecution.optimizedPlan.sameResult(old.queryExecution.optimizedPlan))
+    assert(one.collect().toSeq == old.collect().toSeq)
+    assert(graft.api.Table.conformed(df, Map("zz" -> "int"), Map.empty) eq df)
+  }
+
   test("add_created and add_monotonic_id decorate writes; ids are strictly increasing base32 across batches") {
     val e = engine()
     val t = e.table("t11", "w").init(addCreated = "created_at", addMonotonicId = "monotonic_id")
