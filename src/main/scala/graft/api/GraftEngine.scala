@@ -163,7 +163,7 @@ object GraftEngine {
     * name): callers holding overlapping names run one at a time, locks
     * taken in name order so two callers never deadlock.
     */
-  private[api] def withViews[A](spark: SparkSession,
+  private[graft] def withViews[A](spark: SparkSession,
       views: Seq[(String, DataFrame)])(body: => A): A = {
     val names = views.map(_._1).distinct.sorted
     def locked(rest: List[String]): A = rest match {

@@ -17,7 +17,11 @@ import graft.catalog.{CatalogFileSystem, TableCatalog, VersionInfo}
 /** Named, versioned table port (reference node.py:117-414).
   *
   * Storage: one parquet directory per version under the catalog root; the
-  * manifest's active pointer picks the readable version. Reads are plain
+  * manifest's active pointer picks the readable version, and each
+  * version's manifest entry records its layout (flat files, or the
+  * `init(bucketBy)` hash buckets it was minted with:
+  * [[VersionInfo.buckets]]), which every write into it and every
+  * bucket-pruned read follows. Reads are plain
   * `spark.read.parquet` on the active dir (full Catalyst pushdown/pruning);
   * writes are buffered and flushed as parquet appends (node.py:306-307,
   * :407-414); upsert/replace/truncate are copy-on-write into a fresh
@@ -27,9 +31,8 @@ import graft.catalog.{CatalogFileSystem, TableCatalog, VersionInfo}
   * nothing row-sized crosses the driver except explicit `readRecords`,
   * a stream consume under the driver-residency bound, and rows that are
   * already on the driver. Upsert rewrites the table (O(table) per call,
-  * SURVEY.md §7.4); the mitigation path at scale is partition-level
-  * rewrite on a bucketed layout, which the anti-join+union plan here
-  * already parallelizes.
+  * SURVEY.md §7.4); on a bucketed layout it rewrites only the buckets its
+  * keys hash to and copies the rest (see [[upsert]]).
   *
   * Local path: a write whose input's optimized plan is a `LocalRelation`
   * or a union of them (webhook batches, rows built by node code, the rows
@@ -80,7 +83,7 @@ class Table(engine: GraftEngine, val name: String, val mode: String = "r",
     manifest.activeVersion.filter(_ => connected)
       .map(vid => catalog.versionDir(name, vid).toString)
 
-  def exists: Boolean = hasActiveVersion && activeFiles.nonEmpty
+  def exists: Boolean = connected && manifest.activeVersion.exists(catalog.hasDataFiles(name, _))
 
   /** Schema of the active version — the commit-time stamp, read from the
     * manifest without building a DataFrame; unstamped versions infer it.
@@ -101,9 +104,6 @@ class Table(engine: GraftEngine, val name: String, val mode: String = "r",
     // instance's cached manifest would return it stale forever
     activeStamp.flatMap(_.rowCount).orElse(activeDf.map(_.count()))
   }
-
-  private def activeFiles: Array[java.io.File] =
-    manifest.activeVersion.toArray.flatMap(filesIn)
 
   private def filesIn(vid: String): Array[java.io.File] =
     catalog.dataFiles(name, vid) // single owner of the version-dir layout
@@ -175,16 +175,17 @@ class Table(engine: GraftEngine, val name: String, val mode: String = "r",
               val stats = c.getStatistics
               val usable = stats != null && !stats.isEmpty &&
                 stats.hasNonNullValue
-              // ONLY (physical, logical) pairs whose stamped string the
-              // streaming source's decode() reproduces are stamped: a
-              // DATE's raw INT32 (days) or a DECIMAL's unscaled INT
-              // would decode to a wrong offset — those logical types
-              // stay unstamped and the poll falls back to a scan.
+              // ONLY (physical, logical) pairs whose stamped string
+              // VersionInfo.decode reproduces are stamped: a DATE's raw
+              // INT32 (days), a DECIMAL's unscaled INT or a timestamp
+              // without time zone (a UTC instant here, a local date-time
+              // in a scan) would decode to a wrong offset — those logical
+              // types stay unstamped and the poll falls back to a scan.
               val v: Option[Any] =
                 if (!usable) None
                 else (c.getPrimitiveType.getPrimitiveTypeName,
                     c.getPrimitiveType.getLogicalTypeAnnotation) match {
-                  case (INT64, ts: TimestampLogicalTypeAnnotation) =>
+                  case (INT64, ts: TimestampLogicalTypeAnnotation) if ts.isAdjustedToUTC =>
                     val raw = stats.genericGetMax.asInstanceOf[java.lang.Long].longValue
                     val micros = ts.getUnit match {
                       case LogicalTypeAnnotation.TimeUnit.MILLIS => raw * 1000L
@@ -248,30 +249,10 @@ class Table(engine: GraftEngine, val name: String, val mode: String = "r",
     scala.util.Try(SchemaInternals.merge(a, b,
       spark.sessionState.conf.caseSensitiveAnalysis)).toOption
 
-  /** The streaming source's offset encoding (GraftTableSource.encode):
-    * timestamps as ISO instants, everything else via its SQL string form.
-    */
-  private def encodeStat(v: Any): String = v match {
-    case ts: java.sql.Timestamp => ts.toInstant.toString
-    case other => other.toString
-  }
-
-  /** Inverse of [[encodeStat]], typed by a value of the SAME column read
-    * from a newer footer — throws on type drift (callers disqualify).
-    */
-  private def decodeStatLike(enc: String, like: Any): Any = like match {
-    case _: java.lang.Long => java.lang.Long.valueOf(enc)
-    case _: java.lang.Integer => java.lang.Integer.valueOf(enc)
-    case _: java.lang.Double => java.lang.Double.valueOf(enc)
-    case _: java.sql.Timestamp =>
-      java.sql.Timestamp.from(java.time.Instant.parse(enc))
-    case _ => enc
-  }
-
   private def stampVersionStats(vid: String): Unit = {
     val (rows, maxes, schema) = footerStatsCore(filesIn(vid).toSeq)
     catalog.setVersionStats(name, vid, rows,
-      maxes.collect { case (k, Some(v)) => k -> encodeStat(v) },
+      maxes.collect { case (k, Some(v)) => k -> VersionInfo.encode(v) },
       schema.filter(_.nonEmpty)) // no files: no stamp, reads see no data
   }
 
@@ -280,8 +261,9 @@ class Table(engine: GraftEngine, val name: String, val mode: String = "r",
     * CONSERVATIVE — a dropped column costs a scan fallback, a wrong max
     * would corrupt streaming offsets):
     *   - column stamped before + qualified in the new files → max of the
-    *     two (decode the stored string by the new value's type; any
-    *     decode/compare failure disqualifies);
+    *     two (decode the stored string by the column's type in the schema
+    *     stamp; any decode/compare failure, e.g. a new file of another
+    *     type, disqualifies);
     *   - stamped before + absent from the new files (schema evolution:
     *     the new rows are all-null there) → keep the previous max;
     *   - stamped before + DISQUALIFIED in a new file → disqualified;
@@ -309,11 +291,11 @@ class Table(engine: GraftEngine, val name: String, val mode: String = "r",
             case Some(None) => None         // disqualified by a new file
             case Some(Some(nv)) =>
               try {
-                val pv = decodeStatLike(prevEnc, nv)
+                val pv = VersionInfo.decode(prevEnc, prevSch(k).dataType)
                 val mx =
                   if (pv.asInstanceOf[Comparable[Any]].compareTo(nv) >= 0) pv
                   else nv
-                Some(k -> encodeStat(mx))
+                Some(k -> VersionInfo.encode(mx))
               } catch { case _: Exception => None } // type drift
           }
         }
@@ -460,10 +442,12 @@ class Table(engine: GraftEngine, val name: String, val mode: String = "r",
   def append(df: DataFrame): Unit = if (connected) buffer += df
 
   /** Force buffered writes to the active version (node.py:407-414).
-    * Appends into an EXISTING version follow that version's physical
-    * layout — including its ORIGINAL bucket count when `init(bucketBy)`
-    * has since changed it (mixed layouts/counts in one dir would corrupt
-    * bucket-pruned reads); the next upsert/replace migrates the layout.
+    * Appends follow the version's recorded layout ([[VersionInfo.buckets]])
+    * — its ORIGINAL bucket count when `init(bucketBy)` has since changed it
+    * (mixed layouts/counts in one dir would corrupt bucket-pruned reads);
+    * the next upsert/replace migrates the layout. A version that holds no
+    * file yet (a first flush, or one after `reset()`) takes the table's
+    * current bucket count as its record first.
     * A local batch (see the class doc) gets its monotonic ids on the
     * driver, so the write is the flush's only Spark job; within
     * [[inOneTaskIfSmall]]'s bound that job is one task, one file per bucket.
@@ -472,24 +456,18 @@ class Table(engine: GraftEngine, val name: String, val mode: String = "r",
     val batch = buffer.reduce(_.unionByName(_, allowMissingColumns = true))
     val isNew = manifest.activeVersion.isEmpty
     val vid = manifest.activeVersion.getOrElse {
-      val (_, v) = catalog.createVersion(name)
+      val (_, v) = catalog.createVersion(name, bucketCount)
       catalog.setActive(name, Some(v), "create")
       v
     }
-    // appends into an existing dir follow that dir's layout, but only a
-    // marker-ATTESTED count may (re)write the marker: promoting the
-    // markerless heuristic (max __bucket index + 1, which undercounts
-    // when top buckets are empty) to marker status would later authorize
-    // bucket-pruned reads against a dir hashed with a different modulus
-    val (buckets, attest) =
-      if (activeFiles.nonEmpty) (layoutBuckets(vid), exactLayoutBuckets(vid).isDefined)
-      else (bucketCount, true)
     // snapshot the dir BEFORE the write so the stats stamp can read only
     // the footers this append created (an append-heavy table otherwise
     // pays O(all files) driver-side footer reads per flush — quadratic
     // cumulative I/O for exactly the streaming workload the manifest
     // stamps exist to serve)
     val preExisting = filesIn(vid).map(_.getAbsolutePath).toSet
+    if (preExisting.isEmpty && layoutOf(vid) != bucketCount)
+      catalog.setVersionBuckets(name, vid, bucketCount)
     val prevSchema = manifest.versions.find(_.id == vid)
       .flatMap(_.schema).flatMap(SchemaInternals.parse)
     val decorated = decorate(conform(batch))
@@ -507,8 +485,7 @@ class Table(engine: GraftEngine, val name: String, val mode: String = "r",
     // the stamp BEFORE writing — readers infer until the restamp below
     if (prevSchema.exists(s => !mergeSchemas(s, out.schema).contains(s)))
       catalog.clearVersionSchema(name, vid)
-    writeInto(out, catalog.versionDir(name, vid).toString,
-      SaveMode.Append, buckets, attest)
+    writeInto(out, vid)
     // cleared at the DURABILITY point — after the parquet append commits,
     // before stats stamping / event recording. A write failure keeps the
     // buffer (the retry writes the rows instead of silently no-opping);
@@ -535,8 +512,8 @@ class Table(engine: GraftEngine, val name: String, val mode: String = "r",
 
   // --- hash-bucketed layout (the 100 TB upsert/point-lookup path) ---
 
-  /** Bucket count, when this table is laid out as `__bucket=K` partition
-    * dirs hashed on the unique key (declared via `init(bucketBy = n)`).
+  /** Bucket count new versions are minted with, when this table hashes
+    * its rows on the unique key into buckets (`init(bucketBy = n)`).
     */
   private def bucketCount: Option[Int] =
     manifest.meta.numBuckets.filter(_ => manifest.meta.uniqueOn.nonEmpty)
@@ -545,45 +522,11 @@ class Table(engine: GraftEngine, val name: String, val mode: String = "r",
     df.withColumn("__bucket",
       pmod(hash(manifest.meta.uniqueOn.map(col): _*), lit(n)))
 
-  /** The bucket count this version dir was PHYSICALLY written with, or None
-    * if unbucketed. Source of truth is the `_BUCKETS` sidecar marker every
-    * bucketed write drops (underscore-prefixed files are invisible to
-    * Spark's file index); markerless legacy dirs fall back to max
-    * `__bucket=` index + 1 — a HEURISTIC that undercounts when the top
-    * buckets happen to be empty, so it is good enough only for continuing
-    * an append layout (see flush). Tracking this per version is what makes
-    * changing `init(bucketBy = m)` on an already-bucketed table safe: meta
-    * carries the NEW count while each version remembers the count its dirs
-    * were hashed with.
-    */
-  private def layoutBuckets(vid: String): Option[Int] =
-    exactLayoutBuckets(vid).orElse {
-      val dir = catalog.versionDir(name, vid)
-      Option(dir.toFile.listFiles((f: java.io.File) =>
-          f.isDirectory && f.getName.startsWith("__bucket=")))
-        .filter(_.nonEmpty)
-        .map(_.map(_.getName.stripPrefix("__bucket=").toInt).max + 1)
-    }
+  /** The layout version `vid` records ([[VersionInfo.buckets]]). */
+  private def layoutOf(vid: String): Option[Int] =
+    manifest.versions.find(_.id == vid).flatMap(_.buckets)
 
-  /** Marker-attested bucket count ONLY. The bucket-PRUNED paths (upsert's
-    * partial rewrite, lookup's single-bucket scan) gate on this: a
-    * heuristic count that coincidentally equals meta's could authorize
-    * pruning against a dir physically hashed with a different modulus —
-    * missed rows and duplicate keys. No marker => no pruning, ever.
-    */
-  private def exactLayoutBuckets(vid: String): Option[Int] = {
-    val marker = catalog.versionDir(name, vid).resolve(Table.BucketMarker)
-    if (java.nio.file.Files.exists(marker))
-      Some(new String(java.nio.file.Files.readAllBytes(marker),
-        java.nio.charset.StandardCharsets.UTF_8).trim.toInt)
-    else None
-  }
-
-  /** Write honoring the given physical bucket count (callers appending to
-    * an existing dir pass the DIR's layout so one version never mixes).
-    * `attestLayout = false` skips the `_BUCKETS` marker — for appends
-    * whose count came from the markerless heuristic, which must never
-    * gain marker (pruning-authorizing) status.
+  /** Append `df` to version `vid` in the layout the version records.
     *
     * Every Spark write of the engine (flush, upsert, replace, truncate,
     * compact) comes through here, and each carries its own filesystem:
@@ -595,18 +538,14 @@ class Table(engine: GraftEngine, val name: String, val mode: String = "r",
     * this write's options: the session's Hadoop conf and the `FileSystem`
     * cache stay as they are.
     */
-  private def writeInto(df: DataFrame, dir: String, mode: SaveMode,
-      buckets: Option[Int], attestLayout: Boolean = true): Unit =
-    buckets match {
-      case Some(n) =>
-        withBucket(df, n).write.options(CatalogFileSystem.writeOptions).mode(mode)
-          .partitionBy("__bucket").parquet(dir)
-        if (attestLayout)
-          java.nio.file.Files.write(
-            java.nio.file.Paths.get(dir).resolve(Table.BucketMarker),
-            n.toString.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      case None => df.write.options(CatalogFileSystem.writeOptions).mode(mode).parquet(dir)
+  private def writeInto(df: DataFrame, vid: String): Unit = {
+    val writer = layoutOf(vid) match {
+      case Some(n) => withBucket(df, n).write.partitionBy("__bucket")
+      case None => df.write
     }
+    writer.options(CatalogFileSystem.writeOptions).mode(SaveMode.Append)
+      .parquet(catalog.versionDir(name, vid).toString)
+  }
 
   /** `df` over its driver-held rows when its plan is local — evaluated
     * once, here, so a later write or merge neither re-evaluates nor
@@ -632,14 +571,26 @@ class Table(engine: GraftEngine, val name: String, val mode: String = "r",
       }) out.coalesce(1)
     else out
 
-  /** Insert-or-update on the unique key (node.py:318-334): anti-join the
-    * active version against incoming keys, union, write a new version
-    * (copy-on-write MERGE; last-writer-wins per key). Local input (see
-    * the class doc) whose key columns are all [[Table.driverGroupable]]
-    * is deduped on the driver and re-enters the merge as a
-    * `LocalRelation`: old rows are dropped through a filter on its key set
-    * ([[Table.withoutKeysOf]]), and nothing recomputes the input. Float,
-    * binary and nested keys take the Spark window path and the join.
+  /** Insert-or-update on the unique key (node.py:318-334), one
+    * copy-on-write MERGE into a new version, last writer wins per key:
+    *   1. The buckets the incoming keys hash to are the affected ones —
+    *      pruned only when the active version's recorded layout is the
+    *      table's current bucket count; otherwise (an unbucketed table, a
+    *      `bucketBy` migration) every old row is affected.
+    *   2. Untouched buckets are carried into the new version as file
+    *      copies ([[TableCatalog.copyBuckets]]): O(affected buckets)
+    *      compute instead of O(table), zero shuffle or decode.
+    *   3. The affected old rows lose the incoming keys
+    *      ([[Table.withoutKeysOf]]) and are unioned with the incoming rows.
+    *   4. The result is written in the table's current layout; when the
+    *      rows plus the affected old bytes fit [[inOneTaskIfSmall]]'s
+    *      bound, one task writes it, one file per bucket.
+    * Local input (see the class doc) whose key columns are all
+    * [[Table.driverGroupable]] is deduped and hashed to its buckets on the
+    * driver and re-enters the merge as a `LocalRelation`: old rows are
+    * dropped through a filter on its key set, so the merge is one job, the
+    * write. Float, binary and nested keys take the Spark window path, a
+    * job for the affected buckets, and the join.
     */
   def upsert(df: DataFrame): Unit = if (connected) catalog.withTableLock(name) {
     // the WHOLE read-merge-write holds the table lock (reentrantly shared
@@ -658,73 +609,38 @@ class Table(engine: GraftEngine, val name: String, val mode: String = "r",
         LocalInternals.localFrame(spark, s, Table.lastPerKeyLocal(rows, k)))
     }
     val incoming = pinLocal(decorate(conform(local.getOrElse(Table.lastPerKeySpark(df, keys)))))
-    val oldVid = manifest.activeVersion.filter(_ => activeFiles.nonEmpty)
-    (oldVid, bucketCount) match {
-      // partition-level rewrite is only sound when the version's physical
-      // layout was hashed with the CURRENT bucket count; after a bucketBy
-      // change the full-rewrite branch below migrates to the new count
-      case (Some(vid), Some(n)) if exactLayoutBuckets(vid).contains(n) =>
-        bucketedUpsert(incoming, vid, n)
-      case _ =>
-        val merged = activeDf match {
-          case Some(active) =>
-            incoming.unionByName(Table.withoutKeysOf(active, incoming, keys),
-              allowMissingColumns = true)
-          case None => incoming
-        }
-        val oldBytes = activeFiles.iterator.map(_.length).sum
-        writeNewVersion(inOneTaskIfSmall(merged, incoming, oldBytes),
-          if (hasActiveVersion) "update" else "create")
-    }
-  }
-
-  /** Partition-level copy-on-write MERGE (the 100 TB upsert): hash the
-    * incoming keys to their buckets, REWRITE only the affected `__bucket=K`
-    * dirs (anti-join ∪ incoming, one Spark job over those buckets), and
-    * carry every untouched bucket into the new version as a file-level copy
-    * — O(affected buckets) compute instead of O(table). On an object-store
-    * manifest layout the copy step degenerates to a pointer; here it is a
-    * local file copy, still zero shuffle/decode. Local incoming rows are
-    * hashed to their buckets on the driver ([[Table.bucketFn]]) and drop
-    * old rows by key on the driver ([[Table.withoutKeysOf]]), so the merge
-    * is one job, the write; when the rows plus
-    * the affected buckets' bytes fit [[inOneTaskIfSmall]]'s bound, one task
-    * writes them and every rewritten bucket holds one file.
-    */
-  private def bucketedUpsert(incoming: DataFrame, oldVid: String, n: Int): Unit = {
-    val keys = manifest.meta.uniqueOn
-    val oldDir = catalog.versionDir(name, oldVid)
-    // ≤ n values, never O(data): hashed on the driver for local rows
-    val affected = LocalInternals.localRows(incoming).flatMap { case (s, rows) =>
-      Table.localKeys(s, keys).map(k => rows.map(Table.bucketFn(k, n)).toSet)
-    }.getOrElse(withBucket(incoming, n).select("__bucket")
-      .distinct().collect().map(_.getInt(0)).toSet)
-    val (_, vid) = catalog.createVersion(name)
-    val newDir = catalog.versionDir(name, vid)
-    oldDir.toFile.listFiles()
-      .filter(f => f.isDirectory && f.getName.startsWith("__bucket="))
-      .filterNot(f => affected.contains(f.getName.stripPrefix("__bucket=").toInt))
-      .foreach { src =>
-        val dst = newDir.resolve(src.getName)
-        java.nio.file.Files.createDirectories(dst)
-        src.listFiles().filter(_.isFile).foreach(f =>
-          java.nio.file.Files.copy(f.toPath, dst.resolve(f.getName)))
+    val eventKind = if (manifest.activeVersion.isDefined) "update" else "create"
+    val oldVid = manifest.activeVersion.filter(catalog.hasDataFiles(name, _))
+    // (bucket count, affected buckets): ≤ n values, never O(data), hashed
+    // on the driver for local rows
+    val pruned = for (v <- oldVid; n <- bucketCount if layoutOf(v).contains(n)) yield
+      n -> LocalInternals.localRows(incoming).flatMap { case (s, rows) =>
+        Table.localKeys(s, keys).map(k => rows.map(Table.bucketFn(k, n)).toSet)
+      }.getOrElse(withBucket(incoming, n).select("__bucket")
+        .distinct().collect().map(_.getInt(0)).toSet)
+    val (_, vid) = catalog.createVersion(name, bucketCount)
+    val (old, oldBytes) = oldVid.fold((Option.empty[DataFrame], 0L)) { v =>
+      pruned match {
+        case Some((n, affected)) =>
+          catalog.copyBuckets(name, v, vid, (0 until n).filterNot(affected))
+          (catalog.bucketScan(spark, name, v, affected.toSeq),
+            catalog.bucketFiles(name, v, affected).map(_.length).sum)
+        case None =>
+          (catalog.versionScan(spark, name, v), catalog.dataFiles(name, v).map(_.length).sum)
       }
-    val kept = catalog.bucketScan(spark, name, oldVid, affected.toSeq)
-      .map(Table.withoutKeysOf(_, incoming, keys)).getOrElse(incoming.limit(0))
-    val merged = incoming.unionByName(kept, allowMissingColumns = true)
-    val keptBytes = affected.toSeq.flatMap(k => Option(oldDir.resolve(s"__bucket=$k").toFile
-      .listFiles()).getOrElse(Array.empty[java.io.File])).map(_.length).sum
-    writeInto(clustered(inOneTaskIfSmall(merged, incoming, keptBytes)),
-      newDir.toString, SaveMode.Append, Some(n))
+    }
+    val merged = old.fold(incoming)(o =>
+      incoming.unionByName(Table.withoutKeysOf(o, incoming, keys), allowMissingColumns = true))
+    writeInto(clustered(inOneTaskIfSmall(merged, incoming, oldBytes)), vid)
     stampVersionStats(vid)
-    catalog.setActive(name, Some(vid), "update")
+    catalog.setActive(name, Some(vid), eventKind)
   }
 
   /** Bucket-pruned point lookup on the unique key — the `auto_indexes`
-    * read path (node.py:277): on a bucketed table, scans exactly the one
-    * `__bucket=K` dir the key hashes to; otherwise a filtered full read
-    * (which still min/max-prunes via write-time clustering).
+    * read path (node.py:277): when the active version records the table's
+    * bucket count, scans exactly the one bucket the key hashes to;
+    * otherwise a filtered full read (which still min/max-prunes via
+    * write-time clustering).
     */
   def lookup(keyValues: Seq[Any]): DataFrame = {
     // dummy/no-data degradation: unconnected or never-written tables have
@@ -739,10 +655,10 @@ class Table(engine: GraftEngine, val name: String, val mode: String = "r",
     val eqFilter = keys.zip(keyValues)
       .map { case (k, v) => col(k) === typedLit(k, v) }.reduce(_ && _)
     (bucketCount, manifest.activeVersion) match {
-      // bucket pruning needs the version's layout count to MATCH the meta
+      // bucket pruning needs the version's recorded count to MATCH the meta
       // count — after a bucketBy change, fall through to the filtered full
       // read (still min/max-pruned by write-time clustering)
-      case (Some(n), Some(vid)) if exactLayoutBuckets(vid).contains(n) =>
+      case (Some(n), Some(vid)) if layoutOf(vid).contains(n) =>
         // evaluate pmod(hash(key...), n) driver-side — a constant
         // expression shouldn't cost a Spark job per point lookup
         val b = try {
@@ -778,7 +694,7 @@ class Table(engine: GraftEngine, val name: String, val mode: String = "r",
     catalog.recordEvent(name, "reset")
     // reference defines replace as reset()+append() (node.py:336-345), so it
     // must share the append path's schema-on-write conformance
-    writeNewVersion(decorate(conform(df)), "create")
+    writeNewVersion(decorate(conform(df)), bucketCount, "create")
   }
 
   /** Delete all rows, keep schema (node.py:347-354). */
@@ -791,17 +707,19 @@ class Table(engine: GraftEngine, val name: String, val mode: String = "r",
     // plain (unbucketed) write: the dynamic-partition writer creates files
     // lazily per row, so zero rows through partitionBy would leave NO
     // parquet files and lose the schema this op promises to keep
-    writeNewVersion(empty, "update", bucketed = false)
+    writeNewVersion(empty, None, "update")
   }
 
   /** Consolidate the ACTIVE version's file layout into a new version with
     * identical rows — small-files compaction for append-heavy tables
     * (every flush writes ≥1 parquet file per task, so a long-running feed
     * degrades every downstream scan with per-file open + footer costs).
-    * Bucketed layouts rewrite through the bucket path (files merge within
-    * each `__bucket=K` dir and the `_BUCKETS` marker re-attests pruning);
-    * plain layouts coalesce to `targetFiles` — coalesce, not repartition:
-    * no shuffle, just fewer, larger files. Write-time clustering
+    * The new version records the active version's layout, even when
+    * `init(bucketBy)` has changed the table's count since (the next
+    * upsert/replace migrates): a bucketed layout merges the files within
+    * each bucket, so lookups keep pruning; a plain layout coalesces to
+    * `targetFiles` — coalesce, not repartition: no shuffle, just fewer,
+    * larger files. Write-time clustering
     * (sortWithinPartitions on the key/role columns) is reapplied so
     * min/max file pruning survives the rewrite. The pointer swap records
     * a "compact" event for observability but does NOT bump the trigger
@@ -822,14 +740,15 @@ class Table(engine: GraftEngine, val name: String, val mode: String = "r",
         "per __bucket dir; targetFiles is only meaningful for plain layouts")
     catalog.withTableLock(name) {
     flush()
+    val layout = manifest.activeVersion.flatMap(layoutOf)
     activeDf.foreach { df =>
       if (df.isEmpty)
         // same guard as truncate: zero rows through the partitionBy writer
         // would emit NO parquet files and lose the schema this op promises
         // to keep — write the empty frame plain instead
-        writeNewVersion(df, "compact", bucketed = false, trigger = false)
+        writeNewVersion(df, None, "compact", trigger = false)
       else {
-        val consolidated = bucketCount match {
+        val consolidated = layout match {
           // One shuffle partition per bucket BEFORE the write: all rows of
           // a bucket land in a single task, so the partitionBy writer
           // emits exactly one file per __bucket dir. Without this, each
@@ -842,18 +761,19 @@ class Table(engine: GraftEngine, val name: String, val mode: String = "r",
             withBucket(df, n).repartition(n, col("__bucket")).drop("__bucket")
           case None => df.coalesce(math.max(1, targetFiles))
         }
-        writeNewVersion(consolidated, "compact", trigger = false)
+        writeNewVersion(consolidated, layout, "compact", trigger = false)
       }
     }
     }
   }
 
-  /** Active pointer := fresh null version; old data stays on disk until
-    * GC'd per retention policy (node.py:399-405, :216-222).
+  /** Active pointer := fresh null version, recording the table's current
+    * layout; old data stays on disk until GC'd per retention policy
+    * (node.py:399-405, :216-222).
     */
   def reset(): Unit = if (connected) {
     buffer.clear()
-    val (_, vid) = catalog.createVersion(name)
+    val (_, vid) = catalog.createVersion(name, bucketCount)
     catalog.setActive(name, Some(vid), "reset")
   }
 
@@ -877,7 +797,7 @@ class Table(engine: GraftEngine, val name: String, val mode: String = "r",
 
   // --- version ops + signals (node.py:224-230, :375-397) ---
 
-  def createNewVersion(): String = catalog.createVersion(name)._2
+  def createNewVersion(): String = catalog.createVersion(name, bucketCount)._2
   def getActiveVersion: Option[String] = manifest.activeVersion
   def setActiveVersion(vid: String): Unit = catalog.setActive(name, Some(vid), "update")
   def signalCreate(): Unit = if (connected) catalog.recordEvent(name, "create")
@@ -950,22 +870,16 @@ class Table(engine: GraftEngine, val name: String, val mode: String = "r",
     if (usable.nonEmpty) df.sortWithinPartitions(usable.map(col): _*) else df
   }
 
-  private def writeNewVersion(df: DataFrame, eventKind: String,
-      bucketed: Boolean = true, trigger: Boolean = true): Unit = {
-    val (_, vid) = catalog.createVersion(name)
-    writeInto(clustered(df), catalog.versionDir(name, vid).toString,
-      SaveMode.Overwrite, bucketCount.filter(_ => bucketed))
+  private def writeNewVersion(df: DataFrame, buckets: Option[Int], eventKind: String,
+      trigger: Boolean = true): Unit = {
+    val (_, vid) = catalog.createVersion(name, buckets)
+    writeInto(clustered(df), vid)
     stampVersionStats(vid)
     catalog.setActive(name, Some(vid), eventKind, trigger)
   }
 }
 
 object Table {
-  /** Sidecar file recording a version dir's physical bucket count.
-    * Underscore prefix keeps it invisible to Spark's parquet file index.
-    */
-  val BucketMarker = "_BUCKETS"
-
   /** Test hook: runs after a flush's parquet append committed, before the
     * stats stamp — lets specs inject a post-durability failure and pin
     * that it neither duplicates rows on retry nor leaves a stale stamp.

@@ -5,7 +5,8 @@ import java.nio.charset.StandardCharsets
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.graft.SchemaInternals
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.types.{ByteType, DataType, DateType, DecimalType,
+  DoubleType, FloatType, IntegerType, LongType, ShortType, StructType, TimestampType}
 import org.json4s._
 import org.json4s.jackson.Serialization
 
@@ -40,7 +41,44 @@ case class VersionInfo(id: String, createdAt: Long,
     // versions, versions holding a file without the Spark footer key, and
     // a version mid-way through a column-adding append (cleared before the
     // write, restamped after) — those reads fall back to `mergeSchema`.
-    schema: Option[String] = None)
+    schema: Option[String] = None,
+    // the version's physical layout: `Some(n)` = its rows are hashed on the
+    // unique key into n `__bucket=K` dirs, None = flat files. Recorded under
+    // the table lock BEFORE the version's first data file exists (at
+    // [[TableCatalog.createVersion]], or by the first write into a version
+    // minted empty), so every later write into the version and every
+    // bucket-pruned read of it follows this record, never the table's
+    // current `numBuckets`, which `init(bucketBy)` may have changed since.
+    buckets: Option[Int] = None)
+
+object VersionInfo {
+  /** A [[VersionInfo.cursorMax]] value, and the streaming source's offset:
+    * timestamps as ISO-8601 instants, everything else in its SQL string
+    * form (a `java.sql.Date` prints as an ISO date).
+    */
+  def encode(v: Any): String = v match {
+    case ts: java.sql.Timestamp => ts.toInstant.toString
+    case other => other.toString
+  }
+
+  /** Inverse of [[encode]] for a column of type `dt`, as the runtime class
+    * a scan of that column returns, so decoded and scanned values compare
+    * with a raw `Comparable` cast. Throws on a string that is not of `dt`;
+    * types without a case come back as the string itself.
+    */
+  def decode(enc: String, dt: DataType): Any = dt match {
+    case LongType => enc.toLong
+    case IntegerType => enc.toInt
+    case ShortType => enc.toShort
+    case ByteType => enc.toByte
+    case DoubleType => enc.toDouble
+    case FloatType => enc.toFloat
+    case DateType => java.sql.Date.valueOf(enc)
+    case _: DecimalType => new java.math.BigDecimal(enc)
+    case TimestampType => java.sql.Timestamp.from(java.time.Instant.parse(enc))
+    case _ => enc
+  }
+}
 
 /** Catalog event log entry (reference node.py:387-397 signal_create/update/
   * reset) — drives downstream node triggering in the graph runner.
@@ -58,9 +96,10 @@ case class TableMeta(
     addMonotonicId: Option[String] = None, // field NAME for the base32 id column
     autoIndexes: Boolean = true,
     highWaterMark: Long = 0L,
-    // hash-bucket count over uniqueOn: versions are laid out as
-    // __bucket=K partition dirs so upsert rewrites only affected buckets
-    // and point lookups scan a single bucket (the 100 TB upsert path)
+    // hash-bucket count over uniqueOn for versions minted from now on: they
+    // are laid out as __bucket=K partition dirs so upsert rewrites only
+    // affected buckets and point lookups scan a single bucket (the 100 TB
+    // upsert path); each version records its own count (VersionInfo.buckets)
     numBuckets: Option[Int] = None,
     // retention policy (reference node.py:403-404): non-active versions
     // older than this are swept automatically on every version swap.
@@ -89,7 +128,9 @@ case class TableManifest(
   * platform's table store (SURVEY.md §1.1, §4.3).
   *
   * Layout: `<root>/<table>/manifest.json` + `<root>/<table>/<versionId>/`
-  * (parquet dir per version). Mutations are metadata-only and O(1) in
+  * (parquet dir per version; a bucketed version holds one `__bucket=K`
+  * dir per bucket, its count recorded in the manifest as
+  * [[VersionInfo.buckets]]). Mutations are metadata-only and O(1) in
   * data size: at 100 TB the manifest stays a few KB per version — data
   * never moves through the driver; only Spark jobs touch the version
   * directories. The one exception is [[versionScan]], the canonical (lazy,
@@ -178,24 +219,22 @@ class TableCatalog(val root: Path) {
   def versionDir(name: String, vid: String): Path = tableDir(name).resolve(vid)
   private def manifestPath(name: String): Path = tableDir(name).resolve("manifest.json")
 
-  /** Every parquet data file of one version — the SINGLE owner of the
-    * version-dir physical layout (flat files, or `__bucket=K` partition
-    * subdirs for bucketed tables). Table and the streaming source both
-    * read through here so the two paths can never drift. Every listFiles
-    * is null-guarded: a retention sweep may delete the dir between checks
+  /** Every parquet data file of one version. This class is the SINGLE
+    * owner of the version-dir physical layout (flat files, or one
+    * `__bucket=K` partition dir per bucket of a bucketed version): Table and
+    * the streaming source list, scan and copy version files only through
+    * its methods, so no path can drift from another. Every listing is
+    * null-guarded: a retention sweep may delete the dir between checks
     * (documented race) — that must read as "no files", not NPE.
     */
   def dataFiles(name: String, vid: String): Array[java.io.File] = {
     val d = versionDir(name, vid).toFile
-    val top = Option(d.listFiles((f: java.io.File) =>
-      f.getName.endsWith(".parquet"))).getOrElse(Array.empty[java.io.File])
-    val nested = Option(d.listFiles((f: java.io.File) =>
-      f.isDirectory && f.getName.startsWith("__bucket=")))
-      .getOrElse(Array.empty[java.io.File])
-      .flatMap(b => Option(b.listFiles((f: java.io.File) =>
-        f.getName.endsWith(".parquet"))).getOrElse(Array.empty[java.io.File]))
-    top ++ nested
+    parquetIn(d) ++ bucketDirs(d).flatMap(parquetIn)
   }
+
+  /** The data files of the given buckets of a bucketed version. */
+  def bucketFiles(name: String, vid: String, buckets: Iterable[Int]): Array[java.io.File] =
+    buckets.toArray.flatMap(k => parquetIn(bucketDir(name, vid, k).toFile))
 
   /** Does the version dir hold at least one data file? Short-circuits at
     * the first hit — the streaming source polls this shape per trigger,
@@ -204,14 +243,32 @@ class TableCatalog(val root: Path) {
     */
   def hasDataFiles(name: String, vid: String): Boolean = {
     val d = versionDir(name, vid).toFile
-    val top = Option(d.listFiles((f: java.io.File) =>
-      f.getName.endsWith(".parquet"))).getOrElse(Array.empty[java.io.File])
-    top.nonEmpty || Option(d.listFiles((f: java.io.File) =>
+    parquetIn(d).nonEmpty || bucketDirs(d).exists(b => parquetIn(b).nonEmpty)
+  }
+
+  /** Copy the given buckets of version `from` into version `to`, file by
+    * file (`.crc` files included): an upsert's carry-over of the buckets
+    * its incoming keys do not touch. Buckets `from` lacks are skipped.
+    */
+  def copyBuckets(name: String, from: String, to: String, buckets: Iterable[Int]): Unit =
+    buckets.foreach { k =>
+      Option(bucketDir(name, from, k).toFile.listFiles()).foreach { files =>
+        val dst = Files.createDirectories(bucketDir(name, to, k))
+        files.filter(_.isFile).foreach(f => Files.copy(f.toPath, dst.resolve(f.getName)))
+      }
+    }
+
+  private def bucketDir(name: String, vid: String, k: Int): Path =
+    versionDir(name, vid).resolve(s"__bucket=$k")
+
+  private def bucketDirs(d: java.io.File): Array[java.io.File] =
+    Option(d.listFiles((f: java.io.File) =>
       f.isDirectory && f.getName.startsWith("__bucket=")))
       .getOrElse(Array.empty[java.io.File])
-      .exists(b => Option(b.listFiles((f: java.io.File) =>
-        f.getName.endsWith(".parquet"))).exists(_.nonEmpty))
-  }
+
+  private def parquetIn(d: java.io.File): Array[java.io.File] =
+    Option(d.listFiles((f: java.io.File) => f.getName.endsWith(".parquet")))
+      .getOrElse(Array.empty[java.io.File])
 
   /** The canonical scan of one version: user-facing schema (the commit
     * stamp, or `mergeSchema` inference for unstamped versions; the
@@ -231,8 +288,7 @@ class TableCatalog(val root: Path) {
     */
   def bucketScan(spark: SparkSession, name: String, vid: String,
       buckets: Seq[Int]): Option[DataFrame] = {
-    val dirs = buckets.sorted.map(k => versionDir(name, vid).resolve(s"__bucket=$k"))
-      .filter(p => Files.isDirectory(p))
+    val dirs = buckets.sorted.map(bucketDir(name, vid, _)).filter(Files.isDirectory(_))
     if (dirs.isEmpty) None else scan(spark, name, vid, dirs)
   }
 
@@ -353,19 +409,33 @@ class TableCatalog(val root: Path) {
     manifestCache(m.name) = m
   }
 
-  /** Mint a new (not-yet-active) version; returns (manifest, versionId). */
-  def createVersion(name: String): (TableManifest, String) = {
+  /** Mint a new (not-yet-active) version with the physical layout
+    * `buckets` ([[VersionInfo.buckets]]); returns (manifest, versionId).
+    */
+  def createVersion(name: String, buckets: Option[Int] = None): (TableManifest, String) = {
     // mutate's return is OUR written manifest (a local immutable value),
     // so versions.last is the version this call minted — no outer lock
     val m2 = mutate(name) { m =>
       val vid = f"v${m.versionCounter + 1}%06d"
       Files.createDirectories(versionDir(name, vid))
       m.copy(
-        versions = m.versions :+ VersionInfo(vid, System.currentTimeMillis()),
+        versions = m.versions :+ VersionInfo(vid, System.currentTimeMillis(), buckets = buckets),
         versionCounter = m.versionCounter + 1)
     }
     (m2, m2.versions.last.id)
   }
+
+  /** Re-record the layout of a version that holds no data file yet (one
+    * minted by a reset, or whose first write crashed), taken by its first
+    * write under the table lock: no file can disagree with the record.
+    */
+  def setVersionBuckets(name: String, vid: String, buckets: Option[Int]): TableManifest =
+    mutate(name) { m =>
+      require(!hasDataFiles(name, vid),
+        s"table $name: version $vid already holds data; its layout is fixed")
+      m.copy(versions = m.versions.map(v =>
+        if (v.id == vid) v.copy(buckets = buckets) else v))
+    }
 
   /** Swap the active pointer and append the triggering event; then apply
     * the table's retention policy to the now-superseded versions.

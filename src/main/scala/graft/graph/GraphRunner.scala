@@ -127,17 +127,11 @@ class GraphRunner(
       // name collision, read — or for the output, REPLACE — the wrong
       // table. The node-id prefix (applied identically by [[render]])
       // keeps two SQL nodes with the same port name from clobbering each
-      // other's views when a cascade batch runs them concurrently.
-      val result = {
-        n.inputs.keys.foreach { port =>
-          eng.table(port).read.createOrReplaceTempView(viewName(n, port))
-        }
-        // drop after eager analysis: port names are node-local aliases and
-        // must not leak into the NEXT node's SQL resolution scope
-        try spark.sql(sql)
-        finally n.inputs.keys.foreach(p =>
-          spark.catalog.dropTempView(viewName(n, p)))
-      }
+      // other's views when a cascade batch runs them concurrently. The
+      // views are dropped after eager analysis: port names are node-local
+      // aliases and must not leak into the NEXT node's SQL resolution scope
+      val result = GraftEngine.withViews(spark,
+        n.inputs.keys.toSeq.map(p => viewName(n, p) -> eng.table(p).read))(spark.sql(sql))
       eng.table(outPort, "w").replace(result)
     } else {
       val fn = n.nodeFile.flatMap(fns.get).getOrElse(
@@ -226,10 +220,7 @@ class GraphRunner(
     * triggers, services/trigger.py:10-22; per-node execution slices,
     * node.py:465-500).
     */
-  private[graft] var cascadeParallelism: Int =
-    sys.env.get("GRAFT_CASCADE_PARALLELISM")
-      .flatMap(v => scala.util.Try(v.trim.toInt).toOption)
-      .filter(_ >= 1).getOrElse(4)
+  private[graft] var cascadeParallelism: Int = 4
 
   /** Two nodes conflict when either writes a store the other touches:
     * write-write (both append/replace the same table), or write-read (one

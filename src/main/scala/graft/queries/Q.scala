@@ -366,10 +366,6 @@ object Q {
     when(n === 0, lit(null).cast("double")).otherwise(dsum(c) / n)
   }
 
-  /** Oracle-side equivalents (DuckDB ANSI SQL). */
-  def oSum(e: String): String = s"CAST(SUM(CAST($e AS DECIMAL(20,6))) AS DOUBLE)"
-  def oAvg(e: String): String = s"CAST(SUM(CAST($e AS DECIMAL(20,6))) AS DOUBLE) / COUNT($e)"
-
   /** Fixed-point fast path for [[dsum]]: exact micro-unit sum in LONG
     * arithmetic. Per row, `floor(x·1e6 + 0.5)` recovers the 6-decimal
     * lattice integer exactly — the double x sits within ~1e-5 of its

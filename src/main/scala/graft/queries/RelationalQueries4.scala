@@ -621,9 +621,8 @@ object RelationalQueries4 {
       // production layout sizes buckets to the data — one pre-sorted file
       // per bucket only stays healthy while a bucket fits comfortably in
       // a task (~a few million rows); at 100 TB you'd set this to
-      // thousands. GRAFT_Q61_BUCKETS overrides for scale experiments.
-      val buckets = sys.env.get("GRAFT_Q61_BUCKETS")
-        .map(_.toInt).getOrElse(8)
+      // thousands.
+      val buckets = 8
       // Lay the tables out ONCE per (application, fixture dir) — that is
       // the pattern itself: the bucketed layout is a one-time cost
       // amortized over every subsequent join, so only the FIRST
@@ -662,8 +661,8 @@ object RelationalQueries4 {
           // before any read trusts it (cheap local listing; on a real
           // lake this is one FileSystem.listStatus per table). The
           // invariant is AT MOST one file per bucket id — an EMPTY
-          // bucket writes no file at all (normal when GRAFT_Q61_BUCKETS
-          // exceeds the key spread, the exact scale-experiment case), so
+          // bucket writes no file at all (normal when the bucket count
+          // exceeds the key spread), so
           // requiring exactly `buckets` files would fail a correct
           // layout. A non-local scratch path returns a null listing;
           // the check is advisory belt-and-braces, so skip rather than

@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.sources.{DataSourceRegister, StreamSourceProvider}
 import org.apache.spark.sql.types.{StructType, TimestampType}
 
-import graft.catalog.TableCatalog
+import graft.catalog.{TableCatalog, VersionInfo}
 
 /** Structured Streaming source over a catalog table (SURVEY.md §7.6): the
   * engine's batch-incremental cursor (graft.api.Stream — strictly-greater-
@@ -147,18 +147,6 @@ class GraftTableSource(sqlContext: SQLContext, cat: TableCatalog,
   private def activeDf: Option[DataFrame] =
     activeVid.flatMap(versionDf)
 
-  /** The ordering value as an offset string: timestamps canonicalize to
-    * ISO-8601 instants (cast back losslessly at micro precision — the
-    * engine's timestamp resolution); everything else round-trips through
-    * its SQL string form. The manifest's `cursorMax` stamps use the SAME
-    * encoding (Table.footerStats), so manifest-served and scan-served
-    * offsets are interchangeable.
-    */
-  private def encode(v: Any): String = v match {
-    case ts: java.sql.Timestamp => ts.toInstant.toString
-    case other => other.toString
-  }
-
   private def cursorCol = col(orderBy)
 
   /** Highest offset value ever RETURNED, for clamping: a replace()/
@@ -205,28 +193,17 @@ class GraftTableSource(sqlContext: SQLContext, cat: TableCatalog,
     fs.rename(tmp, hwPath)
   }
 
-  /** Inverse of [[encode]] against the cursor column's type. Every type a
+  /** An offset string decoded against the cursor column's type. Offsets
+    * use the encoding of the manifest's `cursorMax` stamps
+    * ([[VersionInfo.encode]]), so manifest-served and scan-served offsets
+    * are interchangeable. Every type a
     * cursor column can legally carry must decode to the SAME runtime class
     * a scan would return: clamp() compares the persisted high water against
     * scanned values with a raw Comparable cast, and a String-vs-Date
     * mismatch after a stream restart throws on every subsequent trigger.
     */
   private def decode(enc: String): Any =
-    schema.fields.find(_.name == orderBy).map(_.dataType) match {
-      case Some(org.apache.spark.sql.types.LongType) => enc.toLong
-      case Some(org.apache.spark.sql.types.IntegerType) => enc.toInt
-      case Some(org.apache.spark.sql.types.ShortType) => enc.toShort
-      case Some(org.apache.spark.sql.types.ByteType) => enc.toByte
-      case Some(org.apache.spark.sql.types.DoubleType) => enc.toDouble
-      case Some(org.apache.spark.sql.types.FloatType) => enc.toFloat
-      case Some(org.apache.spark.sql.types.DateType) =>
-        java.sql.Date.valueOf(enc) // encode: java.sql.Date.toString = ISO date
-      case Some(_: org.apache.spark.sql.types.DecimalType) =>
-        new java.math.BigDecimal(enc)
-      case Some(TimestampType) =>
-        java.sql.Timestamp.from(java.time.Instant.parse(enc))
-      case _ => enc
-    }
+    schema.fields.find(_.name == orderBy).fold[Any](enc)(f => VersionInfo.decode(enc, f.dataType))
 
   private def clamp(v: Any): Any = {
     val keep = highWater match {
@@ -235,7 +212,7 @@ class GraftTableSource(sqlContext: SQLContext, cat: TableCatalog,
     }
     if (!keep) {
       highWater = Some(v)
-      persistHighWater(encode(v))
+      persistHighWater(VersionInfo.encode(v))
     }
     highWater.get
   }
@@ -283,8 +260,8 @@ class GraftTableSource(sqlContext: SQLContext, cat: TableCatalog,
         vid.flatMap(versionDf)
           .flatMap(df => Option(df.agg(max(cursorCol)).head.get(0)))
     }
-    observed.map(v => CursorOffset(encode(clamp(v)), vid))
-      .orElse(highWater.map(v => CursorOffset(encode(v), vid)))
+    observed.map(v => CursorOffset(VersionInfo.encode(clamp(v)), vid))
+      .orElse(highWater.map(v => CursorOffset(VersionInfo.encode(v), vid)))
   }
 
   /** The batch plan for an offset range, minus the V1 streaming tag —

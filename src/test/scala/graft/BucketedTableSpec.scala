@@ -10,6 +10,10 @@ class BucketedTableSpec extends SparkSpec {
 
   private def engine() = new GraftEngine(spark, freshRoot())
 
+  /** The bucket count a version's manifest entry records. */
+  private def recorded(e: GraftEngine, table: String, vid: String): Option[Int] =
+    e.catalog.refresh(table).flatMap(_.versions.find(_.id == vid)).flatMap(_.buckets)
+
   test("bucketBy lays versions out as __bucket=K dirs; read hides the column") {
     val e = engine()
     val t = e.table("b1", "w").init(uniqueOn = Seq("id"), bucketBy = 4)
@@ -80,10 +84,8 @@ class BucketedTableSpec extends SparkSpec {
     val t = e.table("b7", "w").init(uniqueOn = Seq("id"), bucketBy = 4)
     t.append((1L to 40L).map(i => (i, s"old$i")).toDF("id", "v")); t.flush()
     val v1 = t.getActiveVersion.get
-    // version dir remembers the count it was hashed with
-    assert(java.nio.file.Files.readAllLines(
-      e.catalog.versionDir("b7", v1).resolve(graft.api.Table.BucketMarker))
-      .get(0).trim == "4")
+    // the version records the count it was hashed with
+    assert(recorded(e, "b7", v1) == Some(4))
 
     t.init(uniqueOn = Seq("id"), bucketBy = 8) // meta count now differs from layout
     // lookup pre-migration: pruned path would hash with n=8 against a
@@ -103,9 +105,7 @@ class BucketedTableSpec extends SparkSpec {
     assert(rows.toMap.apply(13L) == "NEW" && rows.toMap.apply(41L) == "old41")
     // migrated version is hashed with (and remembers) the new count
     val v2 = t.getActiveVersion.get
-    assert(java.nio.file.Files.readAllLines(
-      e.catalog.versionDir("b7", v2).resolve(graft.api.Table.BucketMarker))
-      .get(0).trim == "8")
+    assert(recorded(e, "b7", v2) == Some(8))
     assert(t.lookup(Seq(13L)).as[(Long, String)].collect().toSeq == Seq((13L, "NEW")))
     // and partition-level upsert works again on the migrated layout
     t.upsert(Seq((13L, "NEWER")).toDF("id", "v"))
@@ -135,23 +135,31 @@ class BucketedTableSpec extends SparkSpec {
     assert(vdir.listFiles().exists(_.getName.startsWith("__bucket=")))
   }
 
-  test("heuristic-layout append never mints a _BUCKETS marker") {
-    // regression: writeInto used to stamp the marker with whatever count
-    // it wrote with — promoting the markerless heuristic (max __bucket
-    // index + 1, an undercount when top buckets are empty) to the
-    // pruning-authorizing attestation would mis-route lookups/upserts
-    import spark.implicits._
-    val e = new GraftEngine(spark, freshRoot())
+  test("reset() on a bucketed table records the layout before any file exists") {
+    val e = engine()
     val t = e.table("b9", "w").init(uniqueOn = Seq("id"), bucketBy = 4)
-    t.upsert((1L to 12L).map(i => (i, s"v$i")).toDF("id", "v"))
-    val vdir = e.catalog.versionDir("b9", t.getActiveVersion.get)
-    val marker = vdir.resolve("_BUCKETS")
-    assert(java.nio.file.Files.exists(marker))
-    java.nio.file.Files.delete(marker) // simulate a legacy markerless dir
-    t.append(Seq((13L, "m")).toDF("id", "v")); t.flush()
-    assert(!java.nio.file.Files.exists(marker),
-      "append must not attest a heuristic bucket count")
-    // data still complete through the filtered-full-read fallback
-    assert(t.read.count() == 13)
+    t.append((1L to 12L).map(i => (i, s"v$i")).toDF("id", "v")); t.flush()
+    t.reset()
+    val vid = t.getActiveVersion.get
+    assert(!e.catalog.hasDataFiles("b9", vid))
+    assert(recorded(e, "b9", vid) == Some(4))
+  }
+
+  test("reset() then init(bucketBy = m): the first flush lays out m buckets, lookup prunes to one") {
+    val e = engine()
+    val t = e.table("b10", "w").init(uniqueOn = Seq("id"), bucketBy = 4)
+    t.append((1L to 64L).map(i => (i, s"old$i")).toDF("id", "v")); t.flush()
+    t.reset()
+    t.init(uniqueOn = Seq("id"), bucketBy = 8)
+    t.append((1L to 64L).map(i => (i, s"v$i")).toDF("id", "v")); t.flush()
+    val vid = t.getActiveVersion.get
+    assert(recorded(e, "b10", vid) == Some(8))
+    val dirs = e.catalog.versionDir("b10", vid).toFile.listFiles()
+      .filter(_.getName.startsWith("__bucket=")).map(_.getName).toSet
+    assert(dirs == (0 until 8).map(k => s"__bucket=$k").toSet)
+    val hit = t.lookup(Seq(13L))
+    assert(hit.as[(Long, String)].collect().toSeq == Seq((13L, "v13")))
+    val scanned = hit.inputFiles.map(f => new org.apache.hadoop.fs.Path(f).getParent.getName).toSet
+    assert(scanned.size == 1 && dirs(scanned.head), s"lookup scanned $scanned")
   }
 }

@@ -27,13 +27,11 @@ class CatalogFileSystemSpec extends SparkSpec {
 
   /** Mode of every path under `dir`, keyed by its relative path with part
     * file names generalised, so two writes of the same rows line up.
-    * The `_BUCKETS` marker is the engine's own file, not a Spark write.
     */
   private def modes(dir: String): Map[String, Set[Int]] = {
     val root = Paths.get(dir)
     val walk = Files.walk(root)
     try walk.iterator().asScala.filter(_ != root).toSeq
-      .filterNot(_.getFileName.toString == Table.BucketMarker)
       .groupBy(p => root.relativize(p).toString.replaceAll("part-[^/]*", "part-*"))
       .map { case (k, ps) => k -> ps.map(mode).toSet }
     finally walk.close()
@@ -78,7 +76,8 @@ class CatalogFileSystemSpec extends SparkSpec {
     up.upsert(batch(1, 200))
     up.upsert(batch(150, 350))
     val upDir = dirOf(up)
-    assert(Files.exists(Paths.get(upDir, Table.BucketMarker)), "not the bucketed path")
+    assert(up.manifest.versions.find(_.id == up.getActiveVersion.get).flatMap(_.buckets)
+      .contains(8), "not the bucketed path")
     assert(modes(upDir) == stock(up.read, bucketed = true))
     dataFilesKeepCrc(upDir)
 

@@ -88,11 +88,7 @@ class PlanAssertionsSpec extends SparkSpec {
     assert(i >= 0, p)
     val below = p.substring(i)
     assert(!below.contains("Exchange") && !below.contains("+- Sort"), below)
-    // derive the expected count from the same env knob the query honors,
-    // so a stray GRAFT_Q61_BUCKETS from a scale experiment doesn't turn
-    // into a confusing plan-dump failure
-    val nb = sys.env.get("GRAFT_Q61_BUCKETS").map(_.toInt).getOrElse(8)
-    assert(s"SelectedBucketsCount: $nb out of $nb".r.findAllIn(p).size == 2, p)
+    assert("SelectedBucketsCount: 8 out of 8".r.findAllIn(p).size == 2, p)
     assert(p.contains("Bucketed: true"), p)
   }
 

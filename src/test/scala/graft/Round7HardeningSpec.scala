@@ -66,6 +66,24 @@ class Round7HardeningSpec extends SparkSpec {
       "a column absent from the version's first stamp must stay unstamped")
   }
 
+  test("appends merge a timestamp's stamped max as an instant; timestamp_ntz stays unstamped") {
+    val e = new GraftEngine(spark, freshRoot())
+    val t = e.table("tsstamp", "w")
+    def batch(id: Long, at: String) = Seq((id, at)).toDF("id", "at").select(col("id"),
+      to_timestamp(col("at")).as("ts"), to_timestamp_ntz(col("at")).as("ntz"))
+    // INT96, Spark's default, has no usable stats: stamps need INT64
+    spark.conf.set("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
+    try {
+      t.append(batch(1L, "2026-01-02 03:04:05")); t.flush()
+      // a LOWER timestamp: the merged max must not regress
+      t.append(batch(2L, "2026-01-01 00:00:00")); t.flush()
+    } finally spark.conf.unset("spark.sql.parquet.outputTimestampType")
+    val info = t.manifest.versions.find(_.id == t.manifest.activeVersion.get).get
+    assert(info.cursorMax.exists(_.get("ts").contains("2026-01-02T03:04:05Z")))
+    // a local date-time has no instant the offset codec could round-trip
+    assert(info.cursorMax.exists(!_.contains("ntz")))
+  }
+
   test("init() preserves autoIndexes when a later call tweaks other fields") {
     val e = new GraftEngine(spark, freshRoot())
     val t = e.table("metakeep", "w")

@@ -265,7 +265,7 @@ class TableSpec extends SparkSpec {
     assert(t.manifest.eventCounter == counterBefore)
   }
 
-  test("compact preserves a bucketed layout and its pruning marker") {
+  test("compact preserves a bucketed layout and its recorded count") {
     val e = engine()
     val t = e.table("t18", "w")
     t.init(uniqueOn = Seq("id"), bucketBy = 4)
@@ -275,8 +275,8 @@ class TableSpec extends SparkSpec {
     val before = t.read.select("id", "v").as[(Long, String)].collect().toSet
     t.compact()
     val dir = e.catalog.versionDir("t18", t.getActiveVersion.get).toFile
-    assert(new java.io.File(dir, graft.api.Table.BucketMarker).exists,
-      "compacted version re-attests its bucket layout")
+    assert(t.manifest.versions.find(_.id == t.getActiveVersion.get).flatMap(_.buckets)
+      .contains(4), "compacted version records its bucket layout")
     assert(dir.listFiles().count(_.getName.startsWith("__bucket=")) > 0)
     assert(t.read.select("id", "v").as[(Long, String)].collect().toSet == before)
     // point lookup still works against the compacted layout
