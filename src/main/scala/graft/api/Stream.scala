@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DataType, IntegerType, LongType, StringType, TimestampType}
 import org.apache.spark.unsafe.types.UTF8String
 
-import org.apache.spark.sql.graft.{LocalInternals, SchemaInternals}
+import org.apache.spark.sql.graft.LocalInternals
 
 import graft.catalog.VersionInfo
 
@@ -55,12 +55,13 @@ class Stream(table: Table, val orderByField: String, state: State,
   private def loadPersisted(): Option[Any] =
     state.get(stateKey).filter(_ != null)
 
-  private[graft] def plan(): DataFrame =
-    unconsumed().orderBy(col(orderByField).asc)
+  private[graft] def plan(): DataFrame = plan(table.read)
 
-  /** The unconsumed rows, unordered. */
-  private def unconsumed(): DataFrame = {
-    val base = table.read
+  private def plan(base: DataFrame): DataFrame =
+    unconsumed(base).orderBy(col(orderByField).asc)
+
+  /** The unconsumed rows of `base` (a read of the table), unordered. */
+  private def unconsumed(base: DataFrame): DataFrame = {
     // an unconnected/never-written table has no columns — yield the empty
     // stream (dummy-object semantics, node.py:232-238) instead of failing
     // analysis; a populated table missing the orderBy column still errors
@@ -85,16 +86,16 @@ class Stream(table: Table, val orderByField: String, state: State,
     }
   }
 
-  /** The active version's stamp proves there is nothing to consume: it is
-    * committed empty, or its stamped max of the order column is at or
+  /** The active version's stamp proves there is nothing to consume: it
+    * lists no rows, or its stamped max of the order column is at or
     * below the cursor (the check `GraftTableSource.getOffset` makes).
     * Only exact type matches compare; anything else scans.
     */
   private def nothingNew(v: VersionInfo): Boolean =
-    v.rowCount.contains(0L) || (for {
+    v.files.isEmpty || v.rowCount.contains(0L) || (for {
       c <- cursor
       enc <- v.cursorMax.flatMap(_.get(orderByField))
-      s <- v.schema.flatMap(SchemaInternals.parse)
+      s <- v.readSchema
       f <- s.find(_.name == orderByField)
     } yield Stream.atOrBelow(enc, f.dataType, c)).contains(true)
 
@@ -103,6 +104,7 @@ class Stream(table: Table, val orderByField: String, state: State,
     */
   def consumeRecords(): Iterator[Row] = {
     import scala.jdk.CollectionConverters._
+    // one manifest snapshot decides, and is read: its stamp, its files
     val stamp = table.activeStamp
     val it =
       if (stamp.exists(nothingNew)) Iterator.empty
@@ -110,9 +112,9 @@ class Stream(table: Table, val orderByField: String, state: State,
       // partition instead of a range-partitioned global sort, which
       // samples the unconsumed rows in a job of its own first
       else if (stamp.exists(table.driverResident))
-        unconsumed().coalesce(1).sortWithinPartitions(col(orderByField).asc)
-          .collect().iterator
-      else plan().toLocalIterator().asScala
+        unconsumed(table.readOf(stamp)).coalesce(1)
+          .sortWithinPartitions(col(orderByField).asc).collect().iterator
+      else plan(table.readOf(stamp)).toLocalIterator().asScala
     new Iterator[Row] {
       def hasNext: Boolean = it.hasNext
       def next(): Row = {

@@ -12,20 +12,23 @@ import org.apache.spark.unsafe.types.UTF8String
 
 import org.apache.spark.sql.graft.{LocalInternals, SchemaInternals}
 
-import graft.catalog.{CatalogFileSystem, TableCatalog, VersionInfo}
+import graft.catalog.{CatalogFileSystem, DataFile, TableCatalog, VersionInfo}
 
 /** Named, versioned table port (reference node.py:117-414).
   *
   * Storage: one parquet directory per version under the catalog root; the
   * manifest's active pointer picks the readable version, and each
-  * version's manifest entry records its layout (flat files, or the
-  * `init(bucketBy)` hash buckets it was minted with:
-  * [[VersionInfo.buckets]]), which every write into it and every
-  * bucket-pruned read follows. Reads are plain
-  * `spark.read.parquet` on the active dir (full Catalyst pushdown/pruning);
+  * version's manifest entry lists its data files ([[VersionInfo.files]])
+  * and records its layout (flat files, or the `init(bucketBy)` hash
+  * buckets it was minted with: [[VersionInfo.buckets]]), which every write
+  * into it and every bucket-pruned read follows. A read is a parquet scan
+  * of exactly the files the active entry lists, with the entry's schema
+  * stamp (full Catalyst pushdown/pruning, no listing, no planning job);
   * writes are buffered and flushed as parquet appends (node.py:306-307,
   * :407-414); upsert/replace/truncate are copy-on-write into a fresh
   * version + pointer swap, so readers of the old version are never torn.
+  * Every write ends in one manifest mutation that registers its files
+  * with the version's new stamp; its rows are invisible until then.
   *
   * 100 TB note: every data operation is a Spark job over the version dir —
   * nothing row-sized crosses the driver except explicit `readRecords`,
@@ -83,39 +86,27 @@ class Table(engine: GraftEngine, val name: String, val mode: String = "r",
     manifest.activeVersion.filter(_ => connected)
       .map(vid => catalog.versionDir(name, vid).toString)
 
-  def exists: Boolean = connected && manifest.activeVersion.exists(catalog.hasDataFiles(name, _))
+  def exists: Boolean = activeStamp.exists(_.files.nonEmpty)
 
   /** Schema of the active version — the commit-time stamp, read from the
-    * manifest without building a DataFrame; unstamped versions infer it.
+    * manifest without building a DataFrame. None without files.
     */
-  def schema: Option[StructType] =
-    manifest.activeVersion.filter(_ => connected)
-      .flatMap(vid => catalog.versionSchema(spark, name, vid))
+  def schema: Option[StructType] = activeStamp.flatMap(_.readSchema)
 
-  /** Row count of the active version — O(1) from the manifest when the
-    * version was committed by this engine (reference `TableVersion.
-    * record_count` is a stored property, node.py:106-109; a full count()
-    * per introspection call would surprise at 100 TB). Falls back to a
-    * Spark count for legacy/externally-written versions.
+  /** Row count of the active version — O(1) from the manifest stamp
+    * (reference `TableVersion.record_count` is a stored property,
+    * node.py:106-109; a full count() per introspection call would surprise
+    * at 100 TB). None for a version nothing was ever committed to.
     */
-  def recordCount: Option[Long] = {
-    // fresh manifest read (O(KB) disk, still no Spark job): on a SHARED
-    // store another engine's flush re-stamps the count, and serving this
-    // instance's cached manifest would return it stale forever
-    activeStamp.flatMap(_.rowCount).orElse(activeDf.map(_.count()))
-  }
+  def recordCount: Option[Long] = activeStamp.flatMap(_.rowCount)
 
-  private def filesIn(vid: String): Array[java.io.File] =
-    catalog.dataFiles(name, vid) // single owner of the version-dir layout
-
-  /** Row count, per-column max AND merged Spark schema of a version dir
+  /** Row count, per-column max AND merged Spark schema of a file set
     * from parquet FOOTERS — metadata-only, O(#files) driver-side reads, no
     * Spark job. Stamped into the manifest at commit so [[recordCount]] is
     * O(1) (reference TableVersion.record_count, node.py:106-109), so the
     * streaming source's `getOffset` poll is a manifest lookup instead of a
     * table-sized `max()` scan per trigger, and so every read of the
-    * version takes the stamp as its schema instead of a `mergeSchema`
-    * footer-merge job.
+    * version takes the stamp as its schema instead of a footer-merge job.
     *
     * The max map only carries columns whose footer statistics are present
     * and trustworthy in EVERY row group of every file: plain INT32/INT64/
@@ -124,12 +115,12 @@ class Table(engine: GraftEngine, val name: String, val mode: String = "r",
     * truncate or omit stats for large binaries, and a truncated max is a
     * BOUND, not a value — unsafe as a cursor). Missing columns make the
     * streaming source fall back to a scan, never return a wrong offset.
-    */
-  /** Footer stats over an explicit file set: (rows, per-column max,
-    * schema). Map value semantics: `Some(v)` = qualified running max,
-    * `None` = column SEEN but disqualified (unusable stats, unsupported
-    * type, truncated binary, or mixed physical types across files); a
-    * column absent from the map never appeared in any footer. The schema
+    *
+    * Returns (rows, per-column max, schema). Map value semantics:
+    * `Some(v)` = qualified running max, `None` = column SEEN but
+    * disqualified (unusable stats, unsupported type, truncated binary, or
+    * mixed physical types across files); a column absent from the map
+    * never appeared in any footer. The schema
     * folds each file's Spark footer schema in path order with
     * `StructType.merge` — the order and merge a `mergeSchema` read uses,
     * so the stamp equals what inference would return (an empty struct for
@@ -222,12 +213,10 @@ class Table(engine: GraftEngine, val name: String, val mode: String = "r",
                     case (_, None) => None
                     case (None, nv) => nv
                     case (Some(p), Some(n)) =>
-                      // a version dir whose column changes PHYSICAL type
-                      // across files (legacy/externally-written dirs,
-                      // which recordCount explicitly supports) makes this
-                      // compare heterogeneous — disqualify the column
-                      // (readers fall back to a scan) instead of throwing
-                      // AFTER the append already committed
+                      // files whose column differs in PHYSICAL type make
+                      // this compare heterogeneous — disqualify the column
+                      // (readers fall back to a scan) instead of failing
+                      // the commit
                       try Some(
                         if (p.asInstanceOf[Comparable[Any]].compareTo(n) >= 0) p
                         else n)
@@ -249,17 +238,13 @@ class Table(engine: GraftEngine, val name: String, val mode: String = "r",
     scala.util.Try(SchemaInternals.merge(a, b,
       spark.sessionState.conf.caseSensitiveAnalysis)).toOption
 
-  private def stampVersionStats(vid: String): Unit = {
-    val (rows, maxes, schema) = footerStatsCore(filesIn(vid).toSeq)
-    catalog.setVersionStats(name, vid, rows,
-      maxes.collect { case (k, Some(v)) => k -> VersionInfo.encode(v) },
-      schema.filter(_.nonEmpty)) // no files: no stamp, reads see no data
-  }
-
-  /** Post-append stamp that reads ONLY the files the append created,
-    * merging with the version's previous stamp. Merge rules (all
-    * CONSERVATIVE — a dropped column costs a scan fallback, a wrong max
-    * would corrupt streaming offsets):
+  /** Version `v`'s stamp once `added` joins its listed files: (rows,
+    * per-column max, schema; no schema for no files). A version without
+    * files is stamped from `added`'s footers alone; otherwise only
+    * `added`'s footers are read (an append-heavy table would otherwise pay
+    * O(all files) footer reads per flush) and merged onto `v`'s stamp.
+    * Merge rules (all CONSERVATIVE — a dropped column costs a scan
+    * fallback, a wrong max would corrupt streaming offsets):
     *   - column stamped before + qualified in the new files → max of the
     *     two (decode the stored string by the column's type in the schema
     *     stamp; any decode/compare failure, e.g. a new file of another
@@ -272,46 +257,73 @@ class Table(engine: GraftEngine, val name: String, val mode: String = "r",
     *     (data-dependent, e.g. a truncated >256-byte binary bound), and
     *     stamping from new files alone could UNDERSTATE the true max.
     *     The next upsert/replace (fresh version, full stamp) recovers it.
-    * The schema is `prevSchema` (the stamp before the append, passed in
-    * because a widening append clears it first) merged with the new
-    * files' schema. Falls back to the full recompute when the version has
-    * no previous stamp (legacy manifests, a file without a Spark footer
-    * schema).
+    * The schema is `v`'s merged with the new files'. Throws when a footer
+    * yields no schema (a file without Spark's footer schema, incompatible
+    * types): such files are never registered.
     */
-  private def stampVersionStatsAfterAppend(vid: String,
-      preExisting: Set[String], prevSchema: Option[StructType]): Unit = {
-    val prev = manifest.versions.find(_.id == vid)
-    (prev.flatMap(_.rowCount), prev.flatMap(_.cursorMax), prevSchema) match {
-      case (Some(prevRows), Some(prevMax), Some(prevSch)) =>
-        val newFiles = filesIn(vid).filterNot(f => preExisting(f.getAbsolutePath))
-        val (newRows, newMaxes, newSchema) = footerStatsCore(newFiles.toSeq)
-        val merged = prevMax.flatMap { case (k, prevEnc) =>
-          newMaxes.get(k) match {
-            case None => Some(k -> prevEnc) // absent in new files: keep
-            case Some(None) => None         // disqualified by a new file
-            case Some(Some(nv)) =>
-              try {
-                val pv = VersionInfo.decode(prevEnc, prevSch(k).dataType)
-                val mx =
-                  if (pv.asInstanceOf[Comparable[Any]].compareTo(nv) >= 0) pv
-                  else nv
-                Some(k -> VersionInfo.encode(mx))
-              } catch { case _: Exception => None } // type drift
+  private def stampWith(v: VersionInfo, added: Seq[DataFile])
+      : (Long, Map[String, String], Option[StructType]) = {
+    val (newRows, newMaxes, newSchema) =
+      footerStatsCore(added.map(f => catalog.tableDir(name).resolve(f.path).toFile))
+    val stamp =
+      if (v.files.isEmpty)
+        Some((newRows, newMaxes.collect { case (k, Some(x)) => k -> VersionInfo.encode(x) },
+          newSchema))
+      else for (prevRows <- v.rowCount; prevMax <- v.cursorMax; prevSch <- v.readSchema)
+        yield {
+          val merged = prevMax.flatMap { case (k, prevEnc) =>
+            newMaxes.get(k) match {
+              case None => Some(k -> prevEnc) // absent in new files: keep
+              case Some(None) => None         // disqualified by a new file
+              case Some(Some(nv)) =>
+                try {
+                  val pv = VersionInfo.decode(prevEnc, prevSch(k).dataType)
+                  val mx =
+                    if (pv.asInstanceOf[Comparable[Any]].compareTo(nv) >= 0) pv
+                    else nv
+                  Some(k -> VersionInfo.encode(mx))
+                } catch { case _: Exception => None } // type drift
+            }
           }
+          (prevRows + newRows, merged, newSchema.flatMap(mergeSchemas(prevSch, _)))
         }
-        catalog.setVersionStats(name, vid, prevRows + newRows, merged,
-          newSchema.flatMap(mergeSchemas(prevSch, _)))
-      case _ => stampVersionStats(vid)
+    stamp match {
+      case Some((rows, maxes, Some(schema))) => (rows, maxes, Some(schema).filter(_.nonEmpty))
+      case _ => throw new IllegalStateException(s"table $name: the footers of the files " +
+        s"written to version ${v.id} yield no schema; the write is not committed")
     }
   }
+
+  /** Write `df` into version `vid` and commit it: the write's files (the
+    * version dir's parquet files that were not there before it), plus
+    * `carried` (files an upsert copied in), are stamped ([[stampWith]])
+    * and registered with the new stamp in one manifest mutation. A failure
+    * anywhere before that registers nothing, so no reader sees the rows;
+    * the files already written stay in the dir unlisted. Called under the
+    * table lock.
+    */
+  private def commit(df: DataFrame, vid: String, carried: Seq[DataFile] = Nil): Unit = {
+    val before = catalog.filesOnDisk(name, vid).map(_.path).toSet
+    writeInto(df, vid)
+    Table.postAppendHook()
+    val v = versionOf(vid)
+    val added = carried ++ catalog.filesOnDisk(name, vid).filterNot(f => before(f.path))
+    val (rows, maxes, schema) = stampWith(v, added)
+    catalog.registerFiles(name, vid, v.files ++ added, rows, maxes, schema)
+  }
+
+  /** Version `vid`'s entry in the manifest this instance holds: current
+    * under the table lock, which drops the cached manifest on entry.
+    */
+  private def versionOf(vid: String): VersionInfo =
+    manifest.versions.find(_.id == vid).getOrElse(
+      throw new IllegalStateException(s"table $name: no version '$vid'"))
 
   /** The active version's manifest entry, read fresh from disk: another
     * engine may have committed since this instance cached the manifest.
     */
   private[graft] def activeStamp: Option[VersionInfo] =
-    if (!connected) None
-    else catalog.refresh(name).flatMap(m =>
-      m.activeVersion.flatMap(vid => m.versions.find(_.id == vid)))
+    if (!connected) None else catalog.activeInfo(name)
 
   /** Whether a stamped version is small enough to read whole onto the
     * driver: its bytes on disk and its stamped rows × the schema's
@@ -321,16 +333,22 @@ class Table(engine: GraftEngine, val name: String, val mode: String = "r",
     */
   private[graft] def driverResident(v: VersionInfo): Boolean = {
     val bound = spark.sessionState.conf.autoBroadcastJoinThreshold
-    (v.rowCount, v.schema.flatMap(SchemaInternals.parse)) match {
+    (v.rowCount, v.readSchema) match {
       case (Some(rows), Some(s)) if bound > 0 && rows <= bound / math.max(1, s.defaultSize) =>
-        filesIn(v.id).iterator.map(_.length).sum <= bound
+        v.files.iterator.map(_.bytes).sum <= bound
       case _ => false
     }
   }
 
   private def activeDf: Option[DataFrame] =
-    manifest.activeVersion.filter(_ => connected)
-      .flatMap(vid => catalog.versionScan(spark, name, vid))
+    activeStamp.flatMap(catalog.scan(spark, name, _))
+
+  /** A read of version `v` (one manifest snapshot: its files and its
+    * schema stamp); a version without files reads as an empty frame.
+    */
+  private[graft] def readOf(v: Option[VersionInfo]): DataFrame =
+    v.flatMap(catalog.scan(spark, name, _)).getOrElse(
+      spark.createDataFrame(spark.sparkContext.emptyRDD[Row], new StructType()))
 
   // --- read surface (node.py:141-189) ---
 
@@ -355,22 +373,17 @@ class Table(engine: GraftEngine, val name: String, val mode: String = "r",
     // be a stale snapshot. The existence check runs AFTER the lease so a
     // sweep that won the race fails loudly here instead of mid-collect.
     catalog.acquireReadLease(name, vid, leaseTtlMillis)
-    val dir = catalog.versionDir(name, vid)
-    require(java.nio.file.Files.isDirectory(dir),
-      s"table $name: version '$vid' has been garbage-collected")
-    // a legitimately EMPTY version (reset / crashed-before-write) reads as
-    // an empty frame — the same answer read() gives for the active one —
-    // rather than Spark's misleading "Unable to infer schema" error.
-    // Same canonical recipe as every other read path (versionScan: the
-    // version's schema stamp, inference only for unstamped versions).
-    catalog.versionScan(spark, name, vid).getOrElse(
-      spark.createDataFrame(spark.sparkContext.emptyRDD[Row], new StructType()))
+    // a sweep removes the manifest entry with the dir, under the lock the
+    // lease took: an entry present now stays readable while leased. A
+    // legitimately EMPTY version (reset / crashed-before-write) reads as
+    // an empty frame — the same answer read() gives for the active one
+    val v = catalog.versionInfo(name, vid)
+    require(v.isDefined, s"table $name: version '$vid' has been garbage-collected")
+    readOf(v)
   }
 
   /** Full scan of the active version (node.py:156-166). */
-  def read: DataFrame =
-    activeDf.getOrElse(spark.createDataFrame(
-      spark.sparkContext.emptyRDD[Row], new StructType()))
+  def read: DataFrame = readOf(activeStamp)
 
   /** Row-iterator form of read (node.py:141-154 "records"); stays lazy via
     * toLocalIterator so only one partition is resident on the driver.
@@ -448,6 +461,10 @@ class Table(engine: GraftEngine, val name: String, val mode: String = "r",
     * the next upsert/replace migrates the layout. A version that holds no
     * file yet (a first flush, or one after `reset()`) takes the table's
     * current bucket count as its record first.
+    * Durability: the batch's rows become visible, and the buffer is
+    * cleared, when its files are registered in the manifest (see
+    * [[commit]]); a flush that throws before that leaves the table as it
+    * was and keeps the buffer, so calling it again lands every row once.
     * A local batch (see the class doc) gets its monotonic ids on the
     * driver, so the write is the flush's only Spark job; within
     * [[inOneTaskIfSmall]]'s bound that job is one task, one file per bucket.
@@ -460,53 +477,24 @@ class Table(engine: GraftEngine, val name: String, val mode: String = "r",
       catalog.setActive(name, Some(v), "create")
       v
     }
-    // snapshot the dir BEFORE the write so the stats stamp can read only
-    // the footers this append created (an append-heavy table otherwise
-    // pays O(all files) driver-side footer reads per flush — quadratic
-    // cumulative I/O for exactly the streaming workload the manifest
-    // stamps exist to serve)
-    val preExisting = filesIn(vid).map(_.getAbsolutePath).toSet
-    if (preExisting.isEmpty && layoutOf(vid) != bucketCount)
+    val prev = versionOf(vid)
+    if (prev.files.isEmpty && prev.buckets != bucketCount)
       catalog.setVersionBuckets(name, vid, bucketCount)
-    val prevSchema = manifest.versions.find(_.id == vid)
-      .flatMap(_.schema).flatMap(SchemaInternals.parse)
+    val prevSchema = prev.readSchema
     val decorated = decorate(conform(batch))
     // the version's columns first, in stamp order, new ones after: a
-    // `mergeSchema` read orders columns by whichever file sorts first
+    // footer-merged schema orders columns by whichever file folds first
     // (random part-file names), so only files that agree on the order let
-    // inference and the incremental stamp below agree
+    // a full restamp and the incremental stamp agree
     val ordered = pinLocal(prevSchema.fold(decorated) { s =>
       val (known, added) = decorated.columns.partition(s.fieldNames.contains)
       decorated.select((s.fieldNames.filter(known.contains) ++ added).map(col).toSeq: _*)
     })
-    val out = clustered(inOneTaskIfSmall(ordered, ordered, 0L))
-    // a reader must never pair the version's files with a stamp narrower
-    // than they are: an append that widens the schema (new columns) drops
-    // the stamp BEFORE writing — readers infer until the restamp below
-    if (prevSchema.exists(s => !mergeSchemas(s, out.schema).contains(s)))
-      catalog.clearVersionSchema(name, vid)
-    writeInto(out, vid)
-    // cleared at the DURABILITY point — after the parquet append commits,
-    // before stats stamping / event recording. A write failure keeps the
-    // buffer (the retry writes the rows instead of silently no-opping);
-    // a post-commit failure must NOT keep it, or the retry re-appends the
-    // whole batch and duplicates every row.
+    commit(clustered(inOneTaskIfSmall(ordered, ordered, 0L)), vid)
+    // cleared at the commit point: a failure before it keeps the buffer
+    // (the retry writes the rows, and the failed write's files stay
+    // unlisted); after it, a retry must not re-append the batch
     buffer.clear()
-    try {
-      Table.postAppendHook()
-      stampVersionStatsAfterAppend(vid, preExisting, prevSchema)
-    } catch {
-      case scala.util.control.NonFatal(e) =>
-        // non-fatal, but never leave a STALE stamp: it understates
-        // rowCount/cursorMax and a streaming poll would skip the appended
-        // rows forever. Dropping the stamp costs consumers a scan
-        // fallback until the next flush recomputes a full fresh stamp.
-        try catalog.clearVersionStats(name, vid)
-        catch { case scala.util.control.NonFatal(_) => () }
-        System.err.println(
-          s"[graft] table $name: stats stamp failed after append " +
-            s"(stamp dropped, consumers fall back to scan): ${e.getMessage}")
-    }
     if (!isNew) catalog.recordEvent(name, "update")
   }
 
@@ -522,10 +510,6 @@ class Table(engine: GraftEngine, val name: String, val mode: String = "r",
     df.withColumn("__bucket",
       pmod(hash(manifest.meta.uniqueOn.map(col): _*), lit(n)))
 
-  /** The layout version `vid` records ([[VersionInfo.buckets]]). */
-  private def layoutOf(vid: String): Option[Int] =
-    manifest.versions.find(_.id == vid).flatMap(_.buckets)
-
   /** Append `df` to version `vid` in the layout the version records.
     *
     * Every Spark write of the engine (flush, upsert, replace, truncate,
@@ -539,7 +523,7 @@ class Table(engine: GraftEngine, val name: String, val mode: String = "r",
     * cache stay as they are.
     */
   private def writeInto(df: DataFrame, vid: String): Unit = {
-    val writer = layoutOf(vid) match {
+    val writer = versionOf(vid).buckets match {
       case Some(n) => withBucket(df, n).write.partitionBy("__bucket")
       case None => df.write
     }
@@ -577,9 +561,10 @@ class Table(engine: GraftEngine, val name: String, val mode: String = "r",
     *      pruned only when the active version's recorded layout is the
     *      table's current bucket count; otherwise (an unbucketed table, a
     *      `bucketBy` migration) every old row is affected.
-    *   2. Untouched buckets are carried into the new version as file
-    *      copies ([[TableCatalog.copyBuckets]]): O(affected buckets)
-    *      compute instead of O(table), zero shuffle or decode.
+    *   2. Untouched buckets' listed files are carried into the new
+    *      version as file copies ([[TableCatalog.copyBuckets]]), registered
+    *      with the write's own: O(affected buckets) compute instead of
+    *      O(table), zero shuffle or decode.
     *   3. The affected old rows lose the incoming keys
     *      ([[Table.withoutKeysOf]]) and are unioned with the incoming rows.
     *   4. The result is written in the table's current layout; when the
@@ -610,29 +595,27 @@ class Table(engine: GraftEngine, val name: String, val mode: String = "r",
     }
     val incoming = pinLocal(decorate(conform(local.getOrElse(Table.lastPerKeySpark(df, keys)))))
     val eventKind = if (manifest.activeVersion.isDefined) "update" else "create"
-    val oldVid = manifest.activeVersion.filter(catalog.hasDataFiles(name, _))
+    val oldV = manifest.activeVersion.map(versionOf).filter(_.files.nonEmpty)
     // (bucket count, affected buckets): ≤ n values, never O(data), hashed
     // on the driver for local rows
-    val pruned = for (v <- oldVid; n <- bucketCount if layoutOf(v).contains(n)) yield
+    val pruned = for (v <- oldV; n <- bucketCount if v.buckets.contains(n)) yield
       n -> LocalInternals.localRows(incoming).flatMap { case (s, rows) =>
         Table.localKeys(s, keys).map(k => rows.map(Table.bucketFn(k, n)).toSet)
       }.getOrElse(withBucket(incoming, n).select("__bucket")
         .distinct().collect().map(_.getInt(0)).toSet)
     val (_, vid) = catalog.createVersion(name, bucketCount)
-    val (old, oldBytes) = oldVid.fold((Option.empty[DataFrame], 0L)) { v =>
+    val (old, oldFiles, carried) = oldV.fold(
+        (Option.empty[DataFrame], Seq.empty[DataFile], Seq.empty[DataFile])) { v =>
       pruned match {
         case Some((n, affected)) =>
-          catalog.copyBuckets(name, v, vid, (0 until n).filterNot(affected))
-          (catalog.bucketScan(spark, name, v, affected.toSeq),
-            catalog.bucketFiles(name, v, affected).map(_.length).sum)
-        case None =>
-          (catalog.versionScan(spark, name, v), catalog.dataFiles(name, v).map(_.length).sum)
+          (catalog.scan(spark, name, v, Some(affected)), v.files.filter(_.bucket.exists(affected)),
+            catalog.copyBuckets(name, v, vid, (0 until n).filterNot(affected).toSet))
+        case None => (catalog.scan(spark, name, v), v.files, Nil)
       }
     }
     val merged = old.fold(incoming)(o =>
       incoming.unionByName(Table.withoutKeysOf(o, incoming, keys), allowMissingColumns = true))
-    writeInto(clustered(inOneTaskIfSmall(merged, incoming, oldBytes)), vid)
-    stampVersionStats(vid)
+    commit(clustered(inOneTaskIfSmall(merged, incoming, oldFiles.map(_.bytes).sum)), vid, carried)
     catalog.setActive(name, Some(vid), eventKind)
   }
 
@@ -645,20 +628,21 @@ class Table(engine: GraftEngine, val name: String, val mode: String = "r",
   def lookup(keyValues: Seq[Any]): DataFrame = {
     // dummy/no-data degradation: unconnected or never-written tables have
     // no columns to filter on — return the empty frame, don't fail analysis
-    if (!connected || schema.isEmpty) return read
+    val active = activeStamp
+    val sch = active.flatMap(_.readSchema)
+    if (sch.isEmpty) return readOf(active)
     val keys = manifest.meta.uniqueOn
     require(keys.nonEmpty && keys.length == keyValues.length,
       s"lookup on '$name' needs unique_on values (${keys.mkString(",")})")
-    val sch = schema
     def typedLit(k: String, v: Any) = sch.flatMap(s =>
       s.fields.find(_.name == k)).map(f => lit(v).cast(f.dataType)).getOrElse(lit(v))
     val eqFilter = keys.zip(keyValues)
       .map { case (k, v) => col(k) === typedLit(k, v) }.reduce(_ && _)
-    (bucketCount, manifest.activeVersion) match {
+    (bucketCount, active) match {
       // bucket pruning needs the version's recorded count to MATCH the meta
       // count — after a bucketBy change, fall through to the filtered full
       // read (still min/max-pruned by write-time clustering)
-      case (Some(n), Some(vid)) if layoutOf(vid).contains(n) =>
+      case (Some(n), Some(v)) if v.buckets.contains(n) =>
         // evaluate pmod(hash(key...), n) driver-side — a constant
         // expression shouldn't cost a Spark job per point lookup
         val b = try {
@@ -680,9 +664,9 @@ class Table(engine: GraftEngine, val name: String, val mode: String = "r",
               keys.zip(keyValues).map { case (k, v) => typedLit(k, v) }: _*),
               lit(n)).as("b")).head.getInt(0)
         }
-        catalog.bucketScan(spark, name, vid, Seq(b))
-          .map(_.filter(eqFilter)).getOrElse(read.limit(0))
-      case _ => read.filter(eqFilter)
+        catalog.scan(spark, name, v, Some(Set(b)))
+          .map(_.filter(eqFilter)).getOrElse(readOf(active).limit(0))
+      case _ => readOf(active).filter(eqFilter)
     }
   }
 
@@ -740,7 +724,7 @@ class Table(engine: GraftEngine, val name: String, val mode: String = "r",
         "per __bucket dir; targetFiles is only meaningful for plain layouts")
     catalog.withTableLock(name) {
     flush()
-    val layout = manifest.activeVersion.flatMap(layoutOf)
+    val layout = manifest.activeVersion.flatMap(versionOf(_).buckets)
     activeDf.foreach { df =>
       if (df.isEmpty)
         // same guard as truncate: zero rows through the partitionBy writer
@@ -873,16 +857,15 @@ class Table(engine: GraftEngine, val name: String, val mode: String = "r",
   private def writeNewVersion(df: DataFrame, buckets: Option[Int], eventKind: String,
       trigger: Boolean = true): Unit = {
     val (_, vid) = catalog.createVersion(name, buckets)
-    writeInto(clustered(df), vid)
-    stampVersionStats(vid)
+    commit(clustered(df), vid)
     catalog.setActive(name, Some(vid), eventKind, trigger)
   }
 }
 
 object Table {
-  /** Test hook: runs after a flush's parquet append committed, before the
-    * stats stamp — lets specs inject a post-durability failure and pin
-    * that it neither duplicates rows on retry nor leaves a stale stamp.
+  /** Test hook: runs after a write's Spark job, before its files are
+    * stamped and registered — lets specs inject a failure there and pin
+    * that nothing becomes visible and a retry lands every row once.
     */
   private[graft] var postAppendHook: () => Unit = () => ()
 

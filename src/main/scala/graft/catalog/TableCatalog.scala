@@ -1,46 +1,55 @@
 package graft.catalog
 
-import java.nio.file.{Files, Path, Paths}
+import java.nio.file.{Files, Path}
 import java.nio.charset.StandardCharsets
 
+import org.apache.hadoop.fs.{FileStatus, Path => HPath}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.execution.datasources.{FileIndex, HadoopFsRelation, PartitionDirectory}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.graft.SchemaInternals
 import org.apache.spark.sql.types.{ByteType, DataType, DateType, DecimalType,
   DoubleType, FloatType, IntegerType, LongType, ShortType, StructType, TimestampType}
 import org.json4s._
 import org.json4s.jackson.Serialization
 
+/** One data file of a version: its path relative to the table dir, the
+  * hash bucket it holds (None in a flat layout) and its size in bytes.
+  */
+case class DataFile(path: String, bucket: Option[Int], bytes: Long)
+
 /** One concrete materialization of a table (reference node.py:84-114):
-  * a parquet directory under the table dir, identified by `id`.
-  * `supersededAt` is stamped when the version stops being active — the
-  * retention clock runs from THAT moment (a version active for a year then
-  * replaced is brand-new garbage, not year-old garbage).
+  * the data files its manifest entry lists, which live under the table
+  * dir's `<id>/` parquet directory, identified by `id`. The list is the
+  * version's contents: a file in the directory that the list does not
+  * name (the output of a write that failed before registering) is not
+  * part of it. `supersededAt` is stamped when the version stops being
+  * active — the retention clock runs from THAT moment (a version active
+  * for a year then replaced is brand-new garbage, not year-old garbage).
   */
 case class VersionInfo(id: String, createdAt: Long,
     supersededAt: Option[Long] = None,
-    // rows in the version dir, stamped from parquet footers at commit
-    // (reference TableVersion.record_count, node.py:106-109) — what makes
-    // Table.recordCount O(1); None for versions written by older manifests
+    // rows in the listed files, stamped from their parquet footers at
+    // commit (reference TableVersion.record_count, node.py:106-109) — what
+    // makes Table.recordCount O(1); None until the first commit
     rowCount: Option[Long] = None,
-    // per-column MAX over the version, harvested from the same parquet
-    // footers (column-chunk statistics) at commit — encoded with the
-    // streaming source's offset encoding (ISO instants for timestamps,
+    // per-column MAX over the listed files, harvested from the same
+    // parquet footers (column-chunk statistics) at commit — encoded with
+    // the streaming source's offset encoding (ISO instants for timestamps,
     // SQL string form otherwise). What makes GraftTableSource.getOffset a
     // manifest lookup instead of a per-poll full scan of the table: at
     // 100 TB with a short trigger interval the poll MUST NOT run a Spark
     // job. Columns whose footer stats are absent or untrustworthy
     // (truncated binary, INT96) are simply missing — readers fall back to
-    // a scan. None for versions written by older manifests.
+    // a scan.
     cursorMax: Option[Map[String, String]] = None,
-    // the version's merged Spark schema (StructType JSON, `__bucket`
-    // excluded), folded at commit from the schema Spark's writer records in
-    // each parquet footer — what makes every read of the version
-    // metadata-only: [[TableCatalog.versionScan]] passes it as an explicit
-    // read schema instead of running a `mergeSchema` footer-merge Spark
-    // job. None for versions written by older manifests, fileless
-    // versions, versions holding a file without the Spark footer key, and
-    // a version mid-way through a column-adding append (cleared before the
-    // write, restamped after) — those reads fall back to `mergeSchema`.
+    // the version's merged Spark schema (StructType JSON), folded at
+    // commit from the schema Spark's writer records in each listed file's
+    // footer — the explicit read schema of every read of the version
+    // ([[TableCatalog.scan]]), so building one starts no Spark job. None
+    // for a version without files.
     schema: Option[String] = None,
     // the version's physical layout: `Some(n)` = its rows are hashed on the
     // unique key into n `__bucket=K` dirs, None = flat files. Recorded under
@@ -49,7 +58,18 @@ case class VersionInfo(id: String, createdAt: Long,
     // minted empty), so every later write into the version and every
     // bucket-pruned read of it follows this record, never the table's
     // current `numBuckets`, which `init(bucketBy)` may have changed since.
-    buckets: Option[Int] = None)
+    buckets: Option[Int] = None,
+    // the version's data files, registered with the stamp above in the
+    // same manifest mutation ([[TableCatalog.registerFiles]]); a manifest
+    // written without file lists reads as fileless
+    files: List[DataFile] = Nil) {
+
+  /** The schema a read of this version takes: the stamp, when the version
+    * lists files.
+    */
+  def readSchema: Option[StructType] =
+    if (files.isEmpty) None else schema.flatMap(SchemaInternals.parse)
+}
 
 object VersionInfo {
   /** A [[VersionInfo.cursorMax]] value, and the streaming source's offset:
@@ -78,6 +98,28 @@ object VersionInfo {
     case TimestampType => java.sql.Timestamp.from(java.time.Instant.parse(enc))
     case _ => enc
   }
+}
+
+/** A version's listed files as a Spark `FileIndex`: `files` are (absolute
+  * path, bytes) pairs, `dir` the version dir (its root path for plans and
+  * path-based cache refresh). Planning a scan over it makes no filesystem
+  * call, however many files it holds; a read of the same files as
+  * explicit paths would probe each one and start a listing job above
+  * `spark.sql.sources.parallelPartitionDiscovery.threshold` paths.
+  */
+private[catalog] case class ListedFileIndex(dir: HPath, files: Seq[(HPath, Long)])
+    extends FileIndex {
+  private lazy val statuses: Array[FileStatus] =
+    files.map { case (p, bytes) => new FileStatus(bytes, false, 0, 0L, 0L, p) }.toArray
+
+  override def rootPaths: Seq[HPath] = Seq(dir)
+  override def listFiles(partitionFilters: Seq[Expression],
+      dataFilters: Seq[Expression]): Seq[PartitionDirectory] =
+    Seq(PartitionDirectory(InternalRow.empty, statuses))
+  override def inputFiles: Array[String] = statuses.map(_.getPath.toString)
+  override def refresh(): Unit = ()
+  override def sizeInBytes: Long = files.map(_._2).sum
+  override def partitionSchema: StructType = new StructType()
 }
 
 /** Catalog event log entry (reference node.py:387-397 signal_create/update/
@@ -130,15 +172,16 @@ case class TableManifest(
   * Layout: `<root>/<table>/manifest.json` + `<root>/<table>/<versionId>/`
   * (parquet dir per version; a bucketed version holds one `__bucket=K`
   * dir per bucket, its count recorded in the manifest as
-  * [[VersionInfo.buckets]]). Mutations are metadata-only and O(1) in
-  * data size: at 100 TB the manifest stays a few KB per version — data
-  * never moves through the driver; only Spark jobs touch the version
-  * directories. The one exception is [[versionScan]], the canonical (lazy,
-  * plan-only) read recipe shared by every batch/streaming/time-travel
-  * reader so the paths cannot drift on a layout change. Reads of a
-  * committed version are metadata-only: the schema stamped at commit
-  * ([[VersionInfo.schema]]) is the read schema, so building a read starts
-  * no Spark job; unstamped versions fall back to `mergeSchema` inference.
+  * [[VersionInfo.buckets]]). The manifest, not the directory, is the
+  * truth: a version is the file list in its entry
+  * ([[VersionInfo.files]]), registered with the version's stamp in one
+  * mutation at the end of each write ([[registerFiles]]). Every read —
+  * [[scan]], the canonical (lazy, plan-only) recipe shared by every
+  * batch/streaming/time-travel reader — takes the files and the read
+  * schema from one manifest read, and neither lists a directory nor
+  * starts a Spark job to plan. Mutations are metadata-only: data never
+  * moves through the driver; only Spark jobs touch the version
+  * directories.
   *
   * Old versions stay on disk after reset/replace "until garbage collected
   * according to the table's retention policy" (reference node.py:403-404);
@@ -219,121 +262,74 @@ class TableCatalog(val root: Path) {
   def versionDir(name: String, vid: String): Path = tableDir(name).resolve(vid)
   private def manifestPath(name: String): Path = tableDir(name).resolve("manifest.json")
 
-  /** Every parquet data file of one version. This class is the SINGLE
-    * owner of the version-dir physical layout (flat files, or one
-    * `__bucket=K` partition dir per bucket of a bucketed version): Table and
-    * the streaming source list, scan and copy version files only through
-    * its methods, so no path can drift from another. Every listing is
-    * null-guarded: a retention sweep may delete the dir between checks
-    * (documented race) — that must read as "no files", not NPE.
+  /** The parquet files in version `vid`'s dir now, as manifest entries.
+    * A write's files are this listing after it minus this listing before
+    * it, which leaves out the files of any earlier write that failed
+    * before registering them. Commits list; reads never do. This class is
+    * the single owner of the version-dir layout (flat files, or one
+    * `__bucket=K` dir per bucket of a bucketed version). A dir a retention
+    * sweep deleted lists as empty.
     */
-  def dataFiles(name: String, vid: String): Array[java.io.File] = {
+  def filesOnDisk(name: String, vid: String): Seq[DataFile] = {
+    def parquetIn(d: java.io.File, bucket: Option[Int]): Seq[DataFile] =
+      Option(d.listFiles((f: java.io.File) => f.getName.endsWith(".parquet")))
+        .getOrElse(Array.empty[java.io.File]).toSeq
+        .map(f => DataFile(relPath(vid, bucket, f.getName), bucket, f.length))
     val d = versionDir(name, vid).toFile
-    parquetIn(d) ++ bucketDirs(d).flatMap(parquetIn)
+    parquetIn(d, None) ++ Option(d.listFiles((f: java.io.File) =>
+        f.isDirectory && f.getName.startsWith(TableCatalog.BucketPrefix)))
+      .getOrElse(Array.empty[java.io.File]).toSeq
+      .flatMap(b => parquetIn(b, Some(b.getName.stripPrefix(TableCatalog.BucketPrefix).toInt)))
   }
 
-  /** The data files of the given buckets of a bucketed version. */
-  def bucketFiles(name: String, vid: String, buckets: Iterable[Int]): Array[java.io.File] =
-    buckets.toArray.flatMap(k => parquetIn(bucketDir(name, vid, k).toFile))
-
-  /** Does the version dir hold at least one data file? Short-circuits at
-    * the first hit — the streaming source polls this shape per trigger,
-    * and a full [[dataFiles]] listing of a many-bucket dir on a remote
-    * mount would pay O(total files) just to test emptiness.
+  /** Copy the listed files of the given buckets of version `from` into
+    * version `to` (each with its `.crc` file): an upsert's carry-over of
+    * the buckets its incoming keys do not touch. Returns the copies'
+    * entries, which the upsert registers with its own files.
     */
-  def hasDataFiles(name: String, vid: String): Boolean = {
-    val d = versionDir(name, vid).toFile
-    parquetIn(d).nonEmpty || bucketDirs(d).exists(b => parquetIn(b).nonEmpty)
-  }
-
-  /** Copy the given buckets of version `from` into version `to`, file by
-    * file (`.crc` files included): an upsert's carry-over of the buckets
-    * its incoming keys do not touch. Buckets `from` lacks are skipped.
-    */
-  def copyBuckets(name: String, from: String, to: String, buckets: Iterable[Int]): Unit =
-    buckets.foreach { k =>
-      Option(bucketDir(name, from, k).toFile.listFiles()).foreach { files =>
-        val dst = Files.createDirectories(bucketDir(name, to, k))
-        files.filter(_.isFile).foreach(f => Files.copy(f.toPath, dst.resolve(f.getName)))
-      }
+  def copyBuckets(name: String, from: VersionInfo, to: String,
+      buckets: Set[Int]): Seq[DataFile] =
+    from.files.filter(_.bucket.exists(buckets)).map { f =>
+      val src = tableDir(name).resolve(f.path)
+      val copy = f.copy(path = relPath(to, f.bucket, src.getFileName.toString))
+      val dst = tableDir(name).resolve(copy.path)
+      Files.createDirectories(dst.getParent)
+      Files.copy(src, dst)
+      val crc = (p: Path) => p.resolveSibling(s".${p.getFileName}.crc")
+      if (Files.exists(crc(src))) Files.copy(crc(src), crc(dst))
+      copy
     }
 
-  private def bucketDir(name: String, vid: String, k: Int): Path =
-    versionDir(name, vid).resolve(s"__bucket=$k")
+  private def relPath(vid: String, bucket: Option[Int], file: String): String =
+    (Seq(vid) ++ bucket.map(k => s"${TableCatalog.BucketPrefix}$k") :+ file).mkString("/")
 
-  private def bucketDirs(d: java.io.File): Array[java.io.File] =
-    Option(d.listFiles((f: java.io.File) =>
-      f.isDirectory && f.getName.startsWith("__bucket=")))
-      .getOrElse(Array.empty[java.io.File])
-
-  private def parquetIn(d: java.io.File): Array[java.io.File] =
-    Option(d.listFiles((f: java.io.File) => f.getName.endsWith(".parquet")))
-      .getOrElse(Array.empty[java.io.File])
-
-  /** The canonical scan of one version: user-facing schema (the commit
-    * stamp, or `mergeSchema` inference for unstamped versions; the
-    * `__bucket` layout column dropped), or None for a fileless version
-    * (reset(), crash-before-write) — which must read as "no data yet", not
-    * throw schema-inference errors.
+  /** Version `vid`'s manifest entry, from the ON-DISK manifest: another
+    * writer (another catalog instance or JVM) may have registered files
+    * since this instance cached it.
     */
-  def versionScan(spark: SparkSession, name: String,
-      vid: String): Option[DataFrame] =
-    if (!hasDataFiles(name, vid)) None
-    else scan(spark, name, vid, Seq(versionDir(name, vid)))
+  def versionInfo(name: String, vid: String): Option[VersionInfo] =
+    refresh(name).flatMap(_.versions.find(_.id == vid))
 
-  /** The same recipe over a subset of a bucketed version's `__bucket=K`
-    * dirs (upsert's affected-bucket rewrite, lookup's single-bucket scan):
-    * the version's stamp is the read schema, so every subset reads with
-    * the version's full columns. None when none of the dirs exists.
+  /** The active version's manifest entry, from the on-disk manifest. */
+  def activeInfo(name: String): Option[VersionInfo] =
+    refresh(name).flatMap(m => m.activeVersion.flatMap(vid => m.versions.find(_.id == vid)))
+
+  /** The canonical read of one version, shared by every batch, streaming
+    * and time-travel reader: exactly the files its entry lists (those of
+    * `buckets` only, when given: upsert's affected-bucket rewrite, lookup's
+    * single-bucket scan), read with the entry's schema stamp. Building it
+    * starts no Spark job and makes no filesystem call. None when no listed
+    * file qualifies: a fileless version (reset, a failed first write, a
+    * manifest without file lists) reads as "no data yet".
     */
-  def bucketScan(spark: SparkSession, name: String, vid: String,
-      buckets: Seq[Int]): Option[DataFrame] = {
-    val dirs = buckets.sorted.map(bucketDir(name, vid, _)).filter(Files.isDirectory(_))
-    if (dirs.isEmpty) None else scan(spark, name, vid, dirs)
-  }
-
-  /** A version's schema without building a read: the stamp, else the
-    * inferred schema of [[versionScan]]. None for a fileless version.
-    */
-  def versionSchema(spark: SparkSession, name: String,
-      vid: String): Option[StructType] =
-    schemaStamp(name, vid).flatMap(SchemaInternals.parse)
-      .orElse(versionScan(spark, name, vid).map(_.schema))
-
-  /** The version's schema stamp, from the ON-DISK manifest: another writer
-    * (another catalog instance or JVM) may have appended wider files to
-    * the version since this instance cached it, and a stale stamp would
-    * hide their columns.
-    */
-  private def schemaStamp(name: String, vid: String): Option[String] =
-    refresh(name).flatMap(_.versions.find(_.id == vid)).flatMap(_.schema)
-
-  private def scan(spark: SparkSession, name: String, vid: String,
-      dirs: Seq[Path]): Option[DataFrame] = {
-    val paths = dirs.map(_.toString)
-    def inferred = spark.read.option("mergeSchema", "true").parquet(paths: _*)
-    try {
-      val stamp = schemaStamp(name, vid)
-      val df = stamp.flatMap(SchemaInternals.parse) match {
-        case Some(readSchema) =>
-          val stamped = spark.read.schema(readSchema).parquet(paths: _*)
-          // parquet() listed the files eagerly; a column-adding append
-          // clears the stamp BEFORE it writes, so a stamp unchanged after
-          // the listing proves no wider file was listed (seqlock-style).
-          // A changed stamp means a writer raced us: infer instead.
-          if (schemaStamp(name, vid) == stamp) stamped else inferred
-        case None => inferred
-      }
-      Some(df.drop("__bucket"))
-    } catch {
-      // check-then-read window: a concurrent retention sweep can delete
-      // the dir between hasDataFiles and the (eager) parquet listing —
-      // that documented race must read as "no data", not crash. Swallowed
-      // ONLY when the dir is actually gone, so real analysis errors
-      // (permissions, corrupt footers) still surface.
-      case e: org.apache.spark.sql.AnalysisException
-          if !Files.exists(versionDir(name, vid)) => None
-    }
+  def scan(spark: SparkSession, name: String, v: VersionInfo,
+      buckets: Option[Set[Int]] = None): Option[DataFrame] = {
+    val files = v.files.filter(f => buckets.forall(b => f.bucket.exists(b)))
+    for (schema <- v.readSchema if files.nonEmpty) yield
+      spark.baseRelationToDataFrame(HadoopFsRelation(
+        ListedFileIndex(new HPath(versionDir(name, v.id).toUri),
+          files.map(f => new HPath(tableDir(name).resolve(f.path).toUri) -> f.bytes)),
+        new StructType(), schema, None, new ParquetFileFormat, Map.empty)(spark))
   }
 
   def exists(name: String): Boolean = Files.exists(manifestPath(name))
@@ -431,10 +427,14 @@ class TableCatalog(val root: Path) {
     */
   def setVersionBuckets(name: String, vid: String, buckets: Option[Int]): TableManifest =
     mutate(name) { m =>
-      require(!hasDataFiles(name, vid),
-        s"table $name: version $vid already holds data; its layout is fixed")
-      m.copy(versions = m.versions.map(v =>
-        if (v.id == vid) v.copy(buckets = buckets) else v))
+      m.copy(versions = m.versions.map { v =>
+        if (v.id != vid) v
+        else {
+          require(v.files.isEmpty,
+            s"table $name: version $vid already holds data; its layout is fixed")
+          v.copy(buckets = buckets)
+        }
+      })
     }
 
   /** Swap the active pointer and append the triggering event; then apply
@@ -473,42 +473,19 @@ class TableCatalog(val root: Path) {
       eventCounter = m.eventCounter + 1)
   }
 
-  /** Stamp a version's committed row count, per-column footer maxes and
-    * merged schema (Table.recordCount's O(1) path, GraftTableSource's O(1)
-    * poll path, and [[versionScan]]'s metadata-only read).
+  /** Register version `vid`'s files and their stamp — row count,
+    * per-column footer maxes and merged schema — in one mutation: the
+    * commit point of every write. No reader sees a file before it is
+    * listed here, and every reader takes the files and the stamp from the
+    * same manifest ([[scan]], `Table.recordCount`, `GraftTableSource`'s
+    * poll).
     */
-  def setVersionStats(name: String, vid: String, rows: Long,
-      cursorMax: Map[String, String] = Map.empty,
-      schema: Option[StructType] = None): TableManifest =
+  def registerFiles(name: String, vid: String, files: Seq[DataFile], rows: Long,
+      cursorMax: Map[String, String], schema: Option[StructType]): TableManifest =
     mutate(name) { m =>
       m.copy(versions = m.versions.map(v =>
-        if (v.id == vid) v.copy(rowCount = Some(rows),
+        if (v.id == vid) v.copy(files = files.toList, rowCount = Some(rows),
           cursorMax = Some(cursorMax), schema = schema.map(_.json)) else v))
-    }
-
-  /** Drop only a version's schema stamp — taken under the table lock
-    * BEFORE an append that widens the version's schema writes its files,
-    * so no reader can pair the new files with the old, narrower stamp
-    * (readers fall back to inference until the append restamps).
-    */
-  def clearVersionSchema(name: String, vid: String): TableManifest =
-    mutate(name) { m =>
-      m.copy(versions = m.versions.map(v =>
-        if (v.id == vid) v.copy(schema = None) else v))
-    }
-
-  /** Drop a version's stats stamp entirely. Used when an incremental
-    * restamp FAILED after its append committed: a stale stamp silently
-    * understates rowCount/cursorMax (a streaming source polling the stale
-    * max would skip the appended rows forever) or narrows the schema,
-    * while NO stamp makes every consumer fall back to a scan and the next
-    * successful flush recompute a full fresh stamp.
-    */
-  def clearVersionStats(name: String, vid: String): TableManifest =
-    mutate(name) { m =>
-      m.copy(versions = m.versions.map(v =>
-        if (v.id == vid) v.copy(rowCount = None, cursorMax = None,
-          schema = None) else v))
     }
 
   def updateMeta(name: String)(f: TableMeta => TableMeta): TableManifest =
@@ -622,6 +599,9 @@ class TableCatalog(val root: Path) {
 }
 
 object TableCatalog {
+  /** Name prefix of a bucketed version's `__bucket=K` dirs. */
+  private val BucketPrefix = "__bucket="
+
   /** Event-history window kept in the manifest; `eventCounter` carries the
     * all-time total, so trimming never affects downstream triggering.
     */

@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.sources.{DataSourceRegister, StreamSourceProvider}
 import org.apache.spark.sql.types.{StructType, TimestampType}
 
-import graft.catalog.{TableCatalog, VersionInfo}
+import graft.catalog.{CatalogFileSystem, TableCatalog, VersionInfo}
 
 /** Structured Streaming source over a catalog table (SURVEY.md §7.6): the
   * engine's batch-incremental cursor (graft.api.Stream — strictly-greater-
@@ -33,11 +33,10 @@ import graft.catalog.{TableCatalog, VersionInfo}
   * Scale shape of the POLL path: `getOffset` answers from the manifest's
   * footer-harvested per-version column max ([[graft.catalog.VersionInfo]]
   * `cursorMax`, stamped at commit next to `rowCount`) — a KB-sized JSON
-  * read per trigger, no Spark job. Only versions written by pre-stats
-  * manifests (or cursor columns whose parquet stats were untrustworthy)
-  * fall back to a `max()` scan. A 100 TB table on a 1 s trigger polls for
-  * free; the per-poll full scan this replaced was the round-5 verdict's
-  * scale-killer.
+  * read per trigger, no Spark job. Only cursor columns whose parquet
+  * stats were untrustworthy fall back to a `max()` scan. A 100 TB table
+  * on a 1 s trigger polls for free; the per-poll full scan this replaced
+  * was the round-5 verdict's scale-killer.
   */
 class GraftTableSourceProvider extends StreamSourceProvider with DataSourceRegister {
 
@@ -67,11 +66,9 @@ class GraftTableSourceProvider extends StreamSourceProvider with DataSourceRegis
     val vid = m.activeVersion.getOrElse(throw new IllegalArgumentException(
       s"graft-table source: '$table' has no active version to infer a " +
         "schema from; pass .schema(...) explicitly"))
-    // canonical recipe (versionScan) — and a FILELESS active version
-    // (reset, crash-before-write) gets the same clean error as
-    // no-active-version, not Spark's 'Unable to infer schema'
-    cat.versionScan(sqlContext.sparkSession, table, vid)
-      .map(df => StructType(df.schema.fields))
+    // the version's schema stamp — and a FILELESS active version (reset,
+    // crash-before-write) gets the same clean error as no-active-version
+    cat.versionInfo(table, vid).flatMap(_.readSchema)
       .getOrElse(throw new IllegalArgumentException(
         s"graft-table source: '$table' has no data yet to infer a " +
           "schema from; pass .schema(...) explicitly"))
@@ -133,19 +130,15 @@ class GraftTableSource(sqlContext: SQLContext, cat: TableCatalog,
 
   private def spark = sqlContext.sparkSession
 
-  // single owner of the version-dir layout: TableCatalog.versionScan —
-  // fileless versions (reset(), crash-before-write) read as None, and the
-  // scan recipe (the version's commit-time schema stamp, mergeSchema only
-  // for unstamped versions, __bucket dropped) is Table.read's, so building
-  // a batch starts no schema-inference job
+  // Table.read's recipe (TableCatalog.scan): the version's listed files
+  // with its schema stamp, from one manifest read, so building a batch
+  // lists nothing and starts no job; fileless versions (reset(),
+  // crash-before-write) read as None
   private def versionDf(vid: String): Option[DataFrame] =
-    cat.versionScan(spark, table, vid)
-
-  private def activeVid: Option[String] =
-    cat.refresh(table).flatMap(_.activeVersion)
+    cat.versionInfo(table, vid).flatMap(cat.scan(spark, table, _))
 
   private def activeDf: Option[DataFrame] =
-    activeVid.flatMap(versionDf)
+    cat.activeInfo(table).flatMap(cat.scan(spark, table, _))
 
   private def cursorCol = col(orderBy)
 
@@ -166,12 +159,16 @@ class GraftTableSource(sqlContext: SQLContext, cat: TableCatalog,
     * or none, never a truncated value.
     */
   private val hwPath = new org.apache.hadoop.fs.Path(metadataPath, "graft-high-water")
-  private def hwFs = hwPath.getFileSystem(spark.sessionState.newHadoopConf())
+  // one filesystem per source, on the engine's write options: a local
+  // checkpoint gets CatalogFileSystem (each clamp write would otherwise
+  // fork a `chmod` per file without libhadoop); other schemes are as
+  // before. The local instance is uncached, so this source closes it
+  private val hwFs = hwPath.getFileSystem(
+    spark.sessionState.newHadoopConfWithOptions(CatalogFileSystem.writeOptions))
 
-  @volatile private var highWater: Option[Any] = {
-    val fs = hwFs
-    if (fs.exists(hwPath)) {
-      val in = fs.open(hwPath)
+  @volatile private var highWater: Option[Any] =
+    if (hwFs.exists(hwPath)) {
+      val in = hwFs.open(hwPath)
       val enc = try {
         val out = new java.io.ByteArrayOutputStream()
         org.apache.hadoop.io.IOUtils.copyBytes(in, out, 4096, false)
@@ -179,18 +176,16 @@ class GraftTableSource(sqlContext: SQLContext, cat: TableCatalog,
       } finally in.close()
       Some(decode(enc))
     } else None
-  }
 
   private def persistHighWater(enc: String): Unit = {
-    val fs = hwFs
     val tmp = new org.apache.hadoop.fs.Path(
       hwPath.getParent, hwPath.getName + ".tmp")
-    val out = fs.create(tmp, true)
+    val out = hwFs.create(tmp, true)
     try out.write(enc.getBytes(java.nio.charset.StandardCharsets.UTF_8))
     finally out.close()
     // HDFS rename won't overwrite; the previous clamp is superseded anyway
-    if (fs.exists(hwPath)) fs.delete(hwPath, false)
-    fs.rename(tmp, hwPath)
+    if (hwFs.exists(hwPath)) hwFs.delete(hwPath, false)
+    hwFs.rename(tmp, hwPath)
   }
 
   /** An offset string decoded against the cursor column's type. Offsets
@@ -225,7 +220,7 @@ class GraftTableSource(sqlContext: SQLContext, cat: TableCatalog,
   private sealed trait Poll
   private case object NoData extends Poll          // no rows to offer
   private case class Cursor(v: Any) extends Poll   // max known from stamps
-  private case object NeedScan extends Poll        // legacy/unstamped: scan
+  private case object NeedScan extends Poll        // column unstamped: scan
 
   private def manifestPoll(): (Poll, Option[String]) =
     cat.refresh(table) match {
@@ -236,11 +231,10 @@ class GraftTableSource(sqlContext: SQLContext, cat: TableCatalog,
           case None => (NoData, active)
           case Some(v) =>
             val poll =
-              if (v.rowCount.contains(0L)) NoData // committed empty
+              if (v.files.isEmpty || v.rowCount.contains(0L)) NoData // nothing listed
               else v.cursorMax.flatMap(_.get(orderBy)) match {
                 case Some(enc) => Cursor(decode(enc))
-                // rowCount known but this column unstamped (untrusty
-                // parquet stats), or a pre-stats manifest: scan
+                // this column unstamped (untrusty parquet stats): scan
                 case None => NeedScan
               }
             (poll, active)
@@ -328,5 +322,9 @@ class GraftTableSource(sqlContext: SQLContext, cat: TableCatalog,
   override def stop(): Unit = {
     currentLease.foreach(_.release())
     currentLease = None
+    hwFs match {
+      case local: CatalogFileSystem => local.close()
+      case _ => // a cached, shared instance: not this source's to close
+    }
   }
 }

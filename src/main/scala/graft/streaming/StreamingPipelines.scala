@@ -209,7 +209,9 @@ object StreamingPipelines {
     * CALL TIME — append/flush workloads only. An upsert/replace/truncate
     * swaps the active pointer to a NEW directory, which this stream does
     * not follow; restart the query (new tailTable call) after a version
-    * swap.
+    * swap. It tails the directory, not the manifest's file list, so it
+    * also sees the files of a failed write that no manifest lists, and
+    * sees a flush's files before the flush commits.
     */
   def tailTable(table: graft.api.Table): DataFrame = {
     val sch = table.schema.getOrElse(throw new IllegalStateException(

@@ -141,7 +141,7 @@ class BucketedTableSpec extends SparkSpec {
     t.append((1L to 12L).map(i => (i, s"v$i")).toDF("id", "v")); t.flush()
     t.reset()
     val vid = t.getActiveVersion.get
-    assert(!e.catalog.hasDataFiles("b9", vid))
+    assert(e.catalog.versionInfo("b9", vid).exists(_.files.isEmpty))
     assert(recorded(e, "b9", vid) == Some(4))
   }
 

@@ -370,33 +370,33 @@ class Round8HardeningSpec extends SparkSpec {
     // wrap anywhere on the path) — documented headroom ~1e19 money units
   }
 
-  test("post-commit flush failure: no duplicates on retry, stamp dropped") {
+  test("failed flush: stamp unchanged, buffer kept, retry lands once") {
     val e = new GraftEngine(spark, freshRoot())
     val t = e.table("stampfail", "w")
-    t.append(Seq((1L, "a"), (2L, "b")).toDF("id", "v"))
-    Table.postAppendHook =
-      () => throw new RuntimeException("injected post-commit failure")
-    try t.flush()
+    t.append(Seq((1L, "a"), (2L, "b")).toDF("id", "v")); t.flush()
+    def activeInfo = e.catalog.activeInfo("stampfail").get
+    val committed = activeInfo
+    // the hook runs after the Spark write, before the files are registered
+    t.append(Seq((3L, "c"), (4L, "d")).toDF("id", "v"))
+    Table.postAppendHook = () => throw new RuntimeException("injected failure")
+    try intercept[RuntimeException](t.flush())
     finally Table.postAppendHook = () => ()
-    def activeInfo = t.manifest.versions
-      .find(v => t.manifest.activeVersion.contains(v.id)).get
-    // the append committed before the failure: rows are durable, the
-    // failure is non-fatal, and the buffer is drained — a retry must not
-    // re-append the batch
-    assert(t.read.count() == 2, "rows land exactly once")
+    // the written files are in the dir but unlisted: no new row is
+    // visible, and the stamp (rows, cursor maxes, schema, files) is as
+    // committed — a streaming poll neither skips nor sees the batch
+    assert(t.read.count() == 2, "no row of a failed flush is visible")
+    assert(activeInfo == committed, "a failed flush must leave the stamp as it was")
+    val orphans = e.catalog.filesOnDisk("stampfail", committed.id).map(_.path).toSet --
+      committed.files.map(_.path)
+    assert(orphans.nonEmpty, "the failed write's files stay in the dir")
+    // the buffer was kept: the retry writes the batch again, once
     t.flush()
-    assert(t.read.count() == 2, "retry after post-commit failure is a no-op")
-    // the stamp was DROPPED (scan fallback), never left stale at the
-    // pre-append count — a stale cursorMax would make a streaming poll
-    // skip the appended rows forever
-    assert(activeInfo.rowCount.isEmpty,
-      "failed stamp must clear the version stats, not leave them stale")
-    assert(t.recordCount.contains(2L), "recordCount falls back to a scan")
-    // the next successful flush recomputes a FULL fresh stamp
-    t.append(Seq((3L, "c")).toDF("id", "v")); t.flush()
-    assert(activeInfo.rowCount.contains(3L),
-      "next flush restamps from scratch")
-    assert(t.recordCount.contains(3L))
+    assert(t.read.select("id").as[Long].collect().sorted.toSeq == Seq(1L, 2L, 3L, 4L))
+    assert(t.recordCount.contains(4L))
+    val listed = activeInfo.files.map(_.path).toSet
+    assert(listed.intersect(orphans).isEmpty && listed.size == committed.files.size + orphans.size,
+      "the manifest lists the retry's files, never the failed write's")
+    assert(e.catalog.filesOnDisk("stampfail", committed.id).map(_.path).toSet == listed ++ orphans)
   }
 
   test("retention churn soak: appends/time-travel/compact/gc interleave") {

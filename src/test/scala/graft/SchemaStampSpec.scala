@@ -1,18 +1,14 @@
 package graft
 
-import java.nio.charset.StandardCharsets
-import java.nio.file.Files
-
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.types.{DataType, StructType}
 
 import graft.api.{GraftEngine, Table}
 
 /** Commit-time schema stamp (VersionInfo.schema): on every write path the
-  * stamp must equal what a `mergeSchema` read of the version dir infers,
-  * and a read through the stamp must return the same rows. Versions
-  * without a stamp (legacy manifests, mid-widening appends) must fall back
-  * to inference — never read narrower than the files on disk.
+  * stamp must equal what a `mergeSchema` read of the version's listed
+  * files infers, and a read through the stamp must return the same rows.
+  * A read in the middle of a write sees exactly the committed version.
   */
 class SchemaStampSpec extends SparkSpec {
   import spark.implicits._
@@ -26,9 +22,8 @@ class SchemaStampSpec extends SparkSpec {
   }
 
   private def inferredRead(e: GraftEngine, t: Table): DataFrame =
-    spark.read.option("mergeSchema", "true")
-      .parquet(e.catalog.versionDir(t.name, t.getActiveVersion.get).toString)
-      .drop("__bucket")
+    spark.read.option("mergeSchema", "true").parquet(e.catalog.activeInfo(t.name).get
+      .files.map(f => e.catalog.tableDir(t.name).resolve(f.path).toString): _*)
 
   private def rowsOf(df: DataFrame): Seq[String] =
     df.collect().map(_.toSeq.mkString("|")).toSeq.sorted
@@ -126,55 +121,32 @@ class SchemaStampSpec extends SparkSpec {
     assert(t.read.count() == 30)
   }
 
-  test("a manifest without schema stamps still reads through inference, and the next flush stamps it") {
-    val root = freshRoot()
-    val e = engine(root)
-    val t = e.table("s6", "w")
-    t.append(Seq((1L, "a")).toDF("id", "v")); t.flush()
-    t.append(Seq((2L, "b", 3)).toDF("id", "v", "n")); t.flush()
-    val expected = rowsOf(t.read)
-    // rewrite the manifest the way an older writer left it: no schema key
-    val mf = e.catalog.tableDir("s6").resolve("manifest.json")
-    val json = new String(Files.readAllBytes(mf), StandardCharsets.UTF_8)
-    val legacy = json.replaceAll(""","schema":"(\\.|[^"\\])*"""", "")
-    assert(legacy != json && !legacy.contains("\"schema\""))
-    Files.write(mf, legacy.getBytes(StandardCharsets.UTF_8))
-
-    val e2 = engine(root)
-    val t2 = e2.table("s6", "w")
-    assert(stampOf(e2, t2).isEmpty)
-    assert(t2.schema.contains(inferredRead(e2, t2).schema))
-    assert(rowsOf(t2.read) == expected)
-    t2.append(Seq((3L, "c", 4)).toDF("id", "v", "n")); t2.flush()
-    assertStampEquivalent(e2, t2)
-  }
-
-  test("a read in the middle of a column-adding flush never comes back narrowed") {
+  test("a mid-flush read sees exactly the committed rows and columns") {
     val root = freshRoot()
     val e = engine(root)
     val t = e.table("s7", "w")
     t.append(Seq((1L, "a")).toDF("id", "v")); t.flush()
-    assert(stampOf(e, t).nonEmpty)
-    var seen = Seq.empty[(Option[StructType], Seq[String], Seq[String])]
-    // the hook runs after the widening append committed, before the
-    // restamp: readers on this catalog and on a second one over the same
-    // root must see the new column (the stamp was cleared before the
-    // write, so both fall back to inference)
+    val committed = stampOf(e, t)
+    assert(committed.nonEmpty)
+    var seen = Seq.empty[(Option[StructType], Seq[String], Seq[String], Seq[String], Seq[String])]
+    // the hook runs after the column-adding write, before its files are
+    // registered: readers on this catalog and on a second engine over the
+    // same root see the committed version, not the files on disk
     Table.postAppendHook = () => {
       val other = engine(root).table("s7")
-      seen :+= ((stampOf(e, t), t.read.columns.toSeq, other.read.columns.toSeq))
+      seen :+= ((stampOf(e, t), t.read.columns.toSeq, rowsOf(t.read),
+        other.read.columns.toSeq, rowsOf(other.read)))
     }
-    try {
-      t.append(Seq((2L, "b", 2.5)).toDF("id", "v", "extra")); t.flush()
-      // a non-widening append keeps its stamp throughout
-      t.append(Seq((3L, "c")).toDF("id", "v")); t.flush()
-    } finally Table.postAppendHook = () => ()
-    val Seq((midStamp, mine, theirs), (keptStamp, mine2, theirs2)) = seen
-    assert(midStamp.isEmpty, "a widening append must clear the stamp before writing")
-    assert(mine.contains("extra") && theirs.contains("extra"))
-    assert(keptStamp.exists(_.fieldNames.contains("extra")))
-    assert(mine2.contains("extra") && theirs2.contains("extra"))
+    try { t.append(Seq((2L, "b", 2.5)).toDF("id", "v", "extra")); t.flush() }
+    finally Table.postAppendHook = () => ()
+    val Seq((midStamp, mine, myRows, theirs, theirRows)) = seen
+    assert(midStamp == committed, "the stamp changes only at registration")
+    assert(mine == Seq("id", "v") && theirs == Seq("id", "v"))
+    assert(myRows == Seq("1|a") && theirRows == Seq("1|a"))
+    // after the commit both see the new column and rows
+    val other = engine(root).table("s7")
+    assert(t.read.columns.contains("extra") && other.read.columns.contains("extra"))
+    assert(rowsOf(other.read) == rowsOf(t.read) && t.read.count() == 2)
     assertStampEquivalent(e, t)
-    assert(t.read.count() == 3)
   }
 }

@@ -395,7 +395,10 @@ class StreamingSourcesSpec extends SparkSpec {
     val s1 = provider.createSource(ctx, meta, None, "graft-table", params)
     def off(s: org.apache.spark.sql.execution.streaming.Source): Option[String] =
       s.getOffset.map(o => CursorOffset.parse(o.json).value)
+    val inProcess = graft.catalog.CatalogFileSystem.inProcess.get
     assert(off(s1) == Some("9"))
+    assert(graft.catalog.CatalogFileSystem.inProcess.get > inProcess,
+      "the clamp's file modes must be set in-process, not by a forked chmod")
     assert(Files.exists(metaDir.resolve("graft-high-water")),
       "high-water must persist inside the URI checkpoint dir")
     assert(!new java.io.File("file:").exists(),
@@ -409,6 +412,7 @@ class StreamingSourcesSpec extends SparkSpec {
       "restart must not regress below the persisted high water")
     t.append(Seq((12L, "d")).toDF("id", "v")); t.flush()
     assert(off(s2) == Some("12"))
+    s1.stop(); s2.stop()
   }
 
   test("graft-table source: getOffset answers from the manifest - no Spark job per poll") {

@@ -322,9 +322,17 @@ class TableSpec extends SparkSpec {
     assert(t.readVersion(v2).as[(Long, String)].collect().toSet ==
       Set((1L, "a"), (2L, "B"), (3L, "c")))
     intercept[IllegalArgumentException](t.readVersion("v999999"))
-    // simulate retention GC of the old dir: loud failure, not empty frame
+    // files deleted behind the catalog's back: the read fails loudly, never
+    // as an empty frame
     val dir = e.catalog.versionDir("t19", v1).toFile
     dir.listFiles().foreach(_.delete()); dir.delete()
+    intercept[org.apache.spark.SparkException](t.readVersion(v1).collect())
+    // retention GC (its leases expired) drops the entry with the dir: the
+    // time-travel read fails loudly up front
+    java.nio.file.Files.list(e.catalog.tableDir("t19").resolve("leases")).forEach { p =>
+      java.nio.file.Files.write(p, "0".getBytes("UTF-8"))
+    }
+    assert(e.catalog.gc("t19", 0L) == 1)
     intercept[IllegalArgumentException](t.readVersion(v1))
   }
 
@@ -387,6 +395,12 @@ class TableSpec extends SparkSpec {
     val bucketed = e.table("zj2", "w").init(uniqueOn = Seq("id"), bucketBy = 4)
     bucketed.append((1L to 20L).map(i => (i, s"v$i")).toDF("id", "v")); bucketed.flush()
     bucketed.upsert(Seq((3L, "NEW")).toDF("id", "v"))
+    // 40 files in one version: above the 32 paths at which a read of
+    // explicit paths starts a listing job
+    val wide = e.table("zj3", "w")
+    wide.append(spark.range(0, 400, 1, 40).toDF("id").withColumn("v", $"id".cast("string")))
+    wide.flush()
+    assert(e.catalog.activeInfo("zj3").get.files.size == 40)
     val groups = new java.util.concurrent.ConcurrentLinkedQueue[String]()
     val listener = new org.apache.spark.scheduler.SparkListener {
       override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
@@ -407,7 +421,7 @@ class TableSpec extends SparkSpec {
       groups.toArray.count(_ == group)
     }
     try {
-      Seq(plain -> "id", bucketed -> "id").foreach { case (t, ob) =>
+      Seq(plain -> "id", bucketed -> "id", wide -> "id").foreach { case (t, ob) =>
         val probe = s"zj-probe-${t.name}"
         assert(jobsIn(probe) {
           t.read
@@ -416,10 +430,11 @@ class TableSpec extends SparkSpec {
           t.asStream(orderBy = ob).plan()
         } == 0, s"${t.name}: reading a stamped version must start no Spark job")
       }
-      // positive control: the same read of an UNSTAMPED version infers
-      // its schema with a Spark job, which the probe above would have seen
-      e.catalog.clearVersionSchema("zj1", plain.getActiveVersion.get)
-      assert(jobsIn("zj-control")(plain.read) > 0)
+      // positive control: a schema-inferring read of the same version dir
+      // merges its footers in a Spark job, which the probe above would
+      // have seen
+      assert(jobsIn("zj-control")(spark.read.option("mergeSchema", "true")
+        .parquet(e.catalog.versionDir("zj1", plain.getActiveVersion.get).toString)) > 0)
     } finally spark.sparkContext.removeSparkListener(listener)
   }
 
