@@ -2,12 +2,6 @@ package graft.api
 
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DataType, IntegerType, LongType, StringType, TimestampType}
-import org.apache.spark.unsafe.types.UTF8String
-
-import org.apache.spark.sql.graft.LocalInternals
-
-import graft.catalog.VersionInfo
 
 /** Stateful exactly-once cursor over a Table (reference node.py:18-81):
   * consume each record at most once, in the total order of `orderBy`, with
@@ -24,14 +18,15 @@ import graft.catalog.VersionInfo
   *     position (execution start or last checkpoint), `rewind` restarts
   *     from the beginning (node.py:54-68).
   *
-  * Scale: the plan is filter(orderBy > cursor) + orderBy — the filter
-  * reaches the parquet scan (min/max pruning skips fully-consumed files
-  * when versions are written sorted on the cursor column). A consume
-  * first reads the active version's commit stamp: when its stamped max of
-  * the order column is at or below the cursor, nothing is new and no
-  * Spark job runs. A version under the driver-residency bound
+  * Scale: a consume reads only the listed files of the active version
+  * whose stamped max of the order column may lie above the cursor
+  * ([[graft.catalog.VersionInfo.after]]), so its cost follows what is
+  * new, not the table's history; when no file qualifies, nothing is new
+  * and no Spark job runs. The plan over those files is
+  * filter(orderBy > cursor) + orderBy, the filter pushed into the parquet
+  * scan. Files under the driver-residency bound
   * ([[Table.driverResident]]: bytes and stamped rows within
-  * `spark.sql.autoBroadcastJoinThreshold`) is read in one pass, one task,
+  * `spark.sql.autoBroadcastJoinThreshold`) are read in one pass, one task,
   * sorted within that partition, and held whole on the driver; above the
   * bound only one partition at a time is resident, via toLocalIterator
   * over the globally sorted plan.
@@ -55,7 +50,11 @@ class Stream(table: Table, val orderByField: String, state: State,
   private def loadPersisted(): Option[Any] =
     state.get(stateKey).filter(_ != null)
 
-  private[graft] def plan(): DataFrame = plan(table.read)
+  /** The plan a consume runs now: the unconsumed rows of the files past
+    * the cursor, in order.
+    */
+  private[graft] def plan(): DataFrame =
+    plan(table.readOf(table.activeStamp.flatMap(_.after(orderByField, cursor))))
 
   private def plan(base: DataFrame): DataFrame =
     unconsumed(base).orderBy(col(orderByField).asc)
@@ -86,35 +85,22 @@ class Stream(table: Table, val orderByField: String, state: State,
     }
   }
 
-  /** The active version's stamp proves there is nothing to consume: it
-    * lists no rows, or its stamped max of the order column is at or
-    * below the cursor (the check `GraftTableSource.getOffset` makes).
-    * Only exact type matches compare; anything else scans.
-    */
-  private def nothingNew(v: VersionInfo): Boolean =
-    v.files.isEmpty || v.rowCount.contains(0L) || (for {
-      c <- cursor
-      enc <- v.cursorMax.flatMap(_.get(orderByField))
-      s <- v.readSchema
-      f <- s.find(_.name == orderByField)
-    } yield Stream.atOrBelow(enc, f.dataType, c)).contains(true)
-
   /** Iterate unconsumed records in order, advancing the in-memory cursor as
     * each row is yielded (node.py:40-52).
     */
   def consumeRecords(): Iterator[Row] = {
     import scala.jdk.CollectionConverters._
-    // one manifest snapshot decides, and is read: its stamp, its files
-    val stamp = table.activeStamp
+    // one manifest snapshot decides, and is read: the files past the cursor
+    val fresh = table.activeStamp.flatMap(_.after(orderByField, cursor))
     val it =
-      if (stamp.exists(nothingNew)) Iterator.empty
+      if (fresh.isEmpty) Iterator.empty
       // one pass, one task: Spark's own sort order within the single
       // partition instead of a range-partitioned global sort, which
       // samples the unconsumed rows in a job of its own first
-      else if (stamp.exists(table.driverResident))
-        unconsumed(table.readOf(stamp)).coalesce(1)
+      else if (fresh.exists(table.driverResident))
+        unconsumed(table.readOf(fresh)).coalesce(1)
           .sortWithinPartitions(col(orderByField).asc).collect().iterator
-      else plan(table.readOf(stamp)).toLocalIterator().asScala
+      else plan(table.readOf(fresh)).toLocalIterator().asScala
     new Iterator[Row] {
       def hasNext: Boolean = it.hasNext
       def next(): Row = {
@@ -169,24 +155,4 @@ class Stream(table: Table, val orderByField: String, state: State,
     case d: java.sql.Date => d.toString
     case other => other
   }
-}
-
-object Stream {
-  /** Whether the stamped max `enc` (the streaming offset encoding) is at
-    * or below `cursor` in Spark's ordering of `dt`. False when the
-    * cursor's runtime class does not compare exactly with the column's (a
-    * timestamp cursor reloaded as a string, a seek()ed value of another
-    * type): the caller then scans.
-    */
-  private[api] def atOrBelow(enc: String, dt: DataType, cursor: Any): Boolean =
-    scala.util.Try((dt, cursor) match {
-      // a persisted cursor reloads as a Long whatever its column's width
-      case (LongType | IntegerType, c @ (_: java.lang.Long | _: java.lang.Integer)) =>
-        enc.toLong <= c.asInstanceOf[Number].longValue
-      case (s: StringType, c: String) if LocalInternals.binaryString(s) =>
-        UTF8String.fromString(enc).compareTo(UTF8String.fromString(c)) <= 0
-      case (TimestampType, c: java.sql.Timestamp) =>
-        !java.sql.Timestamp.from(java.time.Instant.parse(enc)).after(c)
-      case _ => false
-    }).getOrElse(false)
 }

@@ -16,26 +16,27 @@ import graft.catalog.{CatalogFileSystem, DataFile, TableCatalog, VersionInfo}
 
 /** Named, versioned table port (reference node.py:117-414).
   *
-  * Storage: one parquet directory per version under the catalog root; the
-  * manifest's active pointer picks the readable version, and each
-  * version's manifest entry lists its data files ([[VersionInfo.files]])
-  * and records its layout (flat files, or the `init(bucketBy)` hash
-  * buckets it was minted with: [[VersionInfo.buckets]]), which every write
-  * into it and every bucket-pruned read follows. A read is a parquet scan
-  * of exactly the files the active entry lists, with the entry's schema
-  * stamp (full Catalyst pushdown/pruning, no listing, no planning job);
-  * writes are buffered and flushed as parquet appends (node.py:306-307,
-  * :407-414); upsert/replace/truncate are copy-on-write into a fresh
-  * version + pointer swap, so readers of the old version are never torn.
-  * Every write ends in one manifest mutation that registers its files
-  * with the version's new stamp; its rows are invisible until then.
+  * Storage: a version is the list of data files in its manifest entry
+  * ([[VersionInfo.files]]), each with its footer stamp; the manifest's
+  * active pointer picks the readable version. Each version writes its
+  * files into its own dir under the catalog root and records its layout
+  * (flat files, or the `init(bucketBy)` hash buckets it was minted with:
+  * [[VersionInfo.buckets]]), which every write into it and every
+  * bucket-pruned read follows. A read is a parquet scan of exactly the
+  * files the active entry lists, with the entry's schema stamp (full
+  * Catalyst pushdown/pruning, no listing, no planning job); writes are
+  * buffered and flushed as parquet appends (node.py:306-307, :407-414);
+  * upsert/replace/truncate mint a fresh version + pointer swap, so readers
+  * of the old version are never torn. Every write ends in one manifest
+  * mutation that registers its files; its rows are invisible until then.
   *
-  * 100 TB note: every data operation is a Spark job over the version dir —
+  * 100 TB note: every data operation is a Spark job over listed files —
   * nothing row-sized crosses the driver except explicit `readRecords`,
   * a stream consume under the driver-residency bound, and rows that are
   * already on the driver. Upsert rewrites the table (O(table) per call,
   * SURVEY.md §7.4); on a bucketed layout it rewrites only the buckets its
-  * keys hash to and copies the rest (see [[upsert]]).
+  * keys hash to and lists the parent's files for the rest (see
+  * [[upsert]]).
   *
   * Local path: a write whose input's optimized plan is a `LocalRelation`
   * or a union of them (webhook batches, rows built by node code, the rows
@@ -53,7 +54,7 @@ import graft.catalog.{CatalogFileSystem, DataFile, TableCatalog, VersionInfo}
 class Table(engine: GraftEngine, val name: String, val mode: String = "r",
     val required: Boolean = true, val connected: Boolean = true) {
   import engine.spark
-  private val catalog: TableCatalog = engine.catalog
+  private[graft] val catalog: TableCatalog = engine.catalog
   private val buffer = ArrayBuffer.empty[DataFrame]
 
   /** Whether this port is bound to a store in the graph (node.py:232-238).
@@ -81,11 +82,6 @@ class Table(engine: GraftEngine, val name: String, val mode: String = "r",
 
   def hasActiveVersion: Boolean = connected && manifest.activeVersion.isDefined
 
-  /** Filesystem path of the active version dir (streaming tail target). */
-  def activeVersionDir: Option[String] =
-    manifest.activeVersion.filter(_ => connected)
-      .map(vid => catalog.versionDir(name, vid).toString)
-
   def exists: Boolean = activeStamp.exists(_.files.nonEmpty)
 
   /** Schema of the active version — the commit-time stamp, read from the
@@ -100,35 +96,34 @@ class Table(engine: GraftEngine, val name: String, val mode: String = "r",
     */
   def recordCount: Option[Long] = activeStamp.flatMap(_.rowCount)
 
-  /** Row count, per-column max AND merged Spark schema of a file set
+  /** Each file's footer stamp ([[DataFile]]: rows, per-column max, the
+    * columns its footer disqualifies) and the files' merged Spark schema,
     * from parquet FOOTERS — metadata-only, O(#files) driver-side reads, no
-    * Spark job. Stamped into the manifest at commit so [[recordCount]] is
-    * O(1) (reference TableVersion.record_count, node.py:106-109), so the
+    * Spark job. Read once per file, when its write commits: a version's
+    * row count ([[recordCount]] is O(1), reference
+    * TableVersion.record_count, node.py:106-109) and column maxes (the
     * streaming source's `getOffset` poll is a manifest lookup instead of a
-    * table-sized `max()` scan per trigger, and so every read of the
-    * version takes the stamp as its schema instead of a footer-merge job.
+    * table-sized `max()` scan per trigger) fold these stamps
+    * ([[VersionInfo.rowCount]], [[VersionInfo.cursorMax]]), and every read
+    * of the version takes the schema stamp instead of a footer-merge job.
     *
-    * The max map only carries columns whose footer statistics are present
-    * and trustworthy in EVERY row group of every file: plain INT32/INT64/
+    * A column's max is usable only when its footer statistics are present
+    * and trustworthy in EVERY row group of the file: plain INT32/INT64/
     * DOUBLE, INT64 timestamps (micro/milli/nano logical annotation;
     * INT96 has no usable stats), and short UTF-8 binaries (parquet-mr may
     * truncate or omit stats for large binaries, and a truncated max is a
-    * BOUND, not a value — unsafe as a cursor). Missing columns make the
-    * streaming source fall back to a scan, never return a wrong offset.
+    * BOUND, not a value — unsafe as a cursor). Any other row group of the
+    * column disqualifies it ([[VersionInfo.foldMax]]), so the streaming
+    * source falls back to a scan, never returns a wrong offset. A row
+    * group whose column is all null holds no value and leaves it as it is.
     *
-    * Returns (rows, per-column max, schema). Map value semantics:
-    * `Some(v)` = qualified running max, `None` = column SEEN but
-    * disqualified (unusable stats, unsupported type, truncated binary, or
-    * mixed physical types across files); a column absent from the map
-    * never appeared in any footer. The schema
-    * folds each file's Spark footer schema in path order with
+    * The schema folds each file's Spark footer schema in path order with
     * `StructType.merge` — the order and merge a `mergeSchema` read uses,
     * so the stamp equals what inference would return (an empty struct for
     * no files). None when a file has no Spark footer schema or two files
     * have incompatible types.
     */
-  private def footerStatsCore(files: Seq[java.io.File])
-      : (Long, Map[String, Option[Any]], Option[StructType]) = {
+  private[graft] def footerStatsCore(files: Seq[DataFile]): (Seq[DataFile], Option[StructType]) = {
     import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName._
     import org.apache.parquet.schema.LogicalTypeAnnotation
     import org.apache.parquet.schema.LogicalTypeAnnotation.TimestampLogicalTypeAnnotation
@@ -140,30 +135,20 @@ class Table(engine: GraftEngine, val name: String, val mode: String = "r",
     // parquet crypto factory needs per-file (decryption) options
     val decrypting = conf.get("parquet.crypto.factory.class") != null
     lazy val readOptions = HadoopReadOptions.builder(conf).build()
-    var rows = 0L
-    // per-column running max over all row groups; a column drops to None
-    // (untracked forever) the first time a row group lacks usable stats
-    val maxes = scala.collection.mutable.Map.empty[String, Option[Any]]
-    var schema: Option[StructType] = Some(new StructType())
-    files.sortBy(_.getAbsolutePath).foreach { f =>
-      val path = new org.apache.hadoop.fs.Path(f.getAbsolutePath)
+    val stamped = files.map { f =>
+      val path = new org.apache.hadoop.fs.Path(
+        catalog.tableDir(name).resolve(f.path).toFile.getAbsolutePath)
       val r = org.apache.parquet.hadoop.ParquetFileReader.open(
         org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(path, conf),
         if (decrypting) HadoopReadOptions.builder(conf, path).build() else readOptions)
       try {
-        rows += r.getRecordCount
-        schema = for {
-          acc <- schema
-          json <- Option(r.getFooter.getFileMetaData.getKeyValueMetaData
-            .get(SchemaInternals.FooterKey))
-          fileSchema <- SchemaInternals.parse(json)
-          merged <- mergeSchemas(acc, fileSchema)
-        } yield merged
+        var maxes = Map.empty[String, Option[Any]]
         r.getFooter.getBlocks.forEach { block =>
           block.getColumns.forEach { c =>
-            if (c.getPath.size() == 1) { // top-level scalars only
-              val name = c.getPath.toDotString
-              val stats = c.getStatistics
+            val stats = c.getStatistics
+            val allNull = stats != null && stats.isNumNullsSet && !stats.hasNonNullValue &&
+              stats.getNumNulls == c.getValueCount
+            if (c.getPath.size() == 1 && !allNull) { // top-level scalars only
               val usable = stats != null && !stats.isEmpty &&
                 stats.hasNonNullValue
               // ONLY (physical, logical) pairs whose stamped string
@@ -206,29 +191,22 @@ class Table(engine: GraftEngine, val name: String, val mode: String = "r",
                     if (bin.length <= 256) Some(bin.toStringUsingUTF8) else None
                   case _ => None
                 }
-              maxes.get(name) match {
-                case Some(None) => // already disqualified
-                case prev =>
-                  maxes(name) = (prev.flatten, v) match {
-                    case (_, None) => None
-                    case (None, nv) => nv
-                    case (Some(p), Some(n)) =>
-                      // files whose column differs in PHYSICAL type make
-                      // this compare heterogeneous — disqualify the column
-                      // (readers fall back to a scan) instead of failing
-                      // the commit
-                      try Some(
-                        if (p.asInstanceOf[Comparable[Any]].compareTo(n) >= 0) p
-                        else n)
-                      catch { case _: ClassCastException => None }
-                  }
-              }
+              maxes = VersionInfo.foldMax(maxes, c.getPath.toDotString, v)
             }
           }
         }
+        val footerSchema = Option(r.getFooter.getFileMetaData.getKeyValueMetaData
+          .get(SchemaInternals.FooterKey)).flatMap(SchemaInternals.parse)
+        (f.copy(rows = Some(r.getRecordCount),
+          maxes = maxes.collect { case (k, Some(v)) => k -> VersionInfo.encode(v) },
+          disqualified = maxes.collect { case (k, None) => k }.toList.sorted), footerSchema)
       } finally r.close()
     }
-    (rows, maxes.toMap, schema)
+    val schema = stamped.sortBy(_._1.path).foldLeft(Option(new StructType())) {
+      case (acc, (_, fileSchema)) =>
+        for (a <- acc; s <- fileSchema; merged <- mergeSchemas(a, s)) yield merged
+    }
+    (stamped.map(_._1), schema)
   }
 
   /** `a` merged with `b` under the session's case sensitivity (as a
@@ -238,78 +216,55 @@ class Table(engine: GraftEngine, val name: String, val mode: String = "r",
     scala.util.Try(SchemaInternals.merge(a, b,
       spark.sessionState.conf.caseSensitiveAnalysis)).toOption
 
-  /** Version `v`'s stamp once `added` joins its listed files: (rows,
-    * per-column max, schema; no schema for no files). A version without
-    * files is stamped from `added`'s footers alone; otherwise only
-    * `added`'s footers are read (an append-heavy table would otherwise pay
-    * O(all files) footer reads per flush) and merged onto `v`'s stamp.
-    * Merge rules (all CONSERVATIVE — a dropped column costs a scan
-    * fallback, a wrong max would corrupt streaming offsets):
-    *   - column stamped before + qualified in the new files → max of the
-    *     two (decode the stored string by the column's type in the schema
-    *     stamp; any decode/compare failure, e.g. a new file of another
-    *     type, disqualifies);
-    *   - stamped before + absent from the new files (schema evolution:
-    *     the new rows are all-null there) → keep the previous max;
-    *   - stamped before + DISQUALIFIED in a new file → disqualified;
-    *   - NOT stamped before → stays unstamped, even if the new files
-    *     could stamp it: absence can mean "disqualified by an older file"
-    *     (data-dependent, e.g. a truncated >256-byte binary bound), and
-    *     stamping from new files alone could UNDERSTATE the true max.
-    *     The next upsert/replace (fresh version, full stamp) recovers it.
-    * The schema is `v`'s merged with the new files'. Throws when a footer
-    * yields no schema (a file without Spark's footer schema, incompatible
-    * types): such files are never registered.
+  /** Write `df` into version `vid` and commit it: the write's files (the
+    * version dir's parquet files that were not there before it) are
+    * footer-stamped ([[footerStatsCore]]) and registered after the
+    * version's files and `carried` (the parent's files an upsert keeps
+    * listing, stamps and all), in one manifest mutation. The version's
+    * schema is its own stamp (else the upsert's `parentSchema`) merged
+    * with the written files': [[inVersionOrder]] writes every file with
+    * that schema as its prefix, so this equals a fold of every listed
+    * file's footer. Nothing is visible before the registration; a
+    * failure before it deletes the files the write added and rethrows.
+    * Called under the table lock, which [[TableCatalog.gc]] takes too.
     */
-  private def stampWith(v: VersionInfo, added: Seq[DataFile])
-      : (Long, Map[String, String], Option[StructType]) = {
-    val (newRows, newMaxes, newSchema) =
-      footerStatsCore(added.map(f => catalog.tableDir(name).resolve(f.path).toFile))
-    val stamp =
-      if (v.files.isEmpty)
-        Some((newRows, newMaxes.collect { case (k, Some(x)) => k -> VersionInfo.encode(x) },
-          newSchema))
-      else for (prevRows <- v.rowCount; prevMax <- v.cursorMax; prevSch <- v.readSchema)
-        yield {
-          val merged = prevMax.flatMap { case (k, prevEnc) =>
-            newMaxes.get(k) match {
-              case None => Some(k -> prevEnc) // absent in new files: keep
-              case Some(None) => None         // disqualified by a new file
-              case Some(Some(nv)) =>
-                try {
-                  val pv = VersionInfo.decode(prevEnc, prevSch(k).dataType)
-                  val mx =
-                    if (pv.asInstanceOf[Comparable[Any]].compareTo(nv) >= 0) pv
-                    else nv
-                  Some(k -> VersionInfo.encode(mx))
-                } catch { case _: Exception => None } // type drift
-            }
-          }
-          (prevRows + newRows, merged, newSchema.flatMap(mergeSchemas(prevSch, _)))
-        }
-    stamp match {
-      case Some((rows, maxes, Some(schema))) => (rows, maxes, Some(schema).filter(_.nonEmpty))
-      case _ => throw new IllegalStateException(s"table $name: the footers of the files " +
-        s"written to version ${v.id} yield no schema; the write is not committed")
+  private def commit(df: DataFrame, vid: String, carried: Seq[DataFile] = Nil,
+      parentSchema: Option[StructType] = None): Unit = {
+    val before = catalog.filesOnDisk(name, vid).map(_.path).toSet
+    def added = catalog.filesOnDisk(name, vid).filterNot(f => before(f.path)).sortBy(_.path)
+    try {
+      writeInto(df, vid)
+      Table.postAppendHook()
+      val v = versionOf(vid)
+      val (written, writtenSchema) = footerStatsCore(added)
+      val files = v.files ++ carried ++ written
+      val schema = for {
+        w <- writtenSchema
+        s <- v.readSchema.orElse(parentSchema).fold(Option(w))(mergeSchemas(_, w))
+      } yield s
+      if (files.nonEmpty && !schema.exists(_.nonEmpty))
+        throw new IllegalStateException(s"table $name: the footers of the files " +
+          s"written to version $vid yield no schema; the write is not committed")
+      catalog.registerFiles(name, vid, files, schema.filter(_ => files.nonEmpty))
+    } catch {
+      case NonFatal(e) =>
+        catalog.deleteFiles(name, added.map(_.path))
+        throw e
     }
   }
 
-  /** Write `df` into version `vid` and commit it: the write's files (the
-    * version dir's parquet files that were not there before it), plus
-    * `carried` (files an upsert copied in), are stamped ([[stampWith]])
-    * and registered with the new stamp in one manifest mutation. A failure
-    * anywhere before that registers nothing, so no reader sees the rows;
-    * the files already written stay in the dir unlisted. Called under the
-    * table lock.
+  /** `df` with the columns of `s` first, in its order (one `df` lacks as a
+    * typed null), then its other columns: every file written into a
+    * version then holds the version's schema as a prefix, so the files'
+    * footer schemas fold to the same schema in any order and over any
+    * subset an upsert keeps listing.
     */
-  private def commit(df: DataFrame, vid: String, carried: Seq[DataFile] = Nil): Unit = {
-    val before = catalog.filesOnDisk(name, vid).map(_.path).toSet
-    writeInto(df, vid)
-    Table.postAppendHook()
-    val v = versionOf(vid)
-    val added = carried ++ catalog.filesOnDisk(name, vid).filterNot(f => before(f.path))
-    val (rows, maxes, schema) = stampWith(v, added)
-    catalog.registerFiles(name, vid, v.files ++ added, rows, maxes, schema)
+  private def inVersionOrder(df: DataFrame, s: Option[StructType]): DataFrame = s.fold(df) { s =>
+    val same = spark.sessionState.conf.resolver
+    def quoted(c: String) = col("`" + c.replace("`", "``") + "`")
+    df.select((s.fields.map(f => df.columns.find(same(_, f.name))
+      .fold(lit(null).cast(f.dataType).as(f.name))(quoted)) ++
+      df.columns.filterNot(c => s.fieldNames.exists(same(c, _))).map(quoted)).toSeq: _*)
   }
 
   /** Version `vid`'s entry in the manifest this instance holds: current
@@ -480,20 +435,11 @@ class Table(engine: GraftEngine, val name: String, val mode: String = "r",
     val prev = versionOf(vid)
     if (prev.files.isEmpty && prev.buckets != bucketCount)
       catalog.setVersionBuckets(name, vid, bucketCount)
-    val prevSchema = prev.readSchema
-    val decorated = decorate(conform(batch))
-    // the version's columns first, in stamp order, new ones after: a
-    // footer-merged schema orders columns by whichever file folds first
-    // (random part-file names), so only files that agree on the order let
-    // a full restamp and the incremental stamp agree
-    val ordered = pinLocal(prevSchema.fold(decorated) { s =>
-      val (known, added) = decorated.columns.partition(s.fieldNames.contains)
-      decorated.select((s.fieldNames.filter(known.contains) ++ added).map(col).toSeq: _*)
-    })
+    val ordered = pinLocal(inVersionOrder(decorate(conform(batch)), prev.readSchema))
     commit(clustered(inOneTaskIfSmall(ordered, ordered, 0L)), vid)
     // cleared at the commit point: a failure before it keeps the buffer
-    // (the retry writes the rows, and the failed write's files stay
-    // unlisted); after it, a retry must not re-append the batch
+    // (the retry writes the rows; the failed write deleted its files);
+    // after it, a retry must not re-append the batch
     buffer.clear()
     if (!isNew) catalog.recordEvent(name, "update")
   }
@@ -561,10 +507,10 @@ class Table(engine: GraftEngine, val name: String, val mode: String = "r",
     *      pruned only when the active version's recorded layout is the
     *      table's current bucket count; otherwise (an unbucketed table, a
     *      `bucketBy` migration) every old row is affected.
-    *   2. Untouched buckets' listed files are carried into the new
-    *      version as file copies ([[TableCatalog.copyBuckets]]), registered
-    *      with the write's own: O(affected buckets) compute instead of
-    *      O(table), zero shuffle or decode.
+    *   2. The new version lists the parent's entries for the untouched
+    *      buckets as they are — paths into the parent's dir, footer
+    *      stamps and all — after the files it writes: O(affected buckets)
+    *      compute and bytes instead of O(table), no copy, no footer read.
     *   3. The affected old rows lose the incoming keys
     *      ([[Table.withoutKeysOf]]) and are unioned with the incoming rows.
     *   4. The result is written in the table's current layout; when the
@@ -604,18 +550,16 @@ class Table(engine: GraftEngine, val name: String, val mode: String = "r",
       }.getOrElse(withBucket(incoming, n).select("__bucket")
         .distinct().collect().map(_.getInt(0)).toSet)
     val (_, vid) = catalog.createVersion(name, bucketCount)
-    val (old, oldFiles, carried) = oldV.fold(
-        (Option.empty[DataFrame], Seq.empty[DataFile], Seq.empty[DataFile])) { v =>
-      pruned match {
-        case Some((n, affected)) =>
-          (catalog.scan(spark, name, v, Some(affected)), v.files.filter(_.bucket.exists(affected)),
-            catalog.copyBuckets(name, v, vid, (0 until n).filterNot(affected).toSet))
-        case None => (catalog.scan(spark, name, v), v.files, Nil)
-      }
+    val (oldFiles, carried) = oldV.fold((Seq.empty[DataFile], Seq.empty[DataFile])) { v =>
+      v.files.partition(f => pruned.forall { case (_, affected) => f.bucket.exists(affected) })
     }
-    val merged = old.fold(incoming)(o =>
-      incoming.unionByName(Table.withoutKeysOf(o, incoming, keys), allowMissingColumns = true))
-    commit(clustered(inOneTaskIfSmall(merged, incoming, oldFiles.map(_.bytes).sum)), vid, carried)
+    val old = oldV.flatMap(v => catalog.scan(spark, name, v.copy(files = oldFiles.toList)))
+    val parentSchema = oldV.flatMap(_.readSchema)
+    val merged = inVersionOrder(old.fold(incoming)(o =>
+      incoming.unionByName(Table.withoutKeysOf(o, incoming, keys), allowMissingColumns = true)),
+      parentSchema)
+    commit(clustered(inOneTaskIfSmall(merged, incoming, oldFiles.map(_.bytes).sum)), vid,
+      carried, parentSchema)
     catalog.setActive(name, Some(vid), eventKind)
   }
 
@@ -664,7 +608,7 @@ class Table(engine: GraftEngine, val name: String, val mode: String = "r",
               keys.zip(keyValues).map { case (k, v) => typedLit(k, v) }: _*),
               lit(n)).as("b")).head.getInt(0)
         }
-        catalog.scan(spark, name, v, Some(Set(b)))
+        catalog.scan(spark, name, v.copy(files = v.files.filter(_.bucket.contains(b))))
           .map(_.filter(eqFilter)).getOrElse(readOf(active).limit(0))
       case _ => readOf(active).filter(eqFilter)
     }
@@ -710,11 +654,12 @@ class Table(engine: GraftEngine, val name: String, val mode: String = "r",
     * counter: content is unchanged, so downstream nodes must not re-run.
     *
     * Like every version swap (upsert/replace/truncate), compaction moves
-    * the active pointer to a NEW directory: a live file-stream tailing the
-    * old dir (`StreamingPipelines.tailTable`/`tailParquet`) stops seeing
-    * appends and must be restarted — and the superseded dir's retention
-    * clock starts at the swap. Schedule compaction accordingly (quiet
-    * windows, streams restarted after).
+    * the active pointer to a new version, and the superseded version's
+    * retention clock starts at the swap. Readers that follow the manifest
+    * (`Stream`, `StreamingPipelines.tailTable`, `GraftTableSource`) keep
+    * their cursor across the swap and see each row once; a raw file-stream
+    * over the old dir (`StreamingPipelines.tailParquet`) stops seeing
+    * appends and must be restarted.
     */
   def compact(targetFiles: Int = 1): Unit = if (connected) {
     // bucketed layouts always consolidate to one file PER BUCKET dir —
@@ -793,13 +738,20 @@ class Table(engine: GraftEngine, val name: String, val mode: String = "r",
     * created role, else error (node.py:196-200).
     */
   def asStream(orderBy: String = null, startingValue: Option[Any] = None): Stream = {
-    val meta = manifest.meta
-    // strictly_monotonic_ordering wins over created_ordering (node.py:286-294)
-    val ob = Option(orderBy).orElse(meta.addMonotonicId).orElse(meta.addCreated)
-      .getOrElse(throw new IllegalArgumentException(
-        s"stream over '$name' needs order_by or a monotonic/created schema role (node.py:196-200)"))
+    val ob = streamOrder(orderBy)
     engine.streamFor(s"$name::$ob")(
       new Stream(this, ob, engine.state, startingValue))
+  }
+
+  /** A stream's order column: `orderBy` when given, else the
+    * strictly-monotonic id role, which wins over the created role
+    * (node.py:286-294); throws when the table declares neither.
+    */
+  private[graft] def streamOrder(orderBy: String = null): String = {
+    val meta = manifest.meta
+    Option(orderBy).orElse(meta.addMonotonicId).orElse(meta.addCreated)
+      .getOrElse(throw new IllegalArgumentException(
+        s"stream over '$name' needs order_by or a monotonic/created schema role (node.py:196-200)"))
   }
 
   // --- write-path helpers ---

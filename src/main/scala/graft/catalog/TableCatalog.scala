@@ -9,42 +9,46 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.execution.datasources.{FileIndex, HadoopFsRelation, PartitionDirectory}
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
-import org.apache.spark.sql.graft.SchemaInternals
+import org.apache.spark.sql.graft.{LocalInternals, SchemaInternals}
 import org.apache.spark.sql.types.{ByteType, DataType, DateType, DecimalType,
-  DoubleType, FloatType, IntegerType, LongType, ShortType, StructType, TimestampType}
+  DoubleType, FloatType, IntegerType, LongType, ShortType, StringType, StructType,
+  TimestampType}
+import org.apache.spark.unsafe.types.UTF8String
 import org.json4s._
 import org.json4s.jackson.Serialization
 
-/** One data file of a version: its path relative to the table dir, the
-  * hash bucket it holds (None in a flat layout) and its size in bytes.
+/** One data file of a version: its path relative to the table dir (under
+  * the dir of the version that wrote it, which an upsert's later versions
+  * keep listing), the hash bucket it holds (None in a flat layout), its
+  * size in bytes, and its footer stamp, read once when its write commits:
+  * `rows`, the `maxes` of the top-level columns whose footer statistics
+  * are usable ([[VersionInfo.encode]]d), and the columns its footer
+  * `disqualified` (present, but without a usable max). A column in
+  * neither holds no value in this file. An entry without `rows` was
+  * written before entries were stamped.
   */
-case class DataFile(path: String, bucket: Option[Int], bytes: Long)
+case class DataFile(path: String, bucket: Option[Int], bytes: Long,
+    rows: Option[Long] = None, maxes: Map[String, String] = Map.empty,
+    disqualified: List[String] = Nil)
 
-/** One concrete materialization of a table (reference node.py:84-114):
-  * the data files its manifest entry lists, which live under the table
-  * dir's `<id>/` parquet directory, identified by `id`. The list is the
-  * version's contents: a file in the directory that the list does not
-  * name (the output of a write that failed before registering) is not
-  * part of it. `supersededAt` is stamped when the version stops being
-  * active — the retention clock runs from THAT moment (a version active
-  * for a year then replaced is brand-new garbage, not year-old garbage).
+/** One concrete materialization of a table (reference node.py:84-114),
+  * identified by `id`: the data files its manifest entry lists. The list
+  * is the version's contents. A file lives under the dir of the version
+  * that wrote it (`<id>/`), and an upsert lists its parent's files for the
+  * buckets it leaves untouched, so an entry may name files in an older
+  * version's dir; a file in a dir that no entry lists (the output of a
+  * write that failed before registering) is part of no version.
+  * `supersededAt` is stamped when the version stops being active — the
+  * retention clock runs from THAT moment (a version active for a year
+  * then replaced is brand-new garbage, not year-old garbage).
+  *
+  * The version's row count (reference TableVersion.record_count,
+  * node.py:106-109) and per-column maxes are not stored: [[rowCount]] and
+  * [[cursorMax]] fold the listed files' stamps, so every write keeps them
+  * equal to a fresh footer recompute by construction.
   */
 case class VersionInfo(id: String, createdAt: Long,
     supersededAt: Option[Long] = None,
-    // rows in the listed files, stamped from their parquet footers at
-    // commit (reference TableVersion.record_count, node.py:106-109) — what
-    // makes Table.recordCount O(1); None until the first commit
-    rowCount: Option[Long] = None,
-    // per-column MAX over the listed files, harvested from the same
-    // parquet footers (column-chunk statistics) at commit — encoded with
-    // the streaming source's offset encoding (ISO instants for timestamps,
-    // SQL string form otherwise). What makes GraftTableSource.getOffset a
-    // manifest lookup instead of a per-poll full scan of the table: at
-    // 100 TB with a short trigger interval the poll MUST NOT run a Spark
-    // job. Columns whose footer stats are absent or untrustworthy
-    // (truncated binary, INT96) are simply missing — readers fall back to
-    // a scan.
-    cursorMax: Option[Map[String, String]] = None,
     // the version's merged Spark schema (StructType JSON), folded at
     // commit from the schema Spark's writer records in each listed file's
     // footer — the explicit read schema of every read of the version
@@ -59,9 +63,9 @@ case class VersionInfo(id: String, createdAt: Long,
     // bucket-pruned read of it follows this record, never the table's
     // current `numBuckets`, which `init(bucketBy)` may have changed since.
     buckets: Option[Int] = None,
-    // the version's data files, registered with the stamp above in the
-    // same manifest mutation ([[TableCatalog.registerFiles]]); a manifest
-    // written without file lists reads as fileless
+    // the version's data files, registered with the schema stamp above in
+    // the same manifest mutation ([[TableCatalog.registerFiles]]); a
+    // manifest written without file lists reads as fileless
     files: List[DataFile] = Nil) {
 
   /** The schema a read of this version takes: the stamp, when the version
@@ -69,12 +73,61 @@ case class VersionInfo(id: String, createdAt: Long,
     */
   def readSchema: Option[StructType] =
     if (files.isEmpty) None else schema.flatMap(SchemaInternals.parse)
+
+  /** Rows in the listed files: the sum of their stamps, so
+    * `Table.recordCount` is O(1). None when an entry has no stamp.
+    */
+  def rowCount: Option[Long] =
+    files.foldLeft(Option(0L))((acc, f) => for (a <- acc; r <- f.rows) yield a + r)
+
+  /** Per-column MAX over the listed files, [[VersionInfo.encode]]d: what
+    * makes `GraftTableSource.getOffset` a manifest lookup instead of a
+    * per-poll scan. The files' stamps fold by the rule of
+    * `Table.footerStatsCore`: a file without a column leaves it as it
+    * is, a file that disqualifies it (or has no stamp) removes it, and a
+    * column whose values do not compare is removed. A column missing
+    * here makes readers fall back to a scan, never return a wrong offset.
+    */
+  def cursorMax: Map[String, String] = {
+    val types = readSchema.fold(Map.empty[String, DataType])(
+      _.fields.map(f => f.name -> f.dataType).toMap)
+    files.foldLeft(Map.empty[String, Option[Any]]) { (acc, f) =>
+      val stamp: Iterable[(String, Option[Any])] =
+        if (f.rows.isEmpty) types.keys.map(_ -> None)
+        else f.maxes.map { case (k, enc) =>
+          k -> types.get(k).flatMap(dt => scala.util.Try(VersionInfo.decode(enc, dt)).toOption)
+        } ++ f.disqualified.map(_ -> None)
+      stamp.foldLeft(acc) { case (a, (k, v)) => VersionInfo.foldMax(a, k, v) }
+    }.collect { case (k, Some(v)) => k -> VersionInfo.encode(v) }
+  }
+
+  /** The one "rows after a cursor" recipe of every stream read
+    * (`Stream.consumeRecords`, `GraftTableSource`'s poll and batches):
+    * this version restricted to the listed files that may hold a row
+    * whose `column` lies above `cursor` (every file with rows, for no
+    * cursor), or None when no file does, i.e. nothing is new. A file is
+    * left out only when its stamp decides it: it holds no rows, or its
+    * max of `column` is at or below the cursor. A file whose max is
+    * undecidable (unstamped, disqualified, a cursor of another type) is
+    * kept. The restriction's [[cursorMax]] of `column` is the column's
+    * folded max wherever that lies above the cursor. So a consume reads
+    * the files a cursor has not passed, not the version's history.
+    */
+  def after(column: String, cursor: Option[Any]): Option[VersionInfo] = {
+    val dt = readSchema.flatMap(_.find(_.name == column)).map(_.dataType)
+    val kept = files.filterNot(f => f.rows.contains(0L) || (for {
+      c <- cursor
+      d <- dt
+      enc <- f.maxes.get(column)
+    } yield VersionInfo.atOrBelow(enc, d, c)).contains(true))
+    if (kept.isEmpty) None else Some(copy(files = kept))
+  }
 }
 
 object VersionInfo {
-  /** A [[VersionInfo.cursorMax]] value, and the streaming source's offset:
-    * timestamps as ISO-8601 instants, everything else in its SQL string
-    * form (a `java.sql.Date` prints as an ISO date).
+  /** A stamped max value, and the streaming source's offset: timestamps
+    * as ISO-8601 instants, everything else in its SQL string form (a
+    * `java.sql.Date` prints as an ISO date).
     */
   def encode(v: Any): String = v match {
     case ts: java.sql.Timestamp => ts.toInstant.toString
@@ -98,6 +151,43 @@ object VersionInfo {
     case TimestampType => java.sql.Timestamp.from(java.time.Instant.parse(enc))
     case _ => enc
   }
+
+  /** Running per-column maxes with one more stamp of `column` folded in:
+    * `Some(v)` a usable max, `None` a disqualifying one. A disqualified
+    * column stays so; values that do not compare (files whose column
+    * differs in physical type) disqualify it instead of failing the
+    * commit. The one fold of row groups into a file's stamp and of files'
+    * stamps into a version's.
+    */
+  private[graft] def foldMax(acc: Map[String, Option[Any]], column: String,
+      v: Option[Any]): Map[String, Option[Any]] =
+    acc.get(column) match {
+      case Some(None) => acc
+      case prev => acc.updated(column, (prev.flatten, v) match {
+        case (_, None) => None
+        case (None, nv) => nv
+        case (Some(p), Some(n)) =>
+          try Some(if (p.asInstanceOf[Comparable[Any]].compareTo(n) >= 0) p else n)
+          catch { case _: ClassCastException => None }
+      })
+    }
+
+  /** Whether the stamped max `enc` is at or below `cursor` in Spark's
+    * ordering of `dt`. False when the cursor's runtime class does not
+    * compare exactly with the column's (a timestamp cursor reloaded as a
+    * string, a seek()ed value of another type): the file is then read.
+    */
+  private def atOrBelow(enc: String, dt: DataType, cursor: Any): Boolean =
+    scala.util.Try((dt, cursor) match {
+      // a persisted cursor reloads as a Long whatever its column's width
+      case (LongType | IntegerType, c @ (_: java.lang.Long | _: java.lang.Integer)) =>
+        enc.toLong <= c.asInstanceOf[Number].longValue
+      case (s: StringType, c: String) if LocalInternals.binaryString(s) =>
+        UTF8String.fromString(enc).compareTo(UTF8String.fromString(c)) <= 0
+      case (TimestampType, c: java.sql.Timestamp) =>
+        !java.sql.Timestamp.from(java.time.Instant.parse(enc)).after(c)
+      case _ => false
+    }).getOrElse(false)
 }
 
 /** A version's listed files as a Spark `FileIndex`: `files` are (absolute
@@ -170,22 +260,23 @@ case class TableManifest(
   * platform's table store (SURVEY.md §1.1, §4.3).
   *
   * Layout: `<root>/<table>/manifest.json` + `<root>/<table>/<versionId>/`
-  * (parquet dir per version; a bucketed version holds one `__bucket=K`
-  * dir per bucket, its count recorded in the manifest as
+  * (the parquet dir each version writes into; a bucketed version writes
+  * one `__bucket=K` dir per bucket, its count recorded in the manifest as
   * [[VersionInfo.buckets]]). The manifest, not the directory, is the
   * truth: a version is the file list in its entry
-  * ([[VersionInfo.files]]), registered with the version's stamp in one
-  * mutation at the end of each write ([[registerFiles]]). Every read —
+  * ([[VersionInfo.files]]), each file with its footer stamp, registered
+  * in one mutation at the end of each write ([[registerFiles]]). An entry
+  * may name files in another version's dir: an upsert lists its parent's
+  * files for the buckets it does not rewrite. Every read —
   * [[scan]], the canonical (lazy, plan-only) recipe shared by every
   * batch/streaming/time-travel reader — takes the files and the read
   * schema from one manifest read, and neither lists a directory nor
   * starts a Spark job to plan. Mutations are metadata-only: data never
-  * moves through the driver; only Spark jobs touch the version
-  * directories.
+  * moves through the driver, and only Spark jobs write data files.
   *
   * Old versions stay on disk after reset/replace "until garbage collected
   * according to the table's retention policy" (reference node.py:403-404);
-  * [[gc]] implements the retention sweep.
+  * [[gc]] implements the retention sweep, file by file.
   */
 class TableCatalog(val root: Path) {
   private implicit val fmts: Formats = DefaultFormats
@@ -262,13 +353,12 @@ class TableCatalog(val root: Path) {
   def versionDir(name: String, vid: String): Path = tableDir(name).resolve(vid)
   private def manifestPath(name: String): Path = tableDir(name).resolve("manifest.json")
 
-  /** The parquet files in version `vid`'s dir now, as manifest entries.
-    * A write's files are this listing after it minus this listing before
-    * it, which leaves out the files of any earlier write that failed
-    * before registering them. Commits list; reads never do. This class is
-    * the single owner of the version-dir layout (flat files, or one
-    * `__bucket=K` dir per bucket of a bucketed version). A dir a retention
-    * sweep deleted lists as empty.
+  /** The parquet files in version `vid`'s dir now, as unstamped manifest
+    * entries. A write's files are this listing after it minus this
+    * listing before it. Commits and [[gc]] list; reads never do. This
+    * class is the single owner of the version-dir layout (flat files, or
+    * one `__bucket=K` dir per bucket of a bucketed version). A dir a
+    * retention sweep deleted lists as empty.
     */
   def filesOnDisk(name: String, vid: String): Seq[DataFile] = {
     def parquetIn(d: java.io.File, bucket: Option[Int]): Seq[DataFile] =
@@ -281,24 +371,6 @@ class TableCatalog(val root: Path) {
       .getOrElse(Array.empty[java.io.File]).toSeq
       .flatMap(b => parquetIn(b, Some(b.getName.stripPrefix(TableCatalog.BucketPrefix).toInt)))
   }
-
-  /** Copy the listed files of the given buckets of version `from` into
-    * version `to` (each with its `.crc` file): an upsert's carry-over of
-    * the buckets its incoming keys do not touch. Returns the copies'
-    * entries, which the upsert registers with its own files.
-    */
-  def copyBuckets(name: String, from: VersionInfo, to: String,
-      buckets: Set[Int]): Seq[DataFile] =
-    from.files.filter(_.bucket.exists(buckets)).map { f =>
-      val src = tableDir(name).resolve(f.path)
-      val copy = f.copy(path = relPath(to, f.bucket, src.getFileName.toString))
-      val dst = tableDir(name).resolve(copy.path)
-      Files.createDirectories(dst.getParent)
-      Files.copy(src, dst)
-      val crc = (p: Path) => p.resolveSibling(s".${p.getFileName}.crc")
-      if (Files.exists(crc(src))) Files.copy(crc(src), crc(dst))
-      copy
-    }
 
   private def relPath(vid: String, bucket: Option[Int], file: String): String =
     (Seq(vid) ++ bucket.map(k => s"${TableCatalog.BucketPrefix}$k") :+ file).mkString("/")
@@ -315,22 +387,20 @@ class TableCatalog(val root: Path) {
     refresh(name).flatMap(m => m.activeVersion.flatMap(vid => m.versions.find(_.id == vid)))
 
   /** The canonical read of one version, shared by every batch, streaming
-    * and time-travel reader: exactly the files its entry lists (those of
-    * `buckets` only, when given: upsert's affected-bucket rewrite, lookup's
-    * single-bucket scan), read with the entry's schema stamp. Building it
-    * starts no Spark job and makes no filesystem call. None when no listed
-    * file qualifies: a fileless version (reset, a failed first write, a
+    * and time-travel reader: exactly the files its entry lists, read with
+    * the entry's schema stamp. A reader of part of the version (upsert's
+    * affected buckets, lookup's one bucket, a stream's files past its
+    * cursor) passes the entry with its `files` narrowed. Building it
+    * starts no Spark job and makes no filesystem call. None when no file
+    * is listed: a fileless version (reset, a failed first write, a
     * manifest without file lists) reads as "no data yet".
     */
-  def scan(spark: SparkSession, name: String, v: VersionInfo,
-      buckets: Option[Set[Int]] = None): Option[DataFrame] = {
-    val files = v.files.filter(f => buckets.forall(b => f.bucket.exists(b)))
-    for (schema <- v.readSchema if files.nonEmpty) yield
+  def scan(spark: SparkSession, name: String, v: VersionInfo): Option[DataFrame] =
+    for (schema <- v.readSchema) yield
       spark.baseRelationToDataFrame(HadoopFsRelation(
         ListedFileIndex(new HPath(versionDir(name, v.id).toUri),
-          files.map(f => new HPath(tableDir(name).resolve(f.path).toUri) -> f.bytes)),
+          v.files.map(f => new HPath(tableDir(name).resolve(f.path).toUri) -> f.bytes)),
         new StructType(), schema, None, new ParquetFileFormat, Map.empty)(spark))
-  }
 
   def exists(name: String): Boolean = Files.exists(manifestPath(name))
 
@@ -473,19 +543,26 @@ class TableCatalog(val root: Path) {
       eventCounter = m.eventCounter + 1)
   }
 
-  /** Register version `vid`'s files and their stamp — row count,
-    * per-column footer maxes and merged schema — in one mutation: the
-    * commit point of every write. No reader sees a file before it is
-    * listed here, and every reader takes the files and the stamp from the
-    * same manifest ([[scan]], `Table.recordCount`, `GraftTableSource`'s
-    * poll).
+  /** Register version `vid`'s files, each with its footer stamp, and the
+    * version's merged schema in one mutation: the commit point of every
+    * write. No reader sees a file before it is listed here, and every
+    * reader takes the files and the stamps from the same manifest
+    * ([[scan]], `Table.recordCount`, `GraftTableSource`'s poll).
     */
-  def registerFiles(name: String, vid: String, files: Seq[DataFile], rows: Long,
-      cursorMax: Map[String, String], schema: Option[StructType]): TableManifest =
+  def registerFiles(name: String, vid: String, files: Seq[DataFile],
+      schema: Option[StructType]): TableManifest =
     mutate(name) { m =>
       m.copy(versions = m.versions.map(v =>
-        if (v.id == vid) v.copy(files = files.toList, rowCount = Some(rows),
-          cursorMax = Some(cursorMax), schema = schema.map(_.json)) else v))
+        if (v.id == vid) v.copy(files = files.toList, schema = schema.map(_.json)) else v))
+    }
+
+  /** Delete data files (paths relative to the table dir), each with its
+    * `.crc` file.
+    */
+  private[graft] def deleteFiles(name: String, paths: Iterable[String]): Unit =
+    paths.map(tableDir(name).resolve).foreach { p =>
+      Files.deleteIfExists(p)
+      Files.deleteIfExists(p.resolveSibling(s".${p.getFileName}.crc"))
     }
 
   def updateMeta(name: String)(f: TableMeta => TableMeta): TableManifest =
@@ -565,34 +642,49 @@ class TableCatalog(val root: Path) {
     }
   }
 
-  /** Retention sweep: delete non-active version dirs whose retention age
+  /** Retention sweep: drop the non-active versions whose retention age
     * exceeds `keepMillis` (reference node.py:403-404 "garbage collected
-    * according to the table's retention policy"). Age counts from
-    * `supersededAt` when the version was once active; a version that was
-    * never activated (e.g. an abandoned createNewVersion write) ages from
-    * `createdAt` — writers that may outlive the retention window should
-    * activate promptly or use a longer retention. Versions under an
-    * unexpired [[ReadLease]] are skipped (their manifest entry stays, so
-    * a later sweep retries once the lease lapses) — the multi-writer
-    * answer to "a sweep can race an in-flight lazy read".
+    * according to the table's retention policy"), then free the files no
+    * remaining version lists. Age counts from `supersededAt` when the
+    * version was once active; a version that was never activated (e.g. an
+    * abandoned createNewVersion write) ages from `createdAt` — writers that
+    * may outlive the retention window should activate promptly or use a
+    * longer retention. Versions under an unexpired [[ReadLease]] are
+    * skipped (their manifest entry stays, so a later sweep retries once
+    * the lease lapses) — the multi-writer answer to "a sweep can race an
+    * in-flight lazy read".
+    *
+    * Files, not dirs, are what a sweep frees: a parquet file (with its
+    * `.crc`) is deleted only when no remaining or leased version lists it,
+    * so an upsert's files stay while a later version references them. A
+    * swept version's dir goes once nothing under it is listed. Every write
+    * holds the table lock from its listing of the version dir before the
+    * write to [[registerFiles]], and so does this sweep: a parquet file no
+    * version lists is then a failed write's, and is deleted too. The
+    * manifest is saved before any file goes, so a crash mid-sweep leaves
+    * only unlisted files, which the next sweep frees. Returns the number
+    * of versions dropped.
     */
-  def gc(name: String, keepMillis: Long): Int = {
+  def gc(name: String, keepMillis: Long): Int = withTableLock(name) {
     var removed = 0
-    mutate(name) { m =>
+    val m = mutate(name) { m =>
       val cutoff = System.currentTimeMillis() - keepMillis
       val leased = leasedVids(name)
       val (dead, live) = m.versions.partition(v =>
         !m.activeVersion.contains(v.id) && !leased.contains(v.id) &&
           v.supersededAt.getOrElse(v.createdAt) <= cutoff)
-      dead.foreach { v =>
-        val dir = versionDir(name, v.id)
-        if (Files.exists(dir)) {
-          Files.walk(dir).sorted(java.util.Comparator.reverseOrder())
-            .forEach(p => Files.deleteIfExists(p))
-        }
-      }
       removed = dead.size
       m.copy(versions = live)
+    }
+    val listed = m.versions.flatMap(_.files.map(_.path)).toSet
+    val dirs = Option(tableDir(name).toFile.listFiles((f: java.io.File) =>
+      f.isDirectory && f.getName.matches("v\\d+"))).getOrElse(Array.empty[java.io.File])
+    dirs.foreach { d =>
+      val vid = d.getName
+      deleteFiles(name, filesOnDisk(name, vid).map(_.path).filterNot(listed))
+      if (!m.versions.exists(_.id == vid) && !listed.exists(_.startsWith(s"$vid/")))
+        Files.walk(d.toPath).sorted(java.util.Comparator.reverseOrder())
+          .forEach(p => Files.deleteIfExists(p))
     }
     removed
   }

@@ -22,19 +22,18 @@ import graft.catalog.{CatalogFileSystem, TableCatalog, VersionInfo}
   * Offsets are VALUES of the ordering column (serialized as strings, cast
   * back to the column type for comparison), not file names or positions —
   * which is what makes the cursor survive version swaps: an upsert or
-  * compaction moves the active pointer to a new directory, file-tailing
+  * compaction moves the active pointer to a new version, file-tailing
   * sources (tailParquet) lose their place, but `orderBy > cursor` means
-  * the same rows regardless of which directory holds them. Each batch is
-  * a plain pruned/pushed-down parquet scan (`PushedFilters:
-  * GreaterThan(orderBy, cursor)`), so a version written sorted on the
-  * cursor column skips fully-consumed files via min/max stats — the same
-  * scale shape as the batch Stream.
+  * the same rows regardless of which files hold them. Each batch scans
+  * only the listed files whose stamped max lies above its start offset
+  * ([[graft.catalog.VersionInfo.after]], the recipe the batch Stream
+  * uses), with `GreaterThan(orderBy, cursor)` pushed into the scan.
   *
-  * Scale shape of the POLL path: `getOffset` answers from the manifest's
-  * footer-harvested per-version column max ([[graft.catalog.VersionInfo]]
-  * `cursorMax`, stamped at commit next to `rowCount`) — a KB-sized JSON
-  * read per trigger, no Spark job. Only cursor columns whose parquet
-  * stats were untrustworthy fall back to a `max()` scan. A 100 TB table
+  * Scale shape of the POLL path: `getOffset` answers from the manifest —
+  * the listed files' footer stamps, folded ([[graft.catalog.VersionInfo]]
+  * `cursorMax`) — a KB-sized JSON read per trigger, no Spark job. Only a
+  * cursor column whose parquet stats were untrustworthy falls back to a
+  * `max()` scan, of the files past the high water alone. A 100 TB table
   * on a 1 s trigger polls for free; the per-poll full scan this replaced
   * was the round-5 verdict's scale-killer.
   */
@@ -130,16 +129,6 @@ class GraftTableSource(sqlContext: SQLContext, cat: TableCatalog,
 
   private def spark = sqlContext.sparkSession
 
-  // Table.read's recipe (TableCatalog.scan): the version's listed files
-  // with its schema stamp, from one manifest read, so building a batch
-  // lists nothing and starts no job; fileless versions (reset(),
-  // crash-before-write) read as None
-  private def versionDf(vid: String): Option[DataFrame] =
-    cat.versionInfo(table, vid).flatMap(cat.scan(spark, table, _))
-
-  private def activeDf: Option[DataFrame] =
-    cat.activeInfo(table).flatMap(cat.scan(spark, table, _))
-
   private def cursorCol = col(orderBy)
 
   /** Highest offset value ever RETURNED, for clamping: a replace()/
@@ -189,7 +178,7 @@ class GraftTableSource(sqlContext: SQLContext, cat: TableCatalog,
   }
 
   /** An offset string decoded against the cursor column's type. Offsets
-    * use the encoding of the manifest's `cursorMax` stamps
+    * use the encoding of the manifest's stamped maxes
     * ([[VersionInfo.encode]]), so manifest-served and scan-served offsets
     * are interchangeable. Every type a
     * cursor column can legally carry must decode to the SAME runtime class
@@ -216,43 +205,18 @@ class GraftTableSource(sqlContext: SQLContext, cat: TableCatalog,
     lit(value).cast(schema.fields.find(_.name == orderBy)
       .map(_.dataType).getOrElse(TimestampType))
 
-  /** What the manifest can answer about the current poll without a scan. */
-  private sealed trait Poll
-  private case object NoData extends Poll          // no rows to offer
-  private case class Cursor(v: Any) extends Poll   // max known from stamps
-  private case object NeedScan extends Poll        // column unstamped: scan
-
-  private def manifestPoll(): (Poll, Option[String]) =
-    cat.refresh(table) match {
-      case None => (NoData, None)
-      case Some(m) =>
-        val active = m.activeVersion
-        active.flatMap(vid => m.versions.find(_.id == vid)) match {
-          case None => (NoData, active)
-          case Some(v) =>
-            val poll =
-              if (v.files.isEmpty || v.rowCount.contains(0L)) NoData // nothing listed
-              else v.cursorMax.flatMap(_.get(orderBy)) match {
-                case Some(enc) => Cursor(decode(enc))
-                // this column unstamped (untrusty parquet stats): scan
-                case None => NeedScan
-              }
-            (poll, active)
-        }
-    }
-
+  /** The active version's max of the order column past the high water:
+    * nothing new (no listed file past it) keeps the high water; a folded
+    * stamp answers without a job; an undecidable one scans the files past
+    * the high water of the version this poll read.
+    */
   override def getOffset: Option[Offset] = {
-    val (poll, vid) = manifestPoll()
-    val observed: Option[Any] = poll match {
-      case Cursor(v) => Some(v)
-      case NoData => None
-      case NeedScan =>
-        // scan the SAME version the poll observed — a second refresh here
-        // could see a newer commit and pair its max with the old vid,
-        // pinning the batch to a version that lacks the offset's rows.
+    val active = cat.activeInfo(table)
+    val vid = active.map(_.id)
+    val observed: Option[Any] = active.flatMap(_.after(orderBy, highWater)).flatMap { fresh =>
+      fresh.cursorMax.get(orderBy).map(decode).orElse(
         // max() of an empty frame is null — one job, no separate isEmpty
-        vid.flatMap(versionDf)
-          .flatMap(df => Option(df.agg(max(cursorCol)).head.get(0)))
+        cat.scan(spark, table, fresh).flatMap(df => Option(df.agg(max(cursorCol)).head.get(0))))
     }
     observed.map(v => CursorOffset(VersionInfo.encode(clamp(v)), vid))
       .orElse(highWater.map(v => CursorOffset(VersionInfo.encode(v), vid)))
@@ -286,16 +250,18 @@ class GraftTableSource(sqlContext: SQLContext, cat: TableCatalog,
       .filter(vid => cat.refresh(table).exists(_.versions.exists(_.id == vid)))
       .flatMap { vid =>
         currentLease = Some(cat.acquireReadLease(table, vid))
-        versionDf(vid)
-      }
-    val base = pinned.orElse(activeDf).getOrElse(
-      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema))
+        cat.versionInfo(table, vid)
+      }.filter(_.files.nonEmpty)
+    val startValue = start.map(s => CursorOffset.parse(s.json).value)
+    // only the files past the start offset: the batch's cost follows what
+    // is new, not the version's history
+    val base = pinned.orElse(cat.activeInfo(table))
+      .flatMap(_.after(orderBy, startValue.map(decode)))
+      .flatMap(cat.scan(spark, table, _)).getOrElse(
+        spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema))
     val upTo = base.filter(cursorCol <= typed(endOff.value))
-    val batch = start match {
-      // strictly greater (node.py:71-76)
-      case Some(s) => upTo.filter(cursorCol > typed(CursorOffset.parse(s.json).value))
-      case None => upTo
-    }
+    // strictly greater (node.py:71-76)
+    val batch = startValue.fold(upTo)(v => upTo.filter(cursorCol > typed(v)))
     // pin to the DECLARED schema: schema-on-write evolution (conform
     // passes new columns through; the version's schema stamp widens with
     // them) must not widen a running stream's batch arity mid-query

@@ -11,9 +11,8 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * The reference's own model is exactly-once incremental BATCH consumption
   * (engine Stream, graft.api.Stream) — these pipelines are the
   * Spark-native continuous counterpart for users who want push-style
-  * processing over the same catalog layout: a table's version directory is
-  * a valid file-stream source, so `readStream.parquet(versionDir)` tails
-  * appends made by Table.append/flush.
+  * processing over the same catalog: [[tailTable]] streams a table through
+  * its manifest ([[GraftTableSource]]), and [[writeToTable]] feeds one.
   */
 object StreamingPipelines {
 
@@ -201,28 +200,19 @@ object StreamingPipelines {
     df.withWatermark(tsCol, watermarkDelay)
       .dropDuplicatesWithinWatermark(idCols.toSeq)
 
-  /** Tail a catalog table's ACTIVE version as a stream, schema taken from
-    * the table itself — `Table.append`/`flush` appends become stream
-    * micro-batches. The continuous counterpart of `Table.asStream`.
-    *
-    * Contract: the stream watches the version directory that is active AT
-    * CALL TIME — append/flush workloads only. An upsert/replace/truncate
-    * swaps the active pointer to a NEW directory, which this stream does
-    * not follow; restart the query (new tailTable call) after a version
-    * swap. It tails the directory, not the manifest's file list, so it
-    * also sees the files of a failed write that no manifest lists, and
-    * sees a flush's files before the flush commits.
+  /** Tail a catalog table as a stream through its manifest
+    * ([[GraftTableSource]]), schema taken from the table's active version:
+    * committed appends become micro-batches, in the order of the table's
+    * stream role, as `Table.asStream` orders (the same error when the table
+    * declares none). The continuous counterpart of `Table.asStream`: it
+    * follows version swaps (upsert, compaction) by its value cursor and
+    * reads only listed files, so it never sees a failed or uncommitted
+    * write.
     */
-  def tailTable(table: graft.api.Table): DataFrame = {
-    val sch = table.schema.getOrElse(throw new IllegalStateException(
-      s"tailTable('${table.name}') needs an existing active version for its schema"))
-    table.read.sparkSession.readStream.schema(sch)
-      .parquet(table.activeVersionDir.get)
-      // bucketed layouts add a discovered __bucket partition column the
-      // batch read paths (table.read/activeDf) drop — match them so a
-      // consumer written against table.schema never sees the layout detail
-      .drop("__bucket")
-  }
+  def tailTable(table: graft.api.Table): DataFrame =
+    table.read.sparkSession.readStream.format(classOf[GraftTableSourceProvider].getName)
+      .option("root", table.catalog.root.toString).option("table", table.name)
+      .option("orderBy", table.streamOrder()).load()
 
   /** Stream into a catalog table: each micro-batch goes through the
     * table's own write path, so schema-on-write conformance, auto columns,
@@ -244,32 +234,39 @@ object StreamingPipelines {
         // Hadoop FS so URI-style checkpoint locations (file://, hdfs://,
         // s3a://) resolve to the SAME store Spark's checkpoint uses — a
         // java.nio relative path would silently land in the driver's cwd
-        // and lose the markers across restarts
-        val hconf = batch.sparkSession.sparkContext.hadoopConfiguration
+        // and lose the markers across restarts. On the engine's write
+        // options, as GraftTableSource's high water: a local checkpoint
+        // gets CatalogFileSystem (no `chmod` fork per marker), an uncached
+        // instance this batch closes
         val commits = new org.apache.hadoop.fs.Path(checkpointDir, "_graft_commits")
-        val fs = commits.getFileSystem(hconf)
-        val marker = new org.apache.hadoop.fs.Path(commits, batchId.toString)
-        if (!fs.exists(marker)) {
-          if (table.manifest.meta.uniqueOn.nonEmpty) table.upsert(batch)
-          else { table.append(batch); table.flush() }
-          fs.mkdirs(commits)
-          fs.create(marker, true).close()
+        val fs = commits.getFileSystem(batch.sparkSession.sessionState
+          .newHadoopConfWithOptions(graft.catalog.CatalogFileSystem.writeOptions))
+        try {
+          val marker = new org.apache.hadoop.fs.Path(commits, batchId.toString)
+          if (!fs.exists(marker)) {
+            if (table.manifest.meta.uniqueOn.nonEmpty) table.upsert(batch)
+            else { table.append(batch); table.flush() }
+            fs.mkdirs(commits)
+            fs.create(marker, true).close()
+          }
+          // prune old markers: only batches Spark can still REPLAY (the
+          // most recent ones after a restart) need dedup protection — a
+          // 10s-trigger stream otherwise accumulates ~8.6k small files/day
+          // forever. Swept every 100 batches (one listing amortized), keep
+          // the trailing 100.
+          if (batchId % 100L == 0L && batchId > 100L) {
+            val keepFrom = batchId - 100L
+            try Option(fs.listStatus(commits)).getOrElse(Array.empty)
+              .foreach { st =>
+                val bid = st.getPath.getName.toLongOption
+                if (bid.exists(_ < keepFrom)) fs.delete(st.getPath, false)
+              }
+            catch { case _: java.io.IOException => () } // best-effort sweep
+          }
+        } finally fs match {
+          case local: graft.catalog.CatalogFileSystem => local.close()
+          case _ => // a cached, shared instance: not this batch's to close
         }
-        // prune old markers: only batches Spark can still REPLAY (the
-        // most recent ones after a restart) need dedup protection — a
-        // 10s-trigger stream otherwise accumulates ~8.6k small files/day
-        // forever. Swept every 100 batches (one listing amortized), keep
-        // the trailing 100.
-        if (batchId % 100L == 0L && batchId > 100L) {
-          val keepFrom = batchId - 100L
-          try Option(fs.listStatus(commits)).getOrElse(Array.empty)
-            .foreach { st =>
-              val bid = st.getPath.getName.toLongOption
-              if (bid.exists(_ < keepFrom)) fs.delete(st.getPath, false)
-            }
-          catch { case _: java.io.IOException => () } // best-effort sweep
-        }
-        ()
       }
       .start()
 }

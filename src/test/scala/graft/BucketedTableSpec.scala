@@ -1,5 +1,7 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+
 import graft.api.GraftEngine
 
 /** Hash-bucketed table layout: partition-level upsert + pruned lookup
@@ -25,34 +27,45 @@ class BucketedTableSpec extends SparkSpec {
     assert(t.read.count() == 20)
   }
 
-  test("bucketed upsert rewrites only affected buckets; untouched files are copied byte-for-byte") {
+  test("bucketed upsert rewrites only the affected bucket and lists the parent's other files; gc frees files, not dirs") {
     val e = engine()
     val t = e.table("b2", "w").init(uniqueOn = Seq("id"), bucketBy = 8)
     t.append((1L to 100L).map(i => (i, s"old$i")).toDF("id", "v")); t.flush()
-    val v1 = t.getActiveVersion.get
-    val dir1 = e.catalog.versionDir("b2", v1)
+    val v1 = e.catalog.activeInfo("b2").get
+    assert(v1.files.size == 8, "one file per bucket")
 
     // one incoming key -> exactly one affected bucket
     t.upsert(Seq((7L, "NEW")).toDF("id", "v"))
-    val v2 = t.getActiveVersion.get
-    assert(v2 != v1)
-    val dir2 = e.catalog.versionDir("b2", v2)
+    val v2 = e.catalog.activeInfo("b2").get
+    assert(v2.id != v1.id)
+    val (own, kept) = v2.files.partition(_.path.startsWith(s"${v2.id}/"))
+    // the 7 untouched buckets are the parent's entries, paths and stamps
+    // as they were; the new dir holds only the rewritten bucket's file
+    assert(kept.size == 7 && kept.forall(v1.files.contains), s"not the parent's: $kept")
+    assert(own.size == 1 && !kept.exists(_.bucket == own.head.bucket))
+    assert(e.catalog.filesOnDisk("b2", v2.id).map(_.path) == own.map(_.path))
+    val expected = (1L to 100L).map(i => i -> (if (i == 7L) "NEW" else s"old$i"))
+    def rows = t.read.as[(Long, String)].collect().sortBy(_._1).toSeq
+    assert(rows == expected, "the merge a full copy would write")
 
-    def bucketFiles(d: java.nio.file.Path) =
-      d.toFile.listFiles().filter(_.getName.startsWith("__bucket="))
-        .map(b => b.getName ->
-          b.listFiles().filter(_.getName.endsWith(".parquet"))
-            .map(f => (f.getName, f.length)).toSet).toMap
-    val f1 = bucketFiles(dir1)
-    val f2 = bucketFiles(dir2)
-    // the affected bucket was rewritten (different files); all others are
-    // identical copies of the old version's files
-    val changed = f2.keys.filter(k => f1.get(k) != f2.get(k)).toSeq
-    assert(changed.size == 1, s"expected 1 rewritten bucket, got $changed")
+    // sweeping the parent frees its rewritten bucket's file only: the 7
+    // files v2 lists survive, and the read is unchanged
+    assert(e.catalog.gc("b2", 0L) == 1)
+    assert(kept.forall(f => java.nio.file.Files.exists(e.catalog.tableDir("b2").resolve(f.path))))
+    assert(!java.nio.file.Files.exists(e.catalog.tableDir("b2").resolve(
+      v1.files.filterNot(kept.contains).head.path)))
+    assert(rows == expected)
 
-    // content is a correct merge
-    val rows = t.read.as[(Long, String)].collect().toMap
-    assert(rows.size == 100 && rows(7L) == "NEW" && rows(8L) == "old8")
+    // once v2 is swept too, nothing of v1's dir is listed: it goes, and no
+    // parquet file is left that no version lists
+    t.replace(Seq((1L, "only")).toDF("id", "v"))
+    assert(e.catalog.gc("b2", 0L) == 1)
+    assert(!e.catalog.versionDir("b2", v1.id).toFile.exists)
+    val listed = e.catalog.activeInfo("b2").get.files.map(_.path).toSet
+    val onDisk = java.nio.file.Files.walk(e.catalog.tableDir("b2")).iterator().asScala
+      .filter(_.toString.endsWith(".parquet"))
+      .map(e.catalog.tableDir("b2").relativize(_).toString).toSet
+    assert(onDisk == listed)
   }
 
   test("lookup scans one bucket and finds the row (typed key literal)") {

@@ -63,7 +63,8 @@ class CatalogFileSystemSpec extends SparkSpec {
     val inProcess = CatalogFileSystem.inProcess.get
     val root = freshRoot()
     val e = new GraftEngine(spark, root)
-    val dirOf = (t: Table) => t.activeVersionDir.getOrElse(fail(s"${t.name}: no version"))
+    val dirOf = (t: Table) => e.catalog.versionDir(t.name,
+      t.getActiveVersion.getOrElse(fail(s"${t.name}: no version"))).toString
 
     val flushed = e.table("plain", "w")
     flushed.append(batch(1, 50)); flushed.flush()

@@ -225,6 +225,34 @@ class LocalPathSpec extends SparkSpec {
     }
   }
 
+  test("a consume past the cursor scans only the files whose stamped max is above it; nothing new starts 0 jobs") {
+    val e = engine()
+    val t = e.table("k_files", "w").init(addMonotonicId = "seq")
+    val st = t.asStream()
+    (1 to 4).foreach { k => t.append(Seq((k.toLong, s"v$k")).toDF("id", "v")); t.flush() }
+    assert(st.consumeRecords().map(_.getLong(0)).toSeq == (1L to 4L))
+    t.append(Seq((5L, "v5"), (6L, "v6")).toDF("id", "v")); t.flush()
+    val files = e.catalog.activeInfo("k_files").get.files
+    assert(files.size == 5, "one file per flush")
+    // the plan a consume runs, and the batch a streaming source builds
+    // from the same cursor, read the newest file alone
+    def newest(df: DataFrame) = df.inputFiles.toSeq.map(_.split("/").last)
+    val last = Seq(files.last.path.split("/").last)
+    assert(newest(st.plan()) == last)
+    val src = new graft.streaming.GraftTableSourceProvider().createSource(spark.sqlContext,
+      java.nio.file.Files.createTempDirectory("after-meta-").toUri.toString.stripSuffix("/"),
+      None, "graft-table", Map("root" -> e.catalog.root.toString, "table" -> "k_files"))
+      .asInstanceOf[graft.streaming.GraftTableSource]
+    try {
+      val start = graft.streaming.CursorOffset(Table.base32(4L))
+      assert(newest(src.batchPlan(Some(start), src.getOffset.get)) == last)
+    } finally src.stop()
+    assert(jobsIn("after-consume")(
+      assert(st.consumeRecords().map(_.getLong(0)).toSeq == Seq(5L, 6L))) == 1)
+    assert(jobsIn("after-empty")(assert(st.consumeRecords().isEmpty)) == 0)
+    assert(st.plan().inputFiles.isEmpty, "nothing new: no file qualifies")
+  }
+
   test("consume above the driver-residency bound takes the sorted toLocalIterator plan, same rows in the same order") {
     def consumeAll(e: GraftEngine): Seq[Row] = {
       val t = e.table("s", "w").init(addMonotonicId = "seq")

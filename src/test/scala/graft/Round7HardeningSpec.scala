@@ -45,25 +45,24 @@ class Round7HardeningSpec extends SparkSpec {
     def info = t.manifest.versions
       .find(_.id == t.manifest.activeVersion.get).get
     assert(info.rowCount.contains(2L))
-    assert(info.cursorMax.exists(_.get("id").contains("5")))
-    // second flush: rows accumulate, max advances — stamped from the NEW
-    // files only (merge with the previous stamp)
+    assert(info.cursorMax.get("id").contains("5"))
+    // second flush: rows accumulate, max advances — only the NEW file's
+    // footer is read; the version folds the files' stamps
     t.append(Seq((9L, "c")).toDF("id", "v")); t.flush()
     assert(info.rowCount.contains(3L))
-    assert(info.cursorMax.exists(_.get("id").contains("9")))
+    assert(info.cursorMax.get("id").contains("9"))
     // third flush with a LOWER id: max must not regress
     t.append(Seq((7L, "d")).toDF("id", "v")); t.flush()
     assert(info.rowCount.contains(4L))
-    assert(info.cursorMax.exists(_.get("id").contains("9")))
-    // schema evolution: a column first seen mid-version stays UNSTAMPED
-    // (absence in the earlier stamp is indistinguishable from an earlier
-    // disqualification, and stamping from new files alone could understate
-    // the true max — conservative costs only a scan fallback)
+    assert(info.cursorMax.get("id").contains("9"))
+    // schema evolution: a column first seen mid-version is stamped from
+    // the only file that holds it — the files before it lack the column,
+    // which leaves its max as it is, exactly what a full recompute says
     t.append(Seq((11L, "e", 100L)).toDF("id", "v", "late")); t.flush()
     assert(info.rowCount.contains(5L))
-    assert(info.cursorMax.exists(_.get("id").contains("11")))
-    assert(info.cursorMax.exists(!_.contains("late")),
-      "a column absent from the version's first stamp must stay unstamped")
+    assert(info.cursorMax.get("id").contains("11"))
+    assert(info.cursorMax.get("late").contains("100"),
+      "a column first seen mid-version is stamped as a full recompute stamps it")
   }
 
   test("appends merge a timestamp's stamped max as an instant; timestamp_ntz stays unstamped") {
@@ -79,9 +78,9 @@ class Round7HardeningSpec extends SparkSpec {
       t.append(batch(2L, "2026-01-01 00:00:00")); t.flush()
     } finally spark.conf.unset("spark.sql.parquet.outputTimestampType")
     val info = t.manifest.versions.find(_.id == t.manifest.activeVersion.get).get
-    assert(info.cursorMax.exists(_.get("ts").contains("2026-01-02T03:04:05Z")))
+    assert(info.cursorMax.get("ts").contains("2026-01-02T03:04:05Z"))
     // a local date-time has no instant the offset codec could round-trip
-    assert(info.cursorMax.exists(!_.contains("ntz")))
+    assert(!info.cursorMax.contains("ntz"))
   }
 
   test("init() preserves autoIndexes when a later call tweaks other fields") {
@@ -446,7 +445,7 @@ class Round7HardeningSpec extends SparkSpec {
   test("tailTable on a bucketed table hides the __bucket layout column") {
     val e = new GraftEngine(spark, freshRoot())
     val t = e.table("buck_tail", "w")
-    t.init(uniqueOn = Seq("id"), bucketBy = 2)
+    t.init(uniqueOn = Seq("id"), bucketBy = 2, addMonotonicId = "mid")
     t.upsert(Seq((1L, "a"), (2L, "b"), (3L, "c")).toDF("id", "v"))
     val stream = graft.streaming.StreamingPipelines.tailTable(t)
     assert(!stream.schema.fieldNames.contains("__bucket"),

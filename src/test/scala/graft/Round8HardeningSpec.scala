@@ -381,22 +381,21 @@ class Round8HardeningSpec extends SparkSpec {
     Table.postAppendHook = () => throw new RuntimeException("injected failure")
     try intercept[RuntimeException](t.flush())
     finally Table.postAppendHook = () => ()
-    // the written files are in the dir but unlisted: no new row is
-    // visible, and the stamp (rows, cursor maxes, schema, files) is as
-    // committed — a streaming poll neither skips nor sees the batch
+    // the failed write deleted its own files: no new row is visible, the
+    // stamp (files, their stamps, schema) is as committed — a streaming
+    // poll neither skips nor sees the batch — and the dir holds exactly
+    // the listed files
     assert(t.read.count() == 2, "no row of a failed flush is visible")
     assert(activeInfo == committed, "a failed flush must leave the stamp as it was")
-    val orphans = e.catalog.filesOnDisk("stampfail", committed.id).map(_.path).toSet --
-      committed.files.map(_.path)
-    assert(orphans.nonEmpty, "the failed write's files stay in the dir")
+    def onDisk = e.catalog.filesOnDisk("stampfail", committed.id).map(_.path).toSet
+    assert(onDisk == committed.files.map(_.path).toSet, "a failed write removes its files")
     // the buffer was kept: the retry writes the batch again, once
     t.flush()
     assert(t.read.select("id").as[Long].collect().sorted.toSeq == Seq(1L, 2L, 3L, 4L))
     assert(t.recordCount.contains(4L))
     val listed = activeInfo.files.map(_.path).toSet
-    assert(listed.intersect(orphans).isEmpty && listed.size == committed.files.size + orphans.size,
-      "the manifest lists the retry's files, never the failed write's")
-    assert(e.catalog.filesOnDisk("stampfail", committed.id).map(_.path).toSet == listed ++ orphans)
+    assert(listed.size > committed.files.size, "the retry's files are listed")
+    assert(onDisk == listed, "the dir holds exactly the listed files after the retry")
   }
 
   test("retention churn soak: appends/time-travel/compact/gc interleave") {

@@ -3,8 +3,8 @@
 
     python3 tools/ab.py REV --workload app_trickle --pairs 10
 
-Checks REV out into a detached git worktree (under --dir, default /tmp).
-For seeds first-seed .. first-seed+pairs-1 it runs
+Exports REV's committed files (`git archive`) into a temp dir (under
+--dir, default /tmp). For seeds first-seed .. first-seed+pairs-1 it runs
 
     python3 perfbench/run.py --workload W --seed N --seconds S --trace 0
 
@@ -14,13 +14,16 @@ included), alternating which side goes first from pair to pair so drift
 on a shared machine hits both sides alike.
 Prints, per end-to-end metric, the median of each side, the delta of the
 medians, the quartile spread of A, and in how many pairs B was better;
-then correctness (every run's `correct` and `failed`). The last stdout
-line is the same summary as one JSON object. Each side builds its own
-engine on its first run; the worktree is removed at the end.
+then correctness (every run's `correct` and `failed`) and the lines of
+Scala under each side's src/main, so a simplicity change's line count
+comes from the same command as its timing. The last stdout line is the
+same summary as one JSON object. Each side builds its own engine on its
+first run; the exported copy is removed at the end.
 """
 import argparse
 import json
 import os
+import shutil
 import statistics
 import subprocess
 import sys
@@ -50,6 +53,17 @@ def run_once(checkout, workload, seed, seconds):
         return json.loads(lines[-1]) if p.returncode == 0 and lines else None
     except json.JSONDecodeError:
         return None
+
+
+def scala_lines(checkout):
+    """Lines of the *.scala files under src/main, as `wc -l` counts them."""
+    n = 0
+    for d, _, files in os.walk(os.path.join(checkout, "src", "main")):
+        for f in files:
+            if f.endswith(".scala"):
+                with open(os.path.join(d, f), "rb") as fh:
+                    n += fh.read().count(b"\n")
+    return n
 
 
 def quartiles(xs):
@@ -84,7 +98,7 @@ def main():
     ap.add_argument("--workload", required=True)
     ap.add_argument("--pairs", type=int, default=10)
     ap.add_argument("--first-seed", type=int, default=1)
-    ap.add_argument("--dir", default="/tmp", help="parent dir of the worktree")
+    ap.add_argument("--dir", default="/tmp", help="parent dir of REV's exported copy")
     a = ap.parse_args()
 
     with open(os.path.join(ROOT, "BENCHMARK.json")) as f:
@@ -93,8 +107,12 @@ def main():
     seconds = bench["run_seconds"]
     sha = git("rev-parse", "--verify", a.rev + "^{commit}")
     wt = tempfile.mkdtemp(prefix=f"ab-{sha[:8]}-", dir=a.dir)
-    git("worktree", "add", "--detach", wt, sha)
+    archive = subprocess.Popen(["git", "archive", sha], cwd=ROOT, stdout=subprocess.PIPE)
+    subprocess.run(["tar", "-x", "-C", wt], stdin=archive.stdout, check=True)
+    if archive.wait() != 0:
+        raise SystemExit(f"git archive {sha} failed")
     print(f"A = {a.rev} ({sha[:8]}) in {wt}; B = {ROOT}", file=sys.stderr)
+    lines = {"a": scala_lines(wt), "b": scala_lines(ROOT)}
     runs_a, runs_b = [], []
     try:
         for i in range(a.pairs):
@@ -113,8 +131,7 @@ def main():
             runs_a.append(got["A"])
             runs_b.append(got["B"])
     finally:
-        subprocess.run(["git", "worktree", "remove", "--force", wt], cwd=ROOT,
-                       capture_output=True)
+        shutil.rmtree(wt, ignore_errors=True)
 
     table = summarize(metrics, runs_a, runs_b)
     print(f"{'metric':<10} {'A median':>10} {'B median':>10} {'delta':>9} "
@@ -132,9 +149,12 @@ def main():
         c = correct[side]
         print(f"{side}: {c['correct']}/{c['runs']} runs correct, "
               f"{c['failed_ops']} failed ops")
+    print(f"src/main Scala lines: A {lines['a']}, B {lines['b']} "
+          f"({lines['b'] - lines['a']:+d})")
     print(json.dumps({"a": sha, "workload": a.workload, "seeds":
                       [a.first_seed, a.first_seed + a.pairs - 1],
-                      "metrics": table, "correctness": correct}))
+                      "metrics": table, "correctness": correct,
+                      "scala_lines": lines}))
     return 0 if all(c["correct"] == c["runs"] for c in correct.values()) else 1
 
 
