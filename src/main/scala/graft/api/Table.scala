@@ -70,7 +70,6 @@ class Table(engine: GraftEngine, val name: String, val mode: String = "r",
   val defaultCreatedCol = "created_at"
   val defaultMonotonicCol = "monotonic_id"
 
-  private def createdCol: Option[String] = manifest.meta.addCreated
   private def monotonicCol: Option[String] = manifest.meta.addMonotonicId
 
   // --- introspection (node.py:232-267) ---
@@ -743,16 +742,9 @@ class Table(engine: GraftEngine, val name: String, val mode: String = "r",
       new Stream(this, ob, engine.state, startingValue))
   }
 
-  /** A stream's order column: `orderBy` when given, else the
-    * strictly-monotonic id role, which wins over the created role
-    * (node.py:286-294); throws when the table declares neither.
-    */
-  private[graft] def streamOrder(orderBy: String = null): String = {
-    val meta = manifest.meta
-    Option(orderBy).orElse(meta.addMonotonicId).orElse(meta.addCreated)
-      .getOrElse(throw new IllegalArgumentException(
-        s"stream over '$name' needs order_by or a monotonic/created schema role (node.py:196-200)"))
-  }
+  /** A stream's order column ([[graft.catalog.TableMeta.streamOrder]]). */
+  private[graft] def streamOrder(orderBy: String = null): String =
+    manifest.meta.streamOrder(name, Option(orderBy))
 
   // --- write-path helpers ---
 

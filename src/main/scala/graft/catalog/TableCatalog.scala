@@ -238,7 +238,17 @@ case class TableMeta(
     // None = keep forever (manual gc only). Like any vacuum, a sweep can
     // race an in-flight lazy read of an old version — set retention above
     // the longest expected job, not to 0.
-    retentionMillis: Option[Long] = None)
+    retentionMillis: Option[Long] = None) {
+
+  /** A stream's order column over table `name`: `orderBy` when given,
+    * else the strictly-monotonic id role, which wins over the created role
+    * (node.py:286-294); throws when the table declares neither.
+    */
+  def streamOrder(name: String, orderBy: Option[String]): String =
+    orderBy.orElse(addMonotonicId).orElse(addCreated).getOrElse(
+      throw new IllegalArgumentException(s"stream over '$name' needs orderBy or a " +
+        "monotonic/created schema role (node.py:196-200)"))
+}
 
 /** Per-table manifest: active-version pointer + version/event history
   * (reference node.py:87-89 — one-or-zero active versions per table).

@@ -4,20 +4,27 @@ import java.nio.file.{Files, Path}
 import java.nio.charset.StandardCharsets
 
 import scala.collection.mutable
+import scala.util.{Failure, Success, Try}
 
 import org.apache.spark.sql.SparkSession
 
-import graft.api.GraftEngine
+import graft.api.{GraftEngine, NewRunRequest}
 
 /** Event-driven executor for a parsed graph (SURVEY.md §3, reference
   * trigger flow commands/trigger.py:18-56 + the implied server loop).
   *
   * Execution model: running a node flushes its writes, which appends
-  * create/update events to the written tables' manifests; any node whose
-  * input stores gained events since its last run becomes eligible, and the
-  * loop continues until quiescent (bounded by `maxSteps` to break
-  * write-your-own-input cycles — SURVEY.md §7.4.4). `should_continue` /
-  * `request_new_run` re-enqueue long nodes (node.py:465-500).
+  * create/update events to the written tables' manifests. One loop
+  * ([[run]]) schedules every node run of `trigger`, `runDue` and `runAll`:
+  * it first runs their FORCED nodes (the triggered node, the cron-due
+  * nodes, or the sources), then sweeps every node whose input stores
+  * gained events since its last run or whose `request_new_run` is due
+  * (node.py:465-500), until quiescent or `maxSteps` swept runs (the bound
+  * that breaks write-your-own-input cycles — SURVEY.md §7.4.4). Batches
+  * are pairwise store-disjoint and run their bodies concurrently; at each
+  * batch boundary the loop reads the wall clock and each store's event
+  * counter once ([[Mark]]), and every eligibility test and seen-position
+  * update reads that boundary.
   *
   * Node bodies: SQL nodes are `.sql` files rendered with `{{ port }}` /
   * `{{ params.x }}` templating then materialized to their single output
@@ -37,14 +44,14 @@ class GraphRunner(
   /** Per-node count of input events already processed. */
   private val seenEvents = mutable.Map.empty[String, Long].withDefaultValue(0L)
   /** Nodes that asked for a follow-up execution (requestNewRun), with the
-    * request's options and its wall-clock arrival — honored by cascade():
-    * `waitAtleastSeconds` defers eligibility until the delay elapses (the
-    * rerun then happens on the next trigger/runDue/runAll sweep, matching
-    * the host-scheduler-tick model), and `triggerDownstream = false`
-    * absorbs the rerun's output events so consumers don't fire on it.
+    * request's options and the clock of the batch boundary that followed
+    * the requesting run. Every trigger/runDue/runAll sweep honors them,
+    * matching the host-scheduler-tick model: `waitAtleastSeconds` defers
+    * eligibility until the delay has elapsed, and `triggerDownstream =
+    * false` absorbs the rerun's output events so consumers don't fire on
+    * it. A forced run leaves a pending request in place.
     */
-  private val pendingRerun =
-    mutable.Map.empty[String, (graft.api.NewRunRequest, Long)]
+  private val pendingRerun = mutable.Map.empty[String, (NewRunRequest, Long)]
 
   def register(nodeFile: String, fn: NodeFn): GraphRunner = {
     fns(nodeFile) = fn; this
@@ -69,35 +76,43 @@ class GraphRunner(
   private val probeCatalog =
     new graft.catalog.TableCatalog(java.nio.file.Paths.get(catalogRoot))
 
-  /** Sum of events on this node's input stores (its trigger signal).
-    * Counts the manifest's all-time `eventCounter`, not the (trimmed)
-    * event list.
+  /** A batch boundary: the wall clock, read once, and each store's
+    * all-time manifest `eventCounter` (not the trimmed event list), read
+    * at most once — on its first use.
     */
-  private def inputEventCount(n: NodeConfig): Long =
-    n.inputStores.toSeq
-      .map(s => probeCatalog.refresh(s).map(_.eventCounter).getOrElse(0L)).sum
+  private final class Mark {
+    val now: Long = System.currentTimeMillis()
+    private val counts = mutable.Map.empty[String, Long]
+    def events(store: String): Long = counts.getOrElseUpdate(store,
+      probeCatalog.refresh(store).map(_.eventCounter).getOrElse(0L))
+    /** Sum of events on this node's input stores (its trigger signal). */
+    def inputEvents(n: NodeConfig): Long = n.inputStores.toSeq.map(events).sum
+  }
 
   // Baseline each node at the catalog's CURRENT event counts: a fresh
   // runner over an existing catalog must treat history as already
   // processed — "trigger A" means "run A and its NEW effects", not
   // "replay every consumer of every table ever written" (which would
   // duplicate rows in append-output nodes on every process restart).
-  graph.functions.filterNot(_.isWebhook)
-    .foreach(n => seenEvents(n.id) = inputEventCount(n))
+  locally {
+    val start = new Mark
+    graph.functions.filterNot(_.isWebhook)
+      .foreach(n => seenEvents(n.id) = start.inputEvents(n))
+  }
 
-  /** Run one node now (`patterns trigger`, B13). Returns the engine so
-    * callers can inspect state.
+  /** Run one node now (`patterns trigger`, B13), with no sweep after it.
+    * Returns the engine so callers can inspect state.
     */
   def runNode(id: String): GraftEngine = {
     val n = node(id)
     val eng = execBody(n)
-    finishRun(n, eng)
+    finish(n, eng, new Mark)
     eng
   }
 
   /** The node body alone — no seenEvents/pendingRerun bookkeeping, so a
-    * parallel cascade batch can run bodies concurrently and keep ALL
-    * shared-map mutation on the coordinator thread ([[finishRun]]).
+    * batch can run bodies concurrently and keep ALL shared-map mutation
+    * on the coordinator thread ([[finish]]).
     */
   private def execBody(n: NodeConfig): GraftEngine = {
     val eng = engineFor(n)
@@ -143,15 +158,13 @@ class GraphRunner(
     eng
   }
 
-  /** Coordinator-side bookkeeping after a node body completed: absorb the
-    * node's own input-event position and capture any follow-up-run
-    * request. Must never run concurrently with another mutation of the
-    * shared maps (cascade calls it sequentially after each batch).
+  /** Coordinator-side bookkeeping after a node body completed, against
+    * the boundary `post` that followed its batch: re-base the node's seen
+    * input events and capture any follow-up-run request.
     */
-  private def finishRun(n: NodeConfig, eng: GraftEngine): Unit = {
-    seenEvents(n.id) = inputEventCount(n)
-    eng.state.pendingNewRun.foreach(r =>
-      pendingRerun(n.id) = (r, System.currentTimeMillis()))
+  private def finish(n: NodeConfig, eng: GraftEngine, post: Mark): Unit = {
+    seenEvents(n.id) = post.inputEvents(n)
+    eng.state.pendingNewRun.foreach(r => pendingRerun(n.id) = (r, post.now))
   }
 
   /** Node-scoped temp-view name for a SQL node's input port. */
@@ -174,17 +187,16 @@ class GraphRunner(
       scala.util.matching.Regex.quoteReplacement(value)
     })
 
-  /** Trigger a node, then cascade: run every node whose inputs gained
+  /** Trigger a node, then sweep: run every node whose inputs gained
     * events, until quiescent or `maxSteps`.
     */
-  def trigger(id: String, maxSteps: Int = 100): Unit = {
-    runNode(id)
-    cascade(maxSteps)
-  }
+  def trigger(id: String, maxSteps: Int = 100): Unit = run(Seq(node(id)), maxSteps)
 
   /** Trigger every node whose cron `trigger:` expression fires at `now`,
-    * cascading downstream (B9 — the engine-side tick a host scheduler
-    * calls once per minute; the reference platform runs this server-side).
+    * then sweep (B9 — the engine-side tick a host scheduler calls once
+    * per minute; the reference platform runs this server-side). The sweep
+    * runs on every tick, so a due deferred rerun fires even when no cron
+    * expression does.
     */
   def runDue(now: java.time.LocalDateTime, maxSteps: Int = 100): Seq[String] = {
     val due = graph.functions.filterNot(_.isWebhook)
@@ -198,8 +210,7 @@ class GraphRunner(
           false
         }
       })
-    runConflictFree(due)
-    if (due.nonEmpty) cascade(maxSteps)
+    run(due, maxSteps)
     due.map(_.id)
   }
 
@@ -207,13 +218,10 @@ class GraphRunner(
     * (store-disjoint sources concurrently), consumers run as their inputs
     * change.
     */
-  def runAll(maxSteps: Int = 100): Unit = {
-    runConflictFree(
-      graph.functions.filterNot(_.isWebhook).filter(_.inputs.isEmpty))
-    cascade(maxSteps)
-  }
+  def runAll(maxSteps: Int = 100): Unit =
+    run(graph.functions.filterNot(_.isWebhook).filter(_.inputs.isEmpty), maxSteps)
 
-  /** Max node bodies run concurrently per cascade sweep. Only PAIRWISE
+  /** Max node bodies run concurrently per batch. Only PAIRWISE
     * STORE-DISJOINT nodes share a batch (see [[conflicts]]), so the value
     * trades latency for executor pressure, never correctness. The
     * reference platform runs independent nodes concurrently (per-node
@@ -231,14 +239,22 @@ class GraphRunner(
     a.outputStores.intersect(b.inputStores ++ b.outputStores).nonEmpty ||
       b.outputStores.intersect(a.inputStores ++ a.outputStores).nonEmpty
 
+  /** Greedy batch: `nodes` in order, each joining when it conflicts with
+    * no earlier member, up to `cap` and [[cascadeParallelism]] members.
+    */
+  private def pack(nodes: Seq[NodeConfig], cap: Int): Seq[NodeConfig] =
+    nodes.foldLeft(Vector.empty[NodeConfig]) { (b, n) =>
+      if (b.size < math.min(cap, cascadeParallelism) && b.forall(!conflicts(_, n))) b :+ n
+      else b
+    }
+
   /** Run node BODIES, concurrently when the batch has >1 member. The
     * caller guarantees the batch is pairwise store-disjoint and does ALL
     * shared-map bookkeeping afterwards on its own thread.
     */
-  private def execBatch(
-      batch: Seq[NodeConfig]): Seq[(NodeConfig, scala.util.Try[GraftEngine])] =
+  private def execBatch(batch: Seq[NodeConfig]): Seq[(NodeConfig, Try[GraftEngine])] =
     if (batch.size <= 1)
-      batch.map(n => n -> scala.util.Try(execBody(n)))
+      batch.map(n => n -> Try(execBody(n)))
     else {
       val pool = java.util.concurrent.Executors.newFixedThreadPool(batch.size)
       implicit val ec: scala.concurrent.ExecutionContext =
@@ -246,120 +262,86 @@ class GraphRunner(
       try {
         val futs = batch.map(n => n -> scala.concurrent.Future(execBody(n)))
         futs.map { case (n, f) =>
-          n -> scala.util.Try(scala.concurrent.Await.result(
+          n -> Try(scala.concurrent.Await.result(
             f, scala.concurrent.duration.Duration.Inf))
         }
       } finally pool.shutdown()
     }
 
-  /** Run a set of independently-triggered nodes (cron-due sweep) with the
-    * cascade's conflict rule: store-disjoint subsets execute concurrently,
-    * conflicting nodes wait for the earlier batch. Bookkeeping for every
-    * completed body happens before the first failure is rethrown (same
-    * contract as cascade — no duplicate re-runs of succeeded siblings).
+  /** A requested rerun is eligible once its wait_atleast delay has
+    * elapsed at `now`; an undelayed request is due at once.
     */
-  private def runConflictFree(nodes: Seq[NodeConfig]): Unit = {
-    var rest = nodes
-    while (rest.nonEmpty) {
-      val batch = rest.foldLeft(Vector.empty[NodeConfig]) { (b, n) =>
-        if (b.size < cascadeParallelism && b.forall(!conflicts(_, n))) b :+ n
-        else b
-      }
-      rest = rest.filterNot(n => batch.exists(_.id == n.id))
+  private def rerunDue(id: String, now: Long): Boolean = pendingRerun.get(id).exists {
+    case (r, at) => r.waitAtleastSeconds.forall(w => now >= at + w * 1000L)
+  }
+
+  /** The scheduling loop. The `forced` nodes run first, in batches; their
+    * runs do not count toward `maxSteps` and leave pending rerun requests
+    * in place. Then each sweep batches the nodes whose inputs gained
+    * events or whose rerun request is due, capped so total swept runs
+    * never exceed `maxSteps` (a write-your-own-input cycle cannot
+    * overshoot by the size of the eligible set). A node that conflicts
+    * with an earlier batch member defers to the next batch — its
+    * unconsumed events keep it eligible.
+    *
+    * Bookkeeping for EVERY completed body of a batch happens before its
+    * first failure is rethrown: a succeeded sibling's events left
+    * unconsumed would re-run it on the next sweep and, for an append
+    * node, duplicate rows.
+    */
+  private def run(forced: Seq[NodeConfig], maxSteps: Int): Unit = {
+    var queue = forced
+    var steps = 0
+    var pre = new Mark
+    var more = true
+    while (more) {
+      val swept = queue.isEmpty
+      val batch =
+        if (!swept) pack(queue, Int.MaxValue)
+        else pack(graph.functions.filterNot(_.isWebhook).filter(n =>
+          (n.inputs.nonEmpty && pre.inputEvents(n) > seenEvents(n.id)) ||
+            rerunDue(n.id, pre.now)), maxSteps - steps)
+      queue = queue.filterNot(batch.contains)
+      // a swept run consumes its node's rerun request only when it is
+      // DUE: an event-driven run must not swallow a deferred request, and
+      // the request's triggerDownstream flag applies only to the run that
+      // satisfies it
+      val consumed = batch.filter(n => swept && rerunDue(n.id, pre.now))
+        .flatMap(n => pendingRerun.remove(n.id).map(n.id -> _)).toMap
+      val absorbing = batch.filter(n => consumed.get(n.id).exists(!_._1.triggerDownstream))
+      // an absorbing run's pre-counts must be read before the bodies write
+      absorbing.flatMap(_.outputStores).foreach(pre.events)
       val outcomes = execBatch(batch)
+      val post = new Mark
       outcomes.foreach {
-        case (n, scala.util.Success(eng)) => finishRun(n, eng)
-        case _ => ()
+        case (n, Success(eng)) =>
+          finish(n, eng, post)
+          if (absorbing.contains(n)) absorb(n, pre, post)
+          if (swept) steps += 1
+        case (n, Failure(_)) =>
+          // a FAILED body did not satisfy its rerun request — restore it
+          // (original timestamp, so waitAtleast stays measured from the
+          // request): the caller that catches the rethrow and runs again
+          // gets the requested run, at-least-once
+          consumed.get(n.id).foreach(pendingRerun(n.id) = _)
       }
-      outcomes.collectFirst { case (_, scala.util.Failure(e)) => e }
-        .foreach(throw _)
+      outcomes.collectFirst { case (_, Failure(e)) => e }.foreach(throw _)
+      pre = post
+      more = batch.nonEmpty
     }
   }
 
-  private def cascade(maxSteps: Int): Unit = {
-    var steps = 0
-    var progressed = true
-    while (progressed && steps < maxSteps) {
-      progressed = false
-      // a requested rerun is eligible only once its wait_atleast delay has
-      // elapsed; undelayed requests run in this sweep
-      def rerunDue(id: String): Boolean = pendingRerun.get(id).exists {
-        case (r, at) => r.waitAtleastSeconds.forall(w =>
-          System.currentTimeMillis() >= at + w * 1000L)
-      }
-      val eligible = graph.functions.filterNot(_.isWebhook).filter { n =>
-        (n.inputs.nonEmpty && inputEventCount(n) > seenEvents(n.id)) ||
-          rerunDue(n.id)
-      }
-      // greedy conflict-free batch, bounded PER NODE by maxSteps (total
-      // node runs capped exactly, so a write-your-own-input cycle cannot
-      // overshoot by the size of the eligible set). Nodes that conflict
-      // with an earlier batch member defer to the next sweep — their
-      // unconsumed events keep them eligible.
-      val batch = mutable.ArrayBuffer.empty[NodeConfig]
-      eligible.foreach { n =>
-        if (steps + batch.size < maxSteps &&
-            batch.size < cascadeParallelism &&
-            batch.forall(!conflicts(_, n))) batch += n
-      }
-      // Consume a pending rerun only when it is actually DUE: an
-      // event-driven run must not swallow a deferred (wait_atleast)
-      // request — the request stays pending for a later sweep, and its
-      // triggerDownstream flag applies only to the run that satisfies it.
-      val consumed = batch.map { n =>
-        n -> (if (rerunDue(n.id)) pendingRerun.remove(n.id) else None)
-      }
-      // Snapshot each batch member's output-store event counters BEFORE
-      // running, so triggerDownstream=false absorption credits consumers
-      // with exactly the events THIS run emitted — never pre-existing
-      // unprocessed events from another producer on a shared store.
-      // Only paid when an absorbing rerun is actually in the batch.
-      val preCounts: Map[String, Long] =
-        if (!consumed.exists(_._2.exists(!_._1.triggerDownstream))) Map.empty
-        else batch.flatMap(_.outputStores).distinct.map(s =>
-          s -> probeCatalog.refresh(s).map(_.eventCounter).getOrElse(0L)).toMap
-      // Bodies run concurrently when the batch has >1 member; ALL
-      // shared-map bookkeeping stays on this thread, after the bodies.
-      val outcomes = execBatch(batch.toSeq)
-      // bookkeeping for EVERY completed body first (a mid-batch failure
-      // must not leave a succeeded sibling's events unconsumed — it would
-      // re-run on the next sweep and, for an append node, duplicate rows),
-      // then rethrow the first failure.
-      outcomes.foreach {
-        case (n, scala.util.Success(eng)) =>
-          finishRun(n, eng)
-          // trigger_downstream = false (node.py:482-500): absorb ONLY the
-          // events this rerun emitted on n's outputs (post-minus-pre
-          // delta per store), added to each consumer's seen position.
-          // Overwriting with the full current count would also absorb
-          // unrelated events another producer emitted earlier in the
-          // sweep, silently losing a legitimate trigger. The node itself
-          // is excluded: finishRun already re-based it on the full count.
-          consumed.collectFirst { case (`n`, Some((r, _))) if !r.triggerDownstream => () }
-            .foreach { _ =>
-              val delta: Map[String, Long] = n.outputStores.map(s =>
-                s -> (probeCatalog.refresh(s).map(_.eventCounter).getOrElse(0L)
-                  - preCounts.getOrElse(s, 0L))).toMap
-              graph.functions.filterNot(_.id == n.id)
-                .filter(m => m.inputStores.intersect(n.outputStores).nonEmpty)
-                .foreach { m =>
-                  val add = m.inputStores.toSeq.map(s => delta.getOrElse(s, 0L)).sum
-                  seenEvents(m.id) = seenEvents(m.id) + add
-                }
-            }
-          progressed = true
-          steps += 1
-        case (n, scala.util.Failure(_)) =>
-          // a FAILED body did not satisfy its rerun request — restore it
-          // (original timestamp, so waitAtleast stays measured from the
-          // request) instead of silently dropping the trigger: the caller
-          // that catches the rethrow and re-enters the cascade gets the
-          // requested run, at-least-once
-          consumed.collectFirst { case (`n`, Some(r)) => r }
-            .foreach(r => pendingRerun(n.id) = r)
-      }
-      outcomes.collectFirst { case (_, scala.util.Failure(e)) => e }
-        .foreach(throw _)
+  /** trigger_downstream = false (node.py:482-500): add to each consumer's
+    * seen position exactly the events `n`'s run emitted on the stores it
+    * reads — the post- minus pre-count, attributable to `n` alone because
+    * batch members are store-disjoint. Overwriting with the full count
+    * would also absorb unrelated events another producer emitted earlier
+    * in the sweep, silently losing a legitimate trigger. `n` itself is
+    * excluded: [[finish]] already re-based it.
+    */
+  private def absorb(n: NodeConfig, pre: Mark, post: Mark): Unit =
+    graph.functions.filterNot(_.id == n.id).foreach { m =>
+      seenEvents(m.id) += m.inputStores.intersect(n.outputStores).toSeq
+        .map(s => post.events(s) - pre.events(s)).sum
     }
-  }
 }

@@ -48,35 +48,24 @@ class GraftTableSourceProvider extends StreamSourceProvider with DataSourceRegis
       throw new IllegalArgumentException("graft-table source requires option 'table'"))
     val cat = new TableCatalog(java.nio.file.Paths.get(root))
     // read path: a typo'd table name must fail, not mint a ghost manifest
-    val meta = cat.load(table).getOrElse(throw new IllegalArgumentException(
-      s"graft-table source: no table '$table' in catalog '$root'")).meta
-    val orderBy = params.get("orderBy")
-      .orElse(meta.addMonotonicId).orElse(meta.addCreated)
-      .getOrElse(throw new IllegalArgumentException(
-        s"stream over '$table' needs option 'orderBy' or a monotonic/" +
-          "created schema role (node.py:196-200)"))
+    val orderBy = cat.load(table).getOrElse(throw new IllegalArgumentException(
+      s"graft-table source: no table '$table' in catalog '$root'"))
+      .meta.streamOrder(table, params.get("orderBy"))
     (cat, table, orderBy)
   }
 
-  private def activeSchema(sqlContext: SQLContext, cat: TableCatalog,
-      table: String): StructType = {
-    val m = cat.load(table).getOrElse(throw new IllegalArgumentException(
-      s"graft-table source: no table '$table' in the catalog"))
-    val vid = m.activeVersion.getOrElse(throw new IllegalArgumentException(
-      s"graft-table source: '$table' has no active version to infer a " +
-        "schema from; pass .schema(...) explicitly"))
-    // the version's schema stamp — and a FILELESS active version (reset,
-    // crash-before-write) gets the same clean error as no-active-version
-    cat.versionInfo(table, vid).flatMap(_.readSchema)
-      .getOrElse(throw new IllegalArgumentException(
-        s"graft-table source: '$table' has no data yet to infer a " +
-          "schema from; pass .schema(...) explicitly"))
-  }
+  /** The active version's schema stamp — a FILELESS active version
+    * (reset, crash-before-write) gets the same clean error as none.
+    */
+  private def activeSchema(cat: TableCatalog, table: String): StructType =
+    cat.activeInfo(table).flatMap(_.readSchema).getOrElse(throw new IllegalArgumentException(
+      s"graft-table source: '$table' has no data yet to infer a schema " +
+        "from; pass .schema(...) explicitly"))
 
   override def sourceSchema(sqlContext: SQLContext, schema: Option[StructType],
       providerName: String, parameters: Map[String, String]): (String, StructType) = {
     val (cat, table, _) = resolve(parameters)
-    (shortName(), schema.getOrElse(activeSchema(sqlContext, cat, table)))
+    (shortName(), schema.getOrElse(activeSchema(cat, table)))
   }
 
   override def createSource(sqlContext: SQLContext, metadataPath: String,
@@ -84,7 +73,7 @@ class GraftTableSourceProvider extends StreamSourceProvider with DataSourceRegis
       parameters: Map[String, String]): Source = {
     val (cat, table, orderBy) = resolve(parameters)
     new GraftTableSource(sqlContext, cat, table, orderBy,
-      schema.getOrElse(activeSchema(sqlContext, cat, table)), metadataPath)
+      schema.getOrElse(activeSchema(cat, table)), metadataPath)
   }
 }
 
@@ -144,8 +133,8 @@ class GraftTableSource(sqlContext: SQLContext, cat: TableCatalog,
     * `Path`/`FileSystem`, never `java.nio.file.Paths` (which treats the
     * scheme-qualified form as a relative path and writes checkpoint state
     * under the driver's CWD — the round-5 bug). Writes go through a
-    * temp-file + rename so a crash mid-write leaves either the old clamp
-    * or none, never a truncated value.
+    * temp-file + rename so a crash mid-write leaves the old clamp or the
+    * new one, never a truncated value in the final file.
     */
   private val hwPath = new org.apache.hadoop.fs.Path(metadataPath, "graft-high-water")
   // one filesystem per source, on the engine's write options: a local
@@ -155,26 +144,34 @@ class GraftTableSource(sqlContext: SQLContext, cat: TableCatalog,
   private val hwFs = hwPath.getFileSystem(
     spark.sessionState.newHadoopConfWithOptions(CatalogFileSystem.writeOptions))
 
+  private val hwTmp = new org.apache.hadoop.fs.Path(metadataPath, "graft-high-water.tmp")
+
+  private def readHighWater(p: org.apache.hadoop.fs.Path): Any = {
+    val in = hwFs.open(p)
+    val enc = try {
+      val out = new java.io.ByteArrayOutputStream()
+      org.apache.hadoop.io.IOUtils.copyBytes(in, out, 4096, false)
+      new String(out.toByteArray, java.nio.charset.StandardCharsets.UTF_8)
+    } finally in.close()
+    decode(enc)
+  }
+
+  // a crash between persistHighWater's delete and its rename leaves only
+  // the tmp, complete then: the delete runs after the tmp is closed (the
+  // rule TableCatalog.load and State follow). A crash during the very
+  // first write leaves a truncated tmp alone; that starts unclamped
   @volatile private var highWater: Option[Any] =
-    if (hwFs.exists(hwPath)) {
-      val in = hwFs.open(hwPath)
-      val enc = try {
-        val out = new java.io.ByteArrayOutputStream()
-        org.apache.hadoop.io.IOUtils.copyBytes(in, out, 4096, false)
-        new String(out.toByteArray, java.nio.charset.StandardCharsets.UTF_8)
-      } finally in.close()
-      Some(decode(enc))
-    } else None
+    if (hwFs.exists(hwPath)) Some(readHighWater(hwPath))
+    else if (hwFs.exists(hwTmp)) scala.util.Try(readHighWater(hwTmp)).toOption
+    else None
 
   private def persistHighWater(enc: String): Unit = {
-    val tmp = new org.apache.hadoop.fs.Path(
-      hwPath.getParent, hwPath.getName + ".tmp")
-    val out = hwFs.create(tmp, true)
+    val out = hwFs.create(hwTmp, true)
     try out.write(enc.getBytes(java.nio.charset.StandardCharsets.UTF_8))
     finally out.close()
     // HDFS rename won't overwrite; the previous clamp is superseded anyway
     if (hwFs.exists(hwPath)) hwFs.delete(hwPath, false)
-    hwFs.rename(tmp, hwPath)
+    hwFs.rename(hwTmp, hwPath)
   }
 
   /** An offset string decoded against the cursor column's type. Offsets

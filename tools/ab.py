@@ -3,22 +3,24 @@
 
     python3 tools/ab.py REV --workload app_trickle --pairs 10
 
-Exports REV's committed files (`git archive`) into a temp dir (under
---dir, default /tmp). For seeds first-seed .. first-seed+pairs-1 it runs
+Exports REV's committed files (`git archive`) and this checkout's working
+tree (tracked plus untracked, non-ignored files, as `git ls-files -co
+--exclude-standard` lists them; uncommitted changes included) into two temp
+dirs side by side (under --dir, default /tmp), so both sides build and run
+from a fresh copy alike. For seeds first-seed .. first-seed+pairs-1 it runs
 
     python3 perfbench/run.py --workload W --seed N --seconds S --trace 0
 
-(S is BENCHMARK.json's `run_seconds`) once in the worktree (A = REV) and
-once in this checkout (B = the working tree, uncommitted changes
-included), alternating which side goes first from pair to pair so drift
+(S is BENCHMARK.json's `run_seconds`) once in each export (A = REV, B = the
+working tree), alternating which side goes first from pair to pair so drift
 on a shared machine hits both sides alike.
 Prints, per end-to-end metric, the median of each side, the delta of the
 medians, the quartile spread of A, and in how many pairs B was better;
 then correctness (every run's `correct` and `failed`) and the lines of
-Scala under each side's src/main, so a simplicity change's line count
+Scala under each export's src/main, so a simplicity change's line count
 comes from the same command as its timing. The last stdout line is the
 same summary as one JSON object. Each side builds its own engine on its
-first run; the exported copy is removed at the end.
+first run; both exports are removed at the end.
 """
 import argparse
 import json
@@ -53,6 +55,28 @@ def run_once(checkout, workload, seed, seconds):
         return json.loads(lines[-1]) if p.returncode == 0 and lines else None
     except json.JSONDecodeError:
         return None
+
+
+def export_rev(sha, dest):
+    """REV's committed files, as `git archive` writes them."""
+    archive = subprocess.Popen(["git", "archive", sha], cwd=ROOT, stdout=subprocess.PIPE)
+    subprocess.run(["tar", "-x", "-C", dest], stdin=archive.stdout, check=True)
+    if archive.wait() != 0:
+        raise SystemExit(f"git archive {sha} failed")
+
+
+def export_worktree(dest):
+    """This checkout's tracked and untracked, non-ignored files as they are
+    on disk; a tracked file deleted from the working tree stays absent."""
+    listed = subprocess.run(["git", "ls-files", "-co", "--exclude-standard", "-z"],
+                            cwd=ROOT, check=True, capture_output=True).stdout
+    for rel in filter(None, listed.decode().split("\0")):
+        src = os.path.join(ROOT, rel)
+        if not os.path.lexists(src):
+            continue
+        dst = os.path.join(dest, rel)
+        os.makedirs(os.path.dirname(dst), exist_ok=True)
+        shutil.copy2(src, dst, follow_symlinks=False)
 
 
 def scala_lines(checkout):
@@ -98,7 +122,7 @@ def main():
     ap.add_argument("--workload", required=True)
     ap.add_argument("--pairs", type=int, default=10)
     ap.add_argument("--first-seed", type=int, default=1)
-    ap.add_argument("--dir", default="/tmp", help="parent dir of REV's exported copy")
+    ap.add_argument("--dir", default="/tmp", help="parent dir of the two exports")
     a = ap.parse_args()
 
     with open(os.path.join(ROOT, "BENCHMARK.json")) as f:
@@ -106,23 +130,23 @@ def main():
     metrics = [(m["name"], m["better"]) for m in bench["end_to_end"]]
     seconds = bench["run_seconds"]
     sha = git("rev-parse", "--verify", a.rev + "^{commit}")
-    wt = tempfile.mkdtemp(prefix=f"ab-{sha[:8]}-", dir=a.dir)
-    archive = subprocess.Popen(["git", "archive", sha], cwd=ROOT, stdout=subprocess.PIPE)
-    subprocess.run(["tar", "-x", "-C", wt], stdin=archive.stdout, check=True)
-    if archive.wait() != 0:
-        raise SystemExit(f"git archive {sha} failed")
-    print(f"A = {a.rev} ({sha[:8]}) in {wt}; B = {ROOT}", file=sys.stderr)
-    lines = {"a": scala_lines(wt), "b": scala_lines(ROOT)}
+    wt = {"A": tempfile.mkdtemp(prefix=f"ab-{sha[:8]}-", dir=a.dir),
+          "B": tempfile.mkdtemp(prefix="ab-worktree-", dir=a.dir)}
     runs_a, runs_b = [], []
     try:
+        export_rev(sha, wt["A"])
+        export_worktree(wt["B"])
+        print(f"A = {a.rev} ({sha[:8]}) in {wt['A']}; B = working tree of {ROOT} "
+              f"in {wt['B']}", file=sys.stderr)
+        lines = {"a": scala_lines(wt["A"]), "b": scala_lines(wt["B"])}
         for i in range(a.pairs):
             seed = a.first_seed + i
-            order = [("A", wt), ("B", ROOT)]
+            order = ["A", "B"]
             if i % 2:
                 order.reverse()
             got = {}
-            for side, checkout in order:
-                got[side] = run_once(checkout, a.workload, seed, seconds)
+            for side in order:
+                got[side] = run_once(wt[side], a.workload, seed, seconds)
                 r = got[side]
                 shown = (" ".join(f"{n}={r['metrics'][n]['value']:.3f}"
                                   for n, _ in metrics if n in r["metrics"])
@@ -131,7 +155,8 @@ def main():
             runs_a.append(got["A"])
             runs_b.append(got["B"])
     finally:
-        shutil.rmtree(wt, ignore_errors=True)
+        for d in wt.values():
+            shutil.rmtree(d, ignore_errors=True)
 
     table = summarize(metrics, runs_a, runs_b)
     print(f"{'metric':<10} {'A median':>10} {'B median':>10} {'delta':>9} "
